@@ -46,7 +46,14 @@ of WHY an 8-vs-32-core ratio at sf0.1 sits near 1 (a warm query that
 schedules a few dozen tasks is session/scheduler-bound, not CPU-bound).
 The sf1 heavy-family mode (``--sf1``) is where core-count ratios carry
 signal; BENCH_LOCAL_sf1*.json artifacts pair 32- and 8-core runs.
+``$SPARK_GRAFT_CPUS`` defaults to the cores this process may run on.
 The one-line JSON stays the LAST stdout line — nothing prints after it.
+
+Janino compiles
+---------------
+``compiles`` lists the generated classes compiled during each sweep, and
+each ``floors`` entry carries its per-iteration ``compiles``: a warm run
+that still compiles was not served from the JVM's generated-code cache.
 """
 
 from __future__ import annotations
@@ -102,7 +109,7 @@ SF1_QUERIES = [
 
 def main() -> None:
     global SF_DIR, N_RUNS
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     if SF1_MODE:
         SF_DIR = SF1_DIR
         N_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
@@ -117,7 +124,7 @@ def main() -> None:
                 check=True,
             )
     from music_recommendation_service_spark.plans import registry
-    from music_recommendation_service_spark.session import get_spark
+    from music_recommendation_service_spark.session import codegen_compiles, get_spark
 
     spark = get_spark("bench")
     reg = registry()
@@ -184,9 +191,11 @@ def main() -> None:
             return -1, agg  # tracker unavailable — never fail the bench
         return n, agg
 
+    sweep_compiles: list[int] = []
     for sweep in range(N_RUNS):
         last = sweep == N_RUNS - 1
         calibration.append(calibrate())
+        c0 = codegen_compiles(spark)
         for name, q in bench_queries.items():
             if last:
                 sc.setJobGroup(f"bench:{name}", name)
@@ -196,6 +205,7 @@ def main() -> None:
             if last:
                 tasks[name], spill[name] = _group_metrics(f"bench:{name}")
                 sc.setLocalProperty("spark.jobGroup.id", None)
+        sweep_compiles.append(codegen_compiles(spark) - c0)
         # a burst can START mid-sweep and be invisible to the pre-probe
         # (observed: one sweep's q27 at ~10x with a clean pre-probe);
         # the post-probe brackets each sweep from both sides.
@@ -285,15 +295,18 @@ def main() -> None:
         if name not in reg:
             continue
         series: list[float] = []
+        compiles: list[int] = []
         best = float("inf")
         stale = 0
         while len(series) < 8 and stale < 2:
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             reg[name].build(spark, SF_DIR).write.format("noop").mode(
                 "overwrite"
             ).save()
             dt = round(time.perf_counter() - t0, 3)
             series.append(dt)
+            compiles.append(codegen_compiles(spark) - c0)
             if dt < best * 0.98:
                 best, stale = dt, 0
             else:
@@ -302,6 +315,7 @@ def main() -> None:
             "floor": round(best, 3),
             "iterations": len(series),
             "series": series,
+            "compiles": compiles,
         }
 
     # Partition-pruning delta (judge r10 order #8): on the q153 scratch
@@ -311,9 +325,11 @@ def main() -> None:
     partition_pruning: dict = {}
     if "q153_generated_partition_pruning" in reg:
         import datetime as dt
-        import hashlib
 
         from music_recommendation_service_spark.sources import snapshots as sn
+        from music_recommendation_service_spark.sources.writers import (
+            scratch_table_path,
+        )
 
         from scripts._guard import assert_not_testdata
 
@@ -325,13 +341,8 @@ def main() -> None:
             reg["q153_generated_partition_pruning"].build(
                 spark, SF_DIR
             ).write.format("noop").mode("overwrite").save()
-        scratch = assert_not_testdata(
-            os.environ.get("SPARK_GRAFT_SCRATCH", __import__("tempfile").gettempdir())
-        )
-        tag = hashlib.sha256(SF_DIR.encode()).hexdigest()[:12]
-        tpath = (
-            f"{scratch}/spark_graft_scratch/"
-            f"q153_genpt-{spark.sparkContext.applicationId}-{tag}"
+        tpath = assert_not_testdata(
+            scratch_table_path(spark, "q153_genpt", SF_DIR)
         )
         if sn.snapshot_versions(tpath):
             n_files = len(sn._manifest_files(tpath, sn._latest_manifest(tpath)))
@@ -395,6 +406,7 @@ def main() -> None:
                 # sf1 artifacts carry the memory baseline for the heavy
                 # family's biggest shuffles — q05 candidates, q27 index)
                 "spill": spill,
+                "compiles": sweep_compiles,
                 "queries_ext": queries_ext,
                 "floors": floors,
                 "partition_pruning": partition_pruning,

@@ -41,6 +41,7 @@ from music_recommendation_service_spark.sources.catalog import (
     EVENT_TYPES as _EVENT_TYPES,
     load_table as _t,
 )
+from music_recommendation_service_spark.sources.writers import scratch_table_path
 
 # Declared pivot domain: the event-type vocabulary is a catalog fact
 # (sources/catalog.py EVENT_TYPES, shared with q42), not something to
@@ -336,10 +337,6 @@ def q123_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("datasource", "snapshot", "scan"),
 )
 def q149_snapshot_format_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import tempfile
-
     from music_recommendation_service_spark.sources.datasource import (
         register_snapshot_datasource,
     )
@@ -348,10 +345,7 @@ def q149_snapshot_format_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_write,
     )
 
-    root = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
-    app = spark.sparkContext.applicationId
-    tag = hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    path = f"{root}/spark_graft_scratch/q149_snap-{app}-{tag}"
+    path = scratch_table_path(spark, "q149_snap", sf_dir)
     if not snapshot_versions(path):
         snapshot_write(
             _t(spark, sf_dir, "orders"),
@@ -398,9 +392,7 @@ def q149_snapshot_format_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("datasource", "snapshot", "convert"),
 )
 def q150_convert_in_place(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
-    import tempfile
 
     from music_recommendation_service_spark.sources.snapshots import (
         snapshot_convert,
@@ -408,10 +400,7 @@ def q150_convert_in_place(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_versions,
     )
 
-    root = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
-    app = spark.sparkContext.applicationId
-    tag = hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    path = f"{root}/spark_graft_scratch/q150_conv-{app}-{tag}"
+    path = scratch_table_path(spark, "q150_conv", sf_dir)
     if not snapshot_versions(path):
         snapshot_convert(
             spark, os.path.join(sf_dir, "lineitem.parquet"), path,
@@ -456,10 +445,6 @@ def q150_convert_in_place(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("snapshot", "cdf", "dml"),
 )
 def q151_cdf_delete_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import tempfile
-
     from music_recommendation_service_spark.sources.snapshots import (
         snapshot_changes,
         snapshot_delete_where,
@@ -467,10 +452,7 @@ def q151_cdf_delete_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_write,
     )
 
-    root = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
-    app = spark.sparkContext.applicationId
-    tag = hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    base = f"{root}/spark_graft_scratch/q151_cdf-{app}-{tag}"
+    base = scratch_table_path(spark, "q151_cdf", sf_dir)
     # Setup is a non-atomic two-step (write, then DV delete): gate on the
     # EXPECTED FINAL state, not "any version exists" — a crash between the
     # steps must rebuild into a fresh dir, not strand every later run on a
@@ -533,9 +515,7 @@ def q151_cdf_delete_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("snapshot", "convert", "partition"),
 )
 def q152_partitioned_convert_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
     import os
-    import tempfile
 
     from music_recommendation_service_spark.sources.snapshots import (
         snapshot_convert,
@@ -543,11 +523,8 @@ def q152_partitioned_convert_scan(spark: SparkSession, sf_dir: str) -> DataFrame
         snapshot_versions,
     )
 
-    root = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
-    app = spark.sparkContext.applicationId
-    tag = hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    hive = f"{root}/spark_graft_scratch/q152_hive-{app}-{tag}"
-    path = f"{root}/spark_graft_scratch/q152_part-{app}-{tag}"
+    hive = scratch_table_path(spark, "q152_hive", sf_dir)
+    path = scratch_table_path(spark, "q152_part", sf_dir)
     if not snapshot_versions(path):
         if not os.path.isdir(hive):
             # the "existing lake": a year-partitioned Hive directory
@@ -600,9 +577,6 @@ def q152_partitioned_convert_scan(spark: SparkSession, sf_dir: str) -> DataFrame
 )
 def q153_generated_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime as dt
-    import hashlib
-    import os
-    import tempfile
 
     from music_recommendation_service_spark.sources.snapshots import (
         snapshot_scan,
@@ -611,10 +585,7 @@ def q153_generated_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFr
         snapshot_write,
     )
 
-    root = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
-    app = spark.sparkContext.applicationId
-    tag = hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    path = f"{root}/spark_graft_scratch/q153_genpt-{app}-{tag}"
+    path = scratch_table_path(spark, "q153_genpt", sf_dir)
     if len(snapshot_versions(path)) < 2:
         if snapshot_versions(path):  # crashed between write and declare
             path = f"{path}-retry"
@@ -678,10 +649,6 @@ def q153_generated_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFr
     tags=("snapshot", "dml", "replace-where"),
 )
 def q154_replace_where_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-    import tempfile
-
     from music_recommendation_service_spark.sources.snapshots import (
         snapshot_read,
         snapshot_replace_where,
@@ -689,10 +656,7 @@ def q154_replace_where_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_write,
     )
 
-    root = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
-    app = spark.sparkContext.applicationId
-    tag = hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    path = f"{root}/spark_graft_scratch/q154_rw-{app}-{tag}"
+    path = scratch_table_path(spark, "q154_rw", sf_dir)
     if len(snapshot_versions(path)) < 2:
         if snapshot_versions(path):  # crashed between the two setup commits
             path = f"{path}-retry"
@@ -752,9 +716,6 @@ def q154_replace_where_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q155_sql_generated_partition_ddl(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime as dt
-    import hashlib
-    import os
-    import tempfile
 
     from music_recommendation_service_spark.engine import Engine
     from music_recommendation_service_spark.sources.snapshots import (
@@ -762,10 +723,7 @@ def q155_sql_generated_partition_ddl(spark: SparkSession, sf_dir: str) -> DataFr
         snapshot_versions,
     )
 
-    root = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
-    app = spark.sparkContext.applicationId
-    tag = hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    path = f"{root}/spark_graft_scratch/q155_sqlgen-{app}-{tag}"
+    path = scratch_table_path(spark, "q155_sqlgen", sf_dir)
     if not snapshot_versions(path):
         eng = Engine(sf_dir, spark=spark)
         eng.sql(
@@ -824,9 +782,6 @@ def q155_sql_generated_partition_ddl(spark: SparkSession, sf_dir: str) -> DataFr
 )
 def q156_hour_partition_autofill(spark: SparkSession, sf_dir: str) -> DataFrame:
     import datetime as dt
-    import hashlib
-    import os
-    import tempfile
 
     from music_recommendation_service_spark.sources.datasource import (
         register_snapshot_datasource,
@@ -838,10 +793,7 @@ def q156_hour_partition_autofill(spark: SparkSession, sf_dir: str) -> DataFrame:
         snapshot_write,
     )
 
-    root = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
-    app = spark.sparkContext.applicationId
-    tag = hashlib.sha256(sf_dir.encode()).hexdigest()[:12]
-    path = f"{root}/spark_graft_scratch/q156_hourpt-{app}-{tag}"
+    path = scratch_table_path(spark, "q156_hourpt", sf_dir)
     split = dt.datetime(2024, 1, 16)
     if len(snapshot_versions(path)) < 3:
         if snapshot_versions(path):  # crashed mid-setup: fresh path

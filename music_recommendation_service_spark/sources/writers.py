@@ -17,7 +17,16 @@ Scale notes
 
 from __future__ import annotations
 
+import atexit
+import threading as _threading
+
 from pyspark.sql import DataFrame
+
+_ASYNC_INFLIGHT: set[str] = set()
+_ASYNC_LOCK = _threading.Lock()
+# (scratch root, application id) of every scratch path this process handed
+# out; _scratch_cleanup removes their directories at exit.
+_OWNED: set[tuple[str, str]] = set()
 
 
 def _format() -> str:
@@ -76,13 +85,13 @@ def scratch_materialize(
     Pass ``reuse=False`` when the source is something mutable-in-place.
     The commit is an atomic directory rename, so a concurrent twin of the
     same key either wins the rename or reads the winner's copy.
+
+    Scratch lives as long as the process: every scratch directory name
+    carries the application id, and an exit hook drains the async writers,
+    then removes this application's directories.
     """
-    import os
-    import shutil
-    import tempfile
     import uuid
 
-    root = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
     try:
         spark = df.sparkSession
         if reuse:
@@ -103,7 +112,7 @@ def scratch_materialize(
             if cached is not None:
                 return cached
             return spark.read.parquet(path)
-        path = f"{root}/spark_graft_scratch/{name}-{uuid.uuid4().hex[:12]}"
+        path = _scratch_path(spark, name, uuid.uuid4().hex[:12])
         df.write.mode("overwrite").parquet(path)
         return spark.read.parquet(path)
     except Exception:  # pragma: no cover - scratch space unavailable
@@ -134,10 +143,7 @@ def _normalize_cte_ids(canon: str) -> str:
 def _scratch_key(df: DataFrame, name: str) -> tuple[str, str, str]:
     """(digest, schema_json, path) for the plan-fingerprint scratch cache."""
     import hashlib
-    import os
-    import tempfile
 
-    root = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
     analyzed = df._jdf.queryExecution().analyzed()
     canon = _normalize_cte_ids(analyzed.canonicalized().toString())
     # canonicalized().toString() normalizes expression IDs (so two
@@ -153,9 +159,54 @@ def _scratch_key(df: DataFrame, name: str) -> tuple[str, str, str]:
     digest = hashlib.sha256(
         f"{canon}\n{sem}\n{files}\n{schema_json}".encode()
     ).hexdigest()
-    app = df.sparkSession.sparkContext.applicationId
-    path = f"{root}/spark_graft_scratch/{name}-{app}-{digest[:20]}"
-    return digest, schema_json, path
+    return digest, schema_json, _scratch_path(df.sparkSession, name, digest[:20])
+
+
+def _scratch_path(spark, name: str, suffix: str) -> str:
+    """``<root>/spark_graft_scratch/<name>-<application id>-<suffix>``. The
+    application id in every name is what lets the exit hook remove exactly
+    this application's directories; the first call registers that hook."""
+    import os
+    import tempfile
+
+    base = os.environ.get("SPARK_GRAFT_SCRATCH", tempfile.gettempdir())
+    root = f"{base}/spark_graft_scratch"
+    app = spark.sparkContext.applicationId
+    with _ASYNC_LOCK:
+        if not _OWNED:
+            atexit.register(_scratch_cleanup)
+        _OWNED.add((root, app))
+    return f"{root}/{name}-{app}-{suffix}"
+
+
+def scratch_table_path(spark, name: str, sf_dir: str) -> str:
+    """Per-application scratch directory for a table a query builds once
+    from the data at ``sf_dir`` and then reads on every run (the q149-q156
+    lake fixtures). Removed at process exit like the scratch cache."""
+    import hashlib
+
+    return _scratch_path(spark, name, hashlib.sha256(sf_dir.encode()).hexdigest()[:12])
+
+
+def _scratch_cleanup(timeout_s: float = 60.0) -> None:
+    """Process-exit hook: let in-flight async writers finish (a rename that
+    landed after the sweep would leak its directory), then remove this
+    process's scratch directories. Other applications' are left alone."""
+    import glob
+    import os
+    import shutil
+
+    scratch_drain_async(timeout_s)
+    with _ASYNC_LOCK:
+        owned = set(_OWNED)
+    for root, app in owned:
+        for path in glob.glob(f"{glob.escape(root)}/*-{glob.escape(app)}-*"):
+            shutil.rmtree(path, ignore_errors=True)
+    for root in {root for root, _ in owned}:
+        try:
+            os.rmdir(root)  # only once empty: other processes may share it
+        except OSError:
+            pass
 
 
 def _scratch_read_if_valid(spark, path: str, digest: str, schema_json: str):
@@ -213,12 +264,6 @@ def scratch_lookup(df: DataFrame, name: str = "scratch"):
         return _scratch_read_if_valid(df.sparkSession, path, digest, schema_json)
     except Exception:  # pragma: no cover - scratch space unavailable
         return None
-
-
-import threading as _threading
-
-_ASYNC_INFLIGHT: set[str] = set()
-_ASYNC_LOCK = _threading.Lock()
 
 
 def _scratch_await_inflight(path: str, timeout_s: float = 600.0) -> bool:

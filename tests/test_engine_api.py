@@ -106,3 +106,55 @@ def test_sql_front_event_time_windows(spark, sf_dir):
         got = {tuple(r) for r in eng.sql(sql).collect()}
         want = {tuple(r) for r in eng.query(qname).collect()}
         assert got == want and len(want) > 0
+
+
+def test_engine_session_sizes_codegen_cache(spark):
+    """The builder's generated-code cache size reaches Spark's typed conf.
+    Read through the typed accessor, so a Spark upgrade that renames or
+    drops this internal, static conf fails here instead of silently
+    falling back to 100 entries (an unknown key is kept as a plain string
+    and changes nothing)."""
+    from music_recommendation_service_spark.session import CODEGEN_CACHE_ENTRIES
+
+    key = "spark.sql.codegen.cache.maxEntries"
+    assert spark.conf.get(key) == str(CODEGEN_CACHE_ENTRIES)
+    conf = spark._jsparkSession.sessionState().conf()
+    assert conf.codegenCacheMaxEntries() == CODEGEN_CACHE_ENTRIES
+
+
+def test_repeated_queries_match_and_stop_compiling(spark, sf_dir):
+    """Three back-to-back passes over the bench queries (q01, q05, q27 and
+    the rest of the headline set): every pass returns the same rows (the
+    warm, cache-served path equals the cold one), and the third pass
+    compiles no generated code. One pass needs ~170 classes, more than
+    Spark's default cache of 100 holds, so without the engine's cache size
+    every pass would recompile."""
+    import hashlib
+
+    from music_recommendation_service_spark.plans import registry
+    from music_recommendation_service_spark.session import codegen_compiles
+    from music_recommendation_service_spark.sources.writers import (
+        scratch_drain_async,
+    )
+    from tests.oracle import _canon
+
+    reg = registry()
+    names = [name for name, q in sorted(reg.items()) if q.bench]
+    assert {"q01_weekly_trending", "q05_hybrid_recommendations",
+            "q27_ngram_jaccard_neardup"} <= set(names)
+    passes, compiles = [], []
+    for _ in range(3):
+        c0 = codegen_compiles(spark)
+        got = {}
+        for name in names:
+            df = reg[name].build(spark, sf_dir)
+            rows = [tuple(r) for r in df.collect()]
+            _, canon = _canon(df.columns, rows)
+            got[name] = (len(rows), hashlib.sha256(repr(canon).encode()).hexdigest())
+        # q05's first run writes its scratch copy in the background; let it
+        # land so the later passes all read the same plan
+        scratch_drain_async()
+        compiles.append(codegen_compiles(spark) - c0)
+        passes.append(got)
+    assert passes[1] == passes[0] and passes[2] == passes[0]
+    assert compiles[2] == 0, compiles

@@ -229,6 +229,49 @@ def test_scratch_materialize_reuses_within_session(spark, sf_dir):
     assert sorted(c.inputFiles()) != sorted(a.inputFiles())
 
 
+def test_scratch_removed_at_process_exit(tmp_path):
+    """A session in its own process leaves no scratch behind when it exits:
+    keyed, unkeyed (reuse=False), async-written and per-query fixture
+    directories all go, while another application's directory stays."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = tmp_path / "spark_graft_scratch"
+    foreign = root / "probe-local-1-0123456789abcdef0123"
+    foreign.mkdir(parents=True)
+    script = """
+import os, sys
+from music_recommendation_service_spark.session import get_spark
+from music_recommendation_service_spark.sources.writers import (
+    scratch_materialize, scratch_materialize_async, scratch_table_path,
+)
+spark = get_spark("scratch_exit")
+df = spark.range(100).selectExpr("id", "id % 7 AS k")
+scratch_materialize(df, "keyed").count()
+scratch_materialize(df, "unkeyed", reuse=False).count()
+scratch_materialize_async(df.where("k = 1"), "async")
+df.write.parquet(scratch_table_path(spark, "fixture", "/no/such/sf"))
+print(sorted(os.listdir(sys.argv[1])))
+"""
+    env = dict(
+        os.environ,
+        SPARK_GRAFT_SCRATCH=str(tmp_path),
+        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_DRIVER_MEM="1g",
+    )
+    r = subprocess.run(
+        [sys.executable, "-c", script, str(root)],
+        cwd=Path(__file__).resolve().parents[1],
+        env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    for name in ("keyed-", "unkeyed-", "fixture-"):
+        assert name in r.stdout, r.stdout  # written while the session lived
+    assert os.listdir(root) == [foreign.name]
+
+
 def test_scratch_lookup_and_async_materialize(spark, sf_dir):
     """scratch_lookup returns None before any write, the async writer
     populates the cache in the background, and a later lookup serves the
