@@ -26,7 +26,6 @@ Scale notes
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window
@@ -48,26 +47,10 @@ class PairConfig:
       one, output identical. Costs a B× replication of one side, so only
       worth it when a key is truly pathological; AQE's skew-join split is
       the first line of defense and needs no replication.
-
-    Defaults come from the environment so an operator can be re-run against
-    a skewed table without code changes:
-      SPARK_GRAFT_PAIR_CAP   (int)  — cap_group_size
-      SPARK_GRAFT_PAIR_SALT  (int)  — salt_buckets
     """
 
     cap_group_size: int | None = None
     salt_buckets: int | None = None
-
-    @staticmethod
-    def from_env() -> "PairConfig":
-        def _i(name: str) -> int | None:
-            v = os.environ.get(name, "").strip()
-            return int(v) if v.isdigit() and int(v) > 0 else None
-
-        return PairConfig(
-            cap_group_size=_i("SPARK_GRAFT_PAIR_CAP"),
-            salt_buckets=_i("SPARK_GRAFT_PAIR_SALT"),
-        )
 
 
 def cooccurrence_pairs(
@@ -96,22 +79,15 @@ def cooccurrence_pairs(
     redundant exchange+aggregate executed twice (guide §2.4 — "a distinct
     on data that is already unique"). Semantics are identical by the
     caller's declaration; only set it for relations whose construction
-    guarantees uniqueness. HAZARD (round-12 advice): nothing validates the
-    declaration in production — a relation distinct on MORE columns than
-    the projected two would silently inflate pair counts. Set
-    SPARK_GRAFT_PAIR_VALIDATE=1 (tests/debug) to assert it with a count
-    comparison before trusting a new call site.
+    guarantees uniqueness. HAZARD: nothing validates the declaration at
+    run time — a relation distinct on MORE columns than the projected two
+    would silently inflate pair counts. Each call site's input is checked
+    by ``tests/test_properties.py::test_pre_distinct_call_sites_are_distinct``;
+    add a new call site there.
     """
     cfg = config or PairConfig()
     cap = cap_group_size if cap_group_size is not None else cfg.cap_group_size
     base = df.select(group_col, item_col)
-    if pre_distinct and os.environ.get("SPARK_GRAFT_PAIR_VALIDATE") == "1":
-        n, nd = base.count(), base.distinct().count()
-        if n != nd:
-            raise AssertionError(
-                f"pre_distinct declared but ({group_col}, {item_col}) has "
-                f"{n} rows vs {nd} distinct — caller's uniqueness claim is wrong"
-            )
     if not pre_distinct:
         base = base.distinct()
     if cap is not None:

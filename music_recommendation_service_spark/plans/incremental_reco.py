@@ -62,7 +62,7 @@ the maintained gold table must hash-match the from-scratch recompute.
 from __future__ import annotations
 
 import os
-import tempfile
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -93,6 +93,7 @@ from music_recommendation_service_spark.sources.snapshots import (
     snapshot_versions,
     snapshot_write,
 )
+from music_recommendation_service_spark.sources.writers import scratch_table_path
 
 
 # Above this share of affected users/items, the gold/cf_top stages abandon
@@ -825,7 +826,10 @@ def q142_incremental_hybrid_recommendations(
     batch recompute of the q05 scorer over the same churned likes."""
     key = (spark.sparkContext.applicationId, sf_dir)
     if key not in _Q142_LAKES:
-        root = tempfile.mkdtemp(prefix="reco_lake_")
+        # application scratch: removed at process exit; a rebuild after a
+        # failed one starts from an empty lake
+        root = scratch_table_path(spark, "reco_lake", sf_dir)
+        shutil.rmtree(root, ignore_errors=True)
         lake = RecoLake(root)
         for _step in churn_waves(spark, sf_dir, lake):
             reco_maintain(spark, sf_dir, lake)

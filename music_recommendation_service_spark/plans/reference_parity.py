@@ -22,7 +22,6 @@ from pyspark.sql import functions as F
 
 from music_recommendation_service_spark.functions import rnd
 from music_recommendation_service_spark.operators.pairs import (
-    PairConfig,
     cooccurrence_pairs,
     symmetrize_pairs,
 )
@@ -210,7 +209,6 @@ def _cf_pairs_m(spark: SparkSession, sf_dir: str) -> DataFrame:
             _likes_m(spark, sf_dir),
             "user_id",
             "item_id",
-            config=PairConfig.from_env(),
             pre_distinct=True,
         ),
         "cf_pairs",
@@ -238,7 +236,6 @@ def _sim_pairs_m(spark: SparkSession, sf_dir: str) -> DataFrame:
             _t(spark, sf_dir, "lineitem"),
             "l_orderkey",
             "l_partkey",
-            config=PairConfig.from_env(),
         ),
         "sim_pairs",
     )

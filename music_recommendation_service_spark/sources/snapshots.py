@@ -2574,6 +2574,42 @@ def _enforce_constraints(df: DataFrame, path: str, op: str) -> None:
         )
 
 
+def _commit_metadata(
+    path: str,
+    op: str,
+    key: str,
+    value: Callable[[dict], object],
+    validated_v: int | None = None,
+    doing: str = "",
+) -> int:
+    """Commit tail of a metadata-only operation: the new version is the
+    latest manifest (same files, zero bytes rewritten) with ``key`` set to
+    ``value(latest)`` and ``data_change=False``. ``value`` raises when the
+    change no longer applies to ``latest`` (a dropped name that is gone).
+
+    With ``validated_v``, the version a validation scan proved the change
+    against, any commit landing after it refuses with
+    ``ConcurrentSnapshotError`` (``doing`` names the change): data moved
+    under the scan and the proof is stale. Without it, only a vanished
+    table refuses (``FileNotFoundError``)."""
+
+    def build(latest: dict | None, _version: int) -> dict:
+        if validated_v is not None:
+            if latest is None or latest["version"] != validated_v:
+                raise ConcurrentSnapshotError(
+                    f"{path}: table advanced past validated version "
+                    f"{validated_v} while {doing}; retry"
+                )
+        elif latest is None:
+            raise FileNotFoundError(f"no snapshots at {path}")
+        out = {k: v for k, v in latest.items() if k not in ("version", "committed_at")}
+        out[key] = value(latest)
+        out["data_change"] = False
+        return out
+
+    return _commit(path, build, op=op)
+
+
 def snapshot_add_constraint(
     spark: SparkSession, path: str, name: str, expr: str
 ) -> int:
@@ -2601,39 +2637,25 @@ def snapshot_add_constraint(
             f"cannot add CHECK constraint {name!r} ({expr}) at {path}: "
             f"existing row violates it: {bad[0].asDict()}"
         )
-
-    def build(latest: dict | None, _version: int) -> dict:
-        if latest is None or latest["version"] != validated_v:
-            # data moved under the validation scan — the proof is stale
-            raise ConcurrentSnapshotError(
-                f"{path}: table advanced past validated version "
-                f"{validated_v} while adding constraint {name!r}; retry"
-            )
-        out = {k: v for k, v in latest.items() if k not in ("version", "committed_at")}
-        out["constraints"] = {**(latest.get("constraints") or {}), name: expr}
-        out["data_change"] = False
-        return out
-
-    return _commit(path, build, op="add_constraint")
+    return _commit_metadata(
+        path, "add_constraint", "constraints",
+        lambda latest: {**(latest.get("constraints") or {}), name: expr},
+        validated_v=validated_v, doing=f"adding constraint {name!r}",
+    )
 
 
 def snapshot_drop_constraint(path: str, name: str) -> int:
     """ALTER TABLE DROP CONSTRAINT parity: metadata-only commit removing
     the named constraint; raises KeyError if absent."""
 
-    def build(latest: dict | None, _version: int) -> dict:
-        if latest is None:
-            raise FileNotFoundError(f"no snapshots at {path}")
+    def without(latest: dict) -> dict:
         cons = dict(latest.get("constraints") or {})
         if name not in cons:
             raise KeyError(f"no constraint {name!r} at {path}")
         del cons[name]
-        out = {k: v for k, v in latest.items() if k not in ("version", "committed_at")}
-        out["constraints"] = cons
-        out["data_change"] = False
-        return out
+        return cons
 
-    return _commit(path, build, op="drop_constraint")
+    return _commit_metadata(path, "drop_constraint", "constraints", without)
 
 
 def _normalize_nullability(dt):
@@ -2757,35 +2779,21 @@ def snapshot_set_identity(
         if bound is not None:
             cand = bound + step
             nxt = cand if (cand - start) * step >= 0 else start
-
-    def build(latest: dict | None, _version: int) -> dict:
-        if latest is None or latest["version"] != validated_v:
-            raise ConcurrentSnapshotError(
-                f"{path}: table advanced past validated version "
-                f"{validated_v} while declaring identity on {col!r}; retry"
-            )
-        out = {k: v for k, v in latest.items() if k not in ("version", "committed_at")}
-        out["identity"] = {"col": col, "next": nxt, "step": step}
-        out["data_change"] = False
-        return out
-
-    return _commit(path, build, op="set_identity")
+    return _commit_metadata(
+        path, "set_identity", "identity",
+        lambda _latest: {"col": col, "next": nxt, "step": step},
+        validated_v=validated_v, doing=f"declaring identity on {col!r}",
+    )
 
 
 def snapshot_drop_identity(path: str) -> int:
     """Remove the identity declaration (metadata-only; values stay)."""
 
-    def build(latest: dict | None, _version: int) -> dict:
-        if latest is None:
-            raise FileNotFoundError(f"no snapshots at {path}")
+    def cleared(latest: dict) -> None:
         if not latest.get("identity"):
             raise KeyError(f"no identity column at {path}")
-        out = {k: v for k, v in latest.items() if k not in ("version", "committed_at")}
-        out["identity"] = None
-        out["data_change"] = False
-        return out
 
-    return _commit(path, build, op="drop_identity")
+    return _commit_metadata(path, "drop_identity", "identity", cleared)
 
 
 def _assign_identity(df: DataFrame, path: str, op: str):
@@ -2937,38 +2945,25 @@ def snapshot_set_generated(
             f"cannot set GENERATED ALWAYS AS on {col!r} ({expr}) at {path}: "
             f"existing row disagrees: {bad[0].asDict()}"
         )
-
-    def build(latest: dict | None, _version: int) -> dict:
-        if latest is None or latest["version"] != validated_v:
-            raise ConcurrentSnapshotError(
-                f"{path}: table advanced past validated version "
-                f"{validated_v} while setting generated rule on {col!r}; retry"
-            )
-        out = {k: v for k, v in latest.items() if k not in ("version", "committed_at")}
-        out["generated"] = {**_generated(latest), col: expr}
-        out["data_change"] = False
-        return out
-
-    return _commit(path, build, op="set_generated")
+    return _commit_metadata(
+        path, "set_generated", "generated",
+        lambda latest: {**_generated(latest), col: expr},
+        validated_v=validated_v, doing=f"setting generated rule on {col!r}",
+    )
 
 
 def snapshot_drop_generated(path: str, col: str) -> int:
     """Remove a generated-column rule (metadata-only commit); the column
     itself stays, as ordinary data."""
 
-    def build(latest: dict | None, _version: int) -> dict:
-        if latest is None:
-            raise FileNotFoundError(f"no snapshots at {path}")
+    def without(latest: dict) -> dict:
         rules = dict(_generated(latest))
         if col not in rules:
             raise KeyError(f"no generated rule for {col!r} at {path}")
         del rules[col]
-        out = {k: v for k, v in latest.items() if k not in ("version", "committed_at")}
-        out["generated"] = rules
-        out["data_change"] = False
-        return out
+        return rules
 
-    return _commit(path, build, op="drop_generated")
+    return _commit_metadata(path, "drop_generated", "generated", without)
 
 
 def _entry_id(e: dict) -> str:
@@ -3513,17 +3508,9 @@ def _rebase_concurrent(
         elif key_cols is not None and bounds is not None:
             # keyed MERGE: adds conflict only when a concurrently added
             # file MAY hold one of this batch's keys
-            phys = {c: _phys(mapping or {}, c) for c in key_cols}
             overlapping = [
-                e
-                for e in adds
-                if all(
-                    _stats_may_contain(
-                        e.get("stats"), phys[c],
-                        bounds[f"_lo_{c}"], bounds[f"_hi_{c}"],
-                    )
-                    for c in key_cols
-                )
+                e for e in adds
+                if _entry_may_hold_keys(e, key_cols, bounds, mapping or {})
             ]
             if overlapping:
                 rows = key_rows
@@ -3579,6 +3566,142 @@ def _rebase_concurrent(
     out = [e for e in latest_files if _entry_id(e) not in replaced_ids]
     out += list(produced)
     return out, latest["n_rows"] - sum(live_replaced) + sum(live_produced)
+
+
+def _commit_swap(
+    spark: SparkSession,
+    path: str,
+    cur: dict,
+    base_version: int,
+    op: str,
+    *,
+    replaced: list[dict],
+    produced: list[dict],
+    files: list[dict],
+    n_rows: int,
+    schema: str | None = None,
+    extra: dict | None = None,
+    **rebase,
+) -> int:
+    """Commit tail of every operation that swaps data files (MERGE, DML,
+    replace/overwrite, compaction, z-order).
+
+    The operation planned against ``cur`` (version ``base_version``) and
+    hands over: the entries it ``replaced`` (rewritten, re-pointed at a new
+    deletion vector, or dropped), the entries it ``produced``, and the
+    resulting manifest ``files`` with their live row count ``n_rows``.
+    The commit is ``{data_dirs, files, n_rows, schema, **extra}`` plus
+    ``cur``'s column mapping; ``schema`` defaults to ``cur``'s (MERGE
+    schema evolution widens it), ``extra`` carries caller metadata and
+    ``data_change``/clustering marks. ``op`` stamps the manifest and names
+    the operation in conflict messages.
+
+    A vanished table refuses. When a concurrent commit moved the table,
+    ``_rebase_concurrent`` decides whether the plan still holds on the
+    fresh state and rebases ``files``/``n_rows`` onto it; ``rebase``
+    selects its rule for concurrently ADDED files:
+      - ``key_cols`` + ``bounds`` (+ ``key_rows`` or ``incoming``): keyed
+        MERGE, adds conflict only when they may hold one of the keys;
+      - ``predicate``: predicate DML, adds conflict only when they may
+        match it;
+      - ``forbid_adds``: any add conflicts;
+      - ``allow_any_adds``: no add conflicts (content-preserving rewrites);
+      - none of these: any add conflicts.
+    ``read_set`` lists entries the plan read without replacing them; a
+    concurrent change to one of them conflicts too."""
+    mapping = _mapping(cur)
+
+    def build(latest: dict | None, _version: int) -> dict:
+        if latest is None:
+            raise ConcurrentSnapshotError(f"{path}: table vanished during {op}")
+        files_out, n_out = files, n_rows
+        if latest["version"] != base_version:
+            files_out, n_out = _rebase_concurrent(
+                spark, path, cur, latest, replaced=replaced, produced=produced,
+                op=op, mapping=mapping, **rebase,
+            )
+        out = {
+            "data_dirs": _dirs_of(files_out),
+            "files": files_out,
+            "n_rows": n_out,
+            "schema": schema or cur["schema"],
+            **(extra or {}),
+        }
+        if mapping:
+            out["column_mapping"] = mapping
+        return out
+
+    return _commit(path, build, op=op)
+
+
+def _carried_rows(
+    spark: SparkSession, path: str, cur: dict, entries: list[dict]
+) -> int:
+    """Live rows of the entries a commit carries by reference: manifest
+    counts (physical minus deletion-vector dead), or one count scan when a
+    legacy entry has no count."""
+    if any(e["rows"] is None for e in entries):
+        return _read_entries(spark, path, cur, entries).count()
+    return sum(_live_rows(e) for e in entries)
+
+
+def _entry_may_hold_keys(e: dict, key_cols: list, bounds, mapping: dict) -> bool:
+    """Whether an entry's min/max stats overlap the batch's key bounds
+    (``_lo_<col>``/``_hi_<col>``) on every key column."""
+    return all(
+        _stats_may_contain(
+            e.get("stats"), _phys(mapping, c),
+            bounds[f"_lo_{c}"], bounds[f"_hi_{c}"],
+        )
+        for c in key_cols
+    )
+
+
+def _key_bounds_prune(
+    files: list[dict], keyed: DataFrame, key_cols: list, mapping: dict
+) -> tuple:
+    """MERGE prune stage 1, in metadata only: the batch's key bounds (one
+    aggregate job) and the files whose stats may hold a key in them."""
+    bounds = keyed.agg(
+        *[F.min(c).alias(f"_lo_{c}") for c in key_cols],
+        *[F.max(c).alias(f"_hi_{c}") for c in key_cols],
+    ).collect()[0]
+    return bounds, [
+        e for e in files if _entry_may_hold_keys(e, key_cols, bounds, mapping)
+    ]
+
+
+def _split_touched(
+    files: list[dict], candidates: list[dict], matches: DataFrame
+) -> tuple[list[dict], list[dict]]:
+    """(touched, untouched) split of ``files``: the candidates holding at
+    least one row of ``matches`` (a lineage read of them) are touched."""
+    hit_rels = {
+        r[_SN_FILE] for r in matches.select(_SN_FILE).distinct().collect()
+    }
+    touched_paths = {e["path"] for e in candidates if _entry_rid(e) in hit_rels}
+    return (
+        [e for e in files if e["path"] in touched_paths],
+        [e for e in files if e["path"] not in touched_paths],
+    )
+
+
+def _files_holding_keys(
+    spark: SparkSession, path: str, cur: dict, files: list[dict],
+    candidates: list[dict], keyed: DataFrame, key_cols: list,
+) -> tuple[list[dict], list[dict]]:
+    """MERGE prune stage 2: ONE column-pruned key-membership scan over the
+    candidates (key columns + lineage only) splits ``files`` into those
+    truly holding one of ``keyed``'s keys and the rest. DV-aware: a key
+    living only in a file's DEAD positions does not touch the file."""
+    if not candidates:
+        return [], list(files)
+    return _split_touched(
+        files, candidates,
+        _read_entries(spark, path, cur, candidates, lineage=True)
+        .select(*key_cols, _SN_FILE)
+        .join(F.broadcast(keyed.select(*key_cols).distinct()), key_cols),
+    )
 
 
 def _merge_dv(
@@ -3642,42 +3765,18 @@ def _merge_dv(
         [_phys(mapping, c) for c in key_cols],
         _bloom_cols_in_use(path, cur),
     )
-    # rebase bookkeeping: base entries whose dv this merge re-points, and
-    # the re-pointed versions it produces (plus the fresh winners file).
-    repointed_base = [e for e in files if _entry_rid(e) in new_dead]
-    repointed_new = [e for e in out_files if _entry_rid(e) in new_dead]
-    out_files = out_files + new_files
-    n_killed = sum(new_dead.values())
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(f"{path}: table vanished during merge_dv")
-        if latest["version"] != base_version:
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=repointed_base,
-                produced=repointed_new + new_files,
-                op="merge_dv", key_cols=key_cols, mapping=mapping,
-                bounds=bounds, key_rows=key_rows, incoming=incoming,
-                # candidates whose stored seq BEAT an incoming row are not
-                # repointed, yet their content dropped that row from the
-                # winners — a concurrent delete of one invalidates the plan
-                read_set=candidates,
-            )
-        else:
-            files_out, n_rows = out_files, cur["n_rows"] - n_killed + n_new
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-            **(manifest_extra or {}),
-        }
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
-
-    return _commit(path, build, op="merge_dv")
+    return _commit_swap(
+        spark, path, cur, base_version, "merge_dv",
+        replaced=[e for e in files if _entry_rid(e) in new_dead],
+        produced=[e for e in out_files if _entry_rid(e) in new_dead] + new_files,
+        files=out_files + new_files,
+        n_rows=cur["n_rows"] - sum(new_dead.values()) + n_new,
+        extra=manifest_extra,
+        key_cols=key_cols, bounds=bounds, key_rows=key_rows, incoming=incoming,
+        # candidates whose stored seq BEAT an incoming row are not
+        # repointed, yet their content dropped that row from the winners
+        read_set=candidates,
+    )
 
 
 def snapshot_merge(
@@ -3789,21 +3888,7 @@ def snapshot_merge(
         _enforce_constraints(incoming, path, "merge")
 
     files = _manifest_files(path, cur)
-    # --- prune stage 1: manifest stats vs incoming key bounds ------------
-    bounds = incoming.agg(
-        *[F.min(c).alias(f"_lo_{c}") for c in key_cols],
-        *[F.max(c).alias(f"_hi_{c}") for c in key_cols],
-    ).collect()[0]
-    candidates = [
-        e
-        for e in files
-        if all(
-            _stats_may_contain(
-                e.get("stats"), _phys(mapping, c), bounds[f"_lo_{c}"], bounds[f"_hi_{c}"]
-            )
-            for c in key_cols
-        )
-    ]
+    bounds, candidates = _key_bounds_prune(files, incoming, key_cols, mapping)
     # --- prune stage 1.5: per-key refinement for SMALL batches -----------
     # Batch-wide bounds cannot prune a scattered micro-batch; point tests
     # per incoming key (stats + blooms) can — the maintenance-wave shape.
@@ -3828,25 +3913,9 @@ def snapshot_merge(
             delete_col, manifest_extra, incoming, candidates,
             bounds=bounds, key_rows=key_rows,
         )
-    # --- prune stage 2: exact key membership over candidates only --------
-    # DV-aware: a key living only in a file's DEAD positions must not drag
-    # the file into the rewrite set (or worse, resurrect on read).
-    touched_paths: set[str] = set()
-    if candidates:
-        hits = (
-            _read_entries(spark, path, cur, candidates, lineage=True)
-            .select(*key_cols, _SN_FILE)
-            .join(F.broadcast(incoming.select(*key_cols).distinct()), key_cols)
-            .select(_SN_FILE)
-            .distinct()
-            .collect()
-        )
-        hit_rels = {r[_SN_FILE] for r in hits}
-        touched_paths = {
-            e["path"] for e in candidates if _entry_rid(e) in hit_rels
-        }
-    touched = [e for e in files if e["path"] in touched_paths]
-    untouched = [e for e in files if e["path"] not in touched_paths]
+    touched, untouched = _files_holding_keys(
+        spark, path, cur, files, candidates, incoming, key_cols
+    )
 
     # --- rewrite: touched rows ⊎ incoming, keep highest seq per key ------
     if touched:
@@ -3881,43 +3950,13 @@ def snapshot_merge(
         [_phys(mapping, c) for c in key_cols],
         _bloom_cols_in_use(path, cur),
     )
-
-    if any(e["rows"] is None for e in untouched):
-        untouched_rows = (
-            _read_entries(spark, path, cur, untouched).count()
-            if untouched
-            else 0
-        )
-    else:
-        # n_rows counts LIVE rows: entries carrying a deletion vector
-        # contribute physical minus dead.
-        untouched_rows = sum(_live_rows(e) for e in untouched)
-    out_files = untouched + new_files
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(f"{path}: table vanished during merge")
-        if latest["version"] != base_version:
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=touched, produced=new_files,
-                op="merge", key_cols=key_cols, mapping=mapping,
-                bounds=bounds, key_rows=key_rows, incoming=incoming,
-            )
-        else:
-            files_out, n_rows = out_files, untouched_rows + n_new
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-            **(manifest_extra or {}),
-        }
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
-
-    return _commit(path, build, op="merge")
+    return _commit_swap(
+        spark, path, cur, base_version, "merge",
+        replaced=touched, produced=new_files, files=untouched + new_files,
+        n_rows=_carried_rows(spark, path, cur, untouched) + n_new,
+        extra=manifest_extra,
+        key_cols=key_cols, bounds=bounds, key_rows=key_rows, incoming=incoming,
+    )
 
 
 def _mw_first_clause_idx(clauses, guard):
@@ -4112,22 +4151,7 @@ def snapshot_merge_when(
     mapping = _mapping(cur)
     files = _manifest_files(path, cur)
 
-    # --- stage 1: manifest min/max vs the source's key bounds ------------
-    bounds = source.agg(
-        *[F.min(c).alias(f"_lo_{c}") for c in key_cols],
-        *[F.max(c).alias(f"_hi_{c}") for c in key_cols],
-    ).collect()[0]
-    candidates = [
-        e
-        for e in files
-        if all(
-            _stats_may_contain(
-                e.get("stats"), _phys(mapping, c),
-                bounds[f"_lo_{c}"], bounds[f"_hi_{c}"],
-            )
-            for c in key_cols
-        )
-    ]
+    bounds, candidates = _key_bounds_prune(files, source, key_cols, mapping)
 
     # Delta guard: a target row matched by >1 source row is an error.
     dup_keys = (
@@ -4157,25 +4181,9 @@ def snapshot_merge_when(
         # Every target row must be classified — all live files are touched.
         touched, untouched = list(files), []
     elif rewrite_matched:
-        # --- stage 2: exact key membership over candidates only ----------
-        touched_paths: set[str] = set()
-        if candidates:
-            hits = (
-                _read_entries(spark, path, cur, candidates, lineage=True)
-                .select(*key_cols, _SN_FILE)
-                .join(
-                    F.broadcast(source.select(*key_cols).distinct()), key_cols
-                )
-                .select(_SN_FILE)
-                .distinct()
-                .collect()
-            )
-            hit_rels = {r[_SN_FILE] for r in hits}
-            touched_paths = {
-                e["path"] for e in candidates if _entry_rid(e) in hit_rels
-            }
-        touched = [e for e in files if e["path"] in touched_paths]
-        untouched = [e for e in files if e["path"] not in touched_paths]
+        touched, untouched = _files_holding_keys(
+            spark, path, cur, files, candidates, source, key_cols
+        )
     else:
         # Insert-only merge: rewrite nothing; drop source rows whose key
         # already exists (one broadcast anti-join against candidate keys).
@@ -4316,46 +4324,17 @@ def snapshot_merge_when(
         spark, full_dir, rel, _stats_cols_in_use(cur, path),
         _bloom_cols_in_use(path, cur),
     )
-    if any(e["rows"] is None for e in untouched):
-        untouched_rows = (
-            _read_entries(spark, path, cur, untouched).count()
-            if untouched
-            else 0
-        )
-    else:
-        untouched_rows = sum(_live_rows(e) for e in untouched)
-    out_files = untouched + new_files
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(f"{path}: table vanished during merge")
-        if latest["version"] != base_version:
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=touched, produced=new_files,
-                op="merge", key_cols=key_cols, mapping=mapping,
-                bounds=bounds, incoming=source,
-                # WHEN NOT MATCHED BY SOURCE classifies every target row:
-                # ANY concurrently added row invalidates the plan (Delta's
-                # documented full-table conflict for the clause).
-                forbid_adds=bool(when_not_matched_by_source),
-                read_set=consulted,
-            )
-        else:
-            files_out, n_rows = out_files, untouched_rows + n_new
-        mf = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            # schema evolution widens here; identical to cur otherwise
-            "schema": schema.json(),
-            **(manifest_extra or {}),
-        }
-        if mapping:
-            mf["column_mapping"] = mapping
-        return mf
-
-    return _commit(path, build, op="merge")
+    return _commit_swap(
+        spark, path, cur, base_version, "merge",
+        replaced=touched, produced=new_files, files=untouched + new_files,
+        n_rows=_carried_rows(spark, path, cur, untouched) + n_new,
+        schema=schema.json(), extra=manifest_extra,
+        key_cols=key_cols, bounds=bounds, incoming=source,
+        # WHEN NOT MATCHED BY SOURCE classifies every target row (Delta's
+        # documented full-table conflict for the clause)
+        forbid_adds=bool(when_not_matched_by_source),
+        read_set=consulted,
+    )
 
 
 def _stats_cols_in_use(cur: dict, path: str | None = None) -> list[str]:
@@ -4397,18 +4376,10 @@ def _predicate_file_split(
     )
     if not candidates:
         return [], list(files)
-    hits = (
+    return _split_touched(
+        files, candidates,
         _read_entries(spark, path, cur, candidates, lineage=True)
-        .filter(F.expr(predicate))
-        .select(_SN_FILE)
-        .distinct()
-        .collect()
-    )
-    hit_rels = {r[_SN_FILE] for r in hits}
-    touched_paths = {e["path"] for e in candidates if _entry_rid(e) in hit_rels}
-    return (
-        [e for e in files if e["path"] in touched_paths],
-        [e for e in files if e["path"] not in touched_paths],
+        .filter(F.expr(predicate)),
     )
 
 
@@ -4437,40 +4408,12 @@ def _rewrite_touched(
     new_files, n_new = _scan_file_entries(
         spark, full_dir, rel, _stats_cols_in_use(cur, path), _bloom_cols_in_use(path, cur)
     )
-    if any(e["rows"] is None for e in untouched):
-        untouched_rows = (
-            _read_entries(spark, path, cur, untouched).count()
-            if untouched
-            else 0
-        )
-    else:
-        # n_rows counts LIVE rows: entries carrying a deletion vector
-        # contribute physical minus dead.
-        untouched_rows = sum(_live_rows(e) for e in untouched)
-    out_files = untouched + new_files
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(f"{path}: table vanished during {op}")
-        if latest["version"] != base_version:
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=touched, produced=new_files,
-                op=op, mapping=mapping, predicate=predicate,
-            )
-        else:
-            files_out, n_rows = out_files, untouched_rows + n_new
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-        }
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
-
-    return _commit(path, build, op=op)
+    return _commit_swap(
+        spark, path, cur, base_version, op,
+        replaced=touched, produced=new_files, files=untouched + new_files,
+        n_rows=_carried_rows(spark, path, cur, untouched) + n_new,
+        predicate=predicate,
+    )
 
 
 def snapshot_delete_where(
@@ -4525,33 +4468,11 @@ def snapshot_delete_where(
             dropped, kept = split
             if not dropped:
                 return None
-            n_kept = sum(_live_rows(e) for e in kept)
-
-            def build(latest: dict | None, version: int) -> dict:
-                if latest is None:
-                    raise ConcurrentSnapshotError(
-                        f"{path}: table vanished during delete_where"
-                    )
-                if latest["version"] != base_version:
-                    files_out, n_rows = _rebase_concurrent(
-                        spark, path, cur, latest,
-                        replaced=dropped, produced=[],
-                        op="delete_where", mapping=_mapping(cur),
-                        predicate=predicate,
-                    )
-                else:
-                    files_out, n_rows = kept, n_kept
-                out = {
-                    "data_dirs": _dirs_of(files_out),
-                    "files": files_out,
-                    "n_rows": n_rows,
-                    "schema": cur["schema"],
-                }
-                if _mapping(cur):
-                    out["column_mapping"] = _mapping(cur)
-                return out
-
-            return _commit(path, build, op="delete_where")
+            return _commit_swap(
+                spark, path, cur, base_version, "delete_where",
+                replaced=dropped, produced=[], files=kept,
+                n_rows=sum(_live_rows(e) for e in kept), predicate=predicate,
+            )
     if mode == "dv":
         return _delete_where_dv(spark, path, cur, base_version, predicate)
     touched, untouched = _predicate_file_split(spark, path, cur, predicate)
@@ -4765,40 +4686,15 @@ def snapshot_replace_where(
     if _ident_unpin:
         _ident_unpin()
     produced = rewritten + incoming
-    if any(e["rows"] is None for e in untouched):
-        untouched_rows = (
-            _read_entries(spark, path, cur, untouched).count() if untouched else 0
-        )
-    else:
-        untouched_rows = sum(_live_rows(e) for e in untouched)
-    produced_rows = sum(_live_rows(e) for e in produced)
-    out_files = untouched + produced
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(
-                f"{path}: table vanished during replace_where"
-            )
-        if latest["version"] != base_version:
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=touched, produced=produced,
-                op="replace_where", mapping=mapping, predicate=predicate,
-            )
-        else:
-            files_out, n_rows = out_files, untouched_rows + produced_rows
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-            **(manifest_extra or {}),
-        }
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
-
-    return _commit(path, build, op="replace_where")
+    return _commit_swap(
+        spark, path, cur, base_version, "replace_where",
+        replaced=touched, produced=produced, files=untouched + produced,
+        n_rows=(
+            _carried_rows(spark, path, cur, untouched)
+            + sum(_live_rows(e) for e in produced)
+        ),
+        extra=manifest_extra, predicate=predicate,
+    )
 
 
 def snapshot_dynamic_partition_overwrite(
@@ -4873,37 +4769,14 @@ def snapshot_dynamic_partition_overwrite(
     )
     if _ident_unpin:
         _ident_unpin()
-    kept_rows = sum(_live_rows(e) for e in kept)
-    out_files = kept + new_files
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(
-                f"{path}: table vanished during dynamic overwrite"
-            )
-        if latest["version"] != base_version:
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=dropped, produced=new_files,
-                op="dynamic_overwrite", mapping=mapping,
-                # multi-column tuple membership has no single-predicate
-                # form for the adds check: any concurrent add conflicts
-                forbid_adds=True,
-            )
-        else:
-            files_out, n_rows = out_files, kept_rows + n_in
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-            **(manifest_extra or {}),
-        }
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
-
-    return _commit(path, build, op="dynamic_overwrite")
+    return _commit_swap(
+        spark, path, cur, base_version, "dynamic_overwrite",
+        replaced=dropped, produced=new_files, files=kept + new_files,
+        n_rows=sum(_live_rows(e) for e in kept) + n_in, extra=manifest_extra,
+        # multi-column tuple membership has no single-predicate form for
+        # the adds check: any concurrent add conflicts
+        forbid_adds=True,
+    )
 
 
 def _delete_where_dv(
@@ -4920,32 +4793,13 @@ def _delete_where_dv(
     ref, new_dead, out_files = _dv_land_positions(spark, path, cur, hits)
     if ref is None:
         return None
-    n_deleted = sum(new_dead.values())
-    repointed_base = [e for e in files if _entry_rid(e) in new_dead]
-    repointed_new = [e for e in out_files if _entry_rid(e) in new_dead]
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(f"{path}: table vanished during delete_dv")
-        if latest["version"] != base_version:
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=repointed_base, produced=repointed_new,
-                op="delete_dv", mapping=_mapping(cur), predicate=predicate,
-            )
-        else:
-            files_out, n_rows = out_files, cur["n_rows"] - n_deleted
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-        }
-        if _mapping(cur):
-            out["column_mapping"] = _mapping(cur)
-        return out
-
-    return _commit(path, build, op="delete_dv")
+    return _commit_swap(
+        spark, path, cur, base_version, "delete_dv",
+        replaced=[e for e in files if _entry_rid(e) in new_dead],
+        produced=[e for e in out_files if _entry_rid(e) in new_dead],
+        files=out_files, n_rows=cur["n_rows"] - sum(new_dead.values()),
+        predicate=predicate,
+    )
 
 
 def _update_where_dv(
@@ -5005,33 +4859,14 @@ def _update_where_dv(
             f"dv-update image drift at {path}: marked {sum(new_dead.values())} "
             f"dead but wrote {n_new} updated rows"
         )
-    repointed_base = [e for e in files if _entry_rid(e) in new_dead]
-    repointed_new = [e for e in out_files if _entry_rid(e) in new_dead]
-    out_files = out_files + new_files
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(f"{path}: table vanished during update_dv")
-        if latest["version"] != base_version:
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=repointed_base, produced=repointed_new + new_files,
-                op="update_dv", mapping=mapping, predicate=predicate,
-            )
-        else:
-            # dead added == images added
-            files_out, n_rows = out_files, cur["n_rows"]
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-        }
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
-
-    return _commit(path, build, op="update_dv")
+    return _commit_swap(
+        spark, path, cur, base_version, "update_dv",
+        replaced=[e for e in files if _entry_rid(e) in new_dead],
+        produced=[e for e in out_files if _entry_rid(e) in new_dead] + new_files,
+        # dead added == images added
+        files=out_files + new_files, n_rows=cur["n_rows"],
+        predicate=predicate,
+    )
 
 
 def snapshot_update_where(
@@ -5316,37 +5151,16 @@ def snapshot_compact(
         raise RuntimeError(
             f"compaction row-count drift at {path}: {small_rows} in, {n_new} out"
         )
-    out_files = big + new_files
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(f"{path}: table vanished during compaction")
-        if latest["version"] != base_version:
-            # Folding OTHER files never conflicts with concurrently ADDED
-            # rows (allow_any_adds); it only conflicts when a concurrent
-            # commit touched one of the files being folded.
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=small, produced=new_files,
-                op="compaction", mapping=mapping, allow_any_adds=True,
-            )
-        else:
-            files_out, n_rows = out_files, cur["n_rows"]
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-            # Delta marks OPTIMIZE commits dataChange=false; the change feed
-            # skips them so keyless consumers don't see the whole compacted
-            # set as insert+delete (see snapshot_changes).
-            "data_change": False,
-        }
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
-
-    return _commit(path, build, op="compact")
+    return _commit_swap(
+        spark, path, cur, base_version, "compact",
+        replaced=small, produced=new_files, files=big + new_files,
+        n_rows=cur["n_rows"],
+        # Delta marks OPTIMIZE commits dataChange=false; the change feed
+        # skips them so keyless consumers don't see the whole compacted
+        # set as insert+delete (see snapshot_changes).
+        extra={"data_change": False},
+        allow_any_adds=True,
+    )
 
 
 def _z_numeric(df: DataFrame, c: str):
@@ -5524,37 +5338,14 @@ def snapshot_zorder(
         raise RuntimeError(
             f"zorder row-count drift at {path}: {folded_rows} in, {n_new} out"
         )
-    out_files = carried + new_files
-
-    def build(latest: dict | None, version: int) -> dict:
-        if latest is None:
-            raise ConcurrentSnapshotError(f"{path}: table vanished during zorder")
-        if latest["version"] != base_version:
-            # same rebase rule as compaction: re-clustering the folded set
-            # never conflicts with concurrently ADDED rows; it conflicts
-            # only when a concurrent commit touched a folded file
-            files_out, n_rows = _rebase_concurrent(
-                spark, path, cur, latest,
-                replaced=folded, produced=new_files,
-                op="zorder", mapping=mapping, allow_any_adds=True,
-            )
-        else:
-            files_out, n_rows = out_files, cur["n_rows"]
-        out = {
-            "data_dirs": _dirs_of(files_out),
-            "files": files_out,
-            "n_rows": n_rows,
-            "schema": cur["schema"],
-            "data_change": False,
-            "clustered_by": list(cols),
-        }
-        if where is not None:
-            out["clustered_where"] = where
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
-
-    return _commit(path, build, op="zorder")
+    extra = {"data_change": False, "clustered_by": list(cols)}
+    if where is not None:
+        extra["clustered_where"] = where
+    return _commit_swap(
+        spark, path, cur, base_version, "zorder",
+        replaced=folded, produced=new_files, files=carried + new_files,
+        n_rows=cur["n_rows"], extra=extra, allow_any_adds=True,
+    )
 
 
 def snapshot_scan(
@@ -6674,6 +6465,33 @@ def snapshot_maintain_topk(
     return v
 
 
+def _commit_schema(
+    path: str, op: str, evolve: Callable[[dict], tuple[str, dict]]
+) -> int:
+    """Commit tail of schema evolution: the latest version's files under
+    the schema and column mapping ``evolve(latest)`` returns (it raises
+    when the change does not apply) — metadata only, ``data_change=False``.
+    A vanished table refuses with ``FileNotFoundError``."""
+
+    def build(latest: dict | None, _version: int) -> dict:
+        if latest is None:
+            raise FileNotFoundError(f"no snapshots at {path}")
+        schema_json, mapping = evolve(latest)
+        out = {
+            "data_dirs": latest["data_dirs"],
+            "n_rows": latest["n_rows"],
+            "schema": schema_json,
+            "data_change": False,
+        }
+        if _has_files(latest):
+            out["files"] = _manifest_files(path, latest)
+        if mapping:
+            out["column_mapping"] = mapping
+        return out
+
+    return _commit(path, build, op=op)
+
+
 def snapshot_add_columns(path: str, new_fields) -> int:
     """Schema evolution, Delta ``ADD COLUMNS`` parity: commit a NEW version
     whose manifest carries the WIDENED schema over the SAME files — a pure
@@ -6694,9 +6512,7 @@ def snapshot_add_columns(path: str, new_fields) -> int:
     if not fields:
         raise ValueError("snapshot_add_columns: no fields given")
 
-    def build(latest: dict | None, _version: int) -> dict:
-        if latest is None:
-            raise FileNotFoundError(f"no snapshots at {path}")
+    def evolve(latest: dict) -> tuple[str, dict]:
         schema = StructType.fromJson(json.loads(latest["schema"]))
         existing = set(schema.fieldNames())
         for f in fields:
@@ -6714,19 +6530,9 @@ def snapshot_add_columns(path: str, new_fields) -> int:
                     f"snapshot_add_columns: {f.name!r} collides with a "
                     "stored physical column name (rename history)"
                 )
-        out = {
-            "data_dirs": latest["data_dirs"],
-            "n_rows": latest["n_rows"],
-            "schema": schema.json(),
-            "data_change": False,
-        }
-        if _has_files(latest):
-            out["files"] = _manifest_files(path, latest)
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
+        return schema.json(), mapping
 
-    return _commit(path, build, op="add_columns")
+    return _commit_schema(path, "add_columns", evolve)
 
 
 def snapshot_rename_columns(path: str, renames: dict) -> int:
@@ -6743,9 +6549,7 @@ def snapshot_rename_columns(path: str, renames: dict) -> int:
     if not renames:
         raise ValueError("snapshot_rename_columns: no renames given")
 
-    def build(latest: dict | None, _version: int) -> dict:
-        if latest is None:
-            raise FileNotFoundError(f"no snapshots at {path}")
+    def evolve(latest: dict) -> tuple[str, dict]:
         schema = StructType.fromJson(json.loads(latest["schema"]))
         names = schema.fieldNames()
         mapping = dict(_mapping(latest))
@@ -6799,19 +6603,9 @@ def snapshot_rename_columns(path: str, renames: dict) -> int:
                 )
             else:
                 new_fields.append(f)
-        out = {
-            "data_dirs": latest["data_dirs"],
-            "n_rows": latest["n_rows"],
-            "schema": StructType(new_fields).json(),
-            "data_change": False,
-        }
-        if _has_files(latest):
-            out["files"] = _manifest_files(path, latest)
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
+        return StructType(new_fields).json(), mapping
 
-    return _commit(path, build, op="rename_columns")
+    return _commit_schema(path, "rename_columns", evolve)
 
 
 def snapshot_drop_columns(path: str, names: Sequence[str]) -> int:
@@ -6829,9 +6623,7 @@ def snapshot_drop_columns(path: str, names: Sequence[str]) -> int:
     if not drop:
         raise ValueError("snapshot_drop_columns: no columns given")
 
-    def build(latest: dict | None, _version: int) -> dict:
-        if latest is None:
-            raise FileNotFoundError(f"no snapshots at {path}")
+    def evolve(latest: dict) -> tuple[str, dict]:
         schema = StructType.fromJson(json.loads(latest["schema"]))
         have = set(schema.fieldNames())
         missing = drop - have
@@ -6867,22 +6659,11 @@ def snapshot_drop_columns(path: str, names: Sequence[str]) -> int:
                 f"snapshot_drop_columns: {phit} are partition columns; "
                 "re-partition via an explicit overwrite first"
             )
-        out = {
-            "data_dirs": latest["data_dirs"],
-            "n_rows": latest["n_rows"],
-            "schema": StructType(kept).json(),
-            "data_change": False,
-        }
-        if _has_files(latest):
-            out["files"] = _manifest_files(path, latest)
-        mapping = {
+        return StructType(kept).json(), {
             k: v for k, v in _mapping(latest).items() if k not in drop
         }
-        if mapping:
-            out["column_mapping"] = mapping
-        return out
 
-    return _commit(path, build, op="drop_columns")
+    return _commit_schema(path, "drop_columns", evolve)
 
 
 def snapshot_table_stats(path: str) -> dict:

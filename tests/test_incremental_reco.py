@@ -215,3 +215,19 @@ def test_serving_read_plan_is_scan_only(spark, lake):
     reco_maintain(spark, SF_DIR, lake)
     plan = reco_serve(spark, lake)._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan and "Exchange" not in plan, plan
+
+
+def test_q142_lake_lives_in_application_scratch(spark, monkeypatch):
+    """q142 builds its maintained lake under this application's scratch
+    path, which the process-exit hook removes (a temp dir of its own would
+    outlive the process)."""
+    from music_recommendation_service_spark.plans import incremental_reco as ir
+    from music_recommendation_service_spark.sources.writers import (
+        scratch_table_path,
+    )
+
+    monkeypatch.setattr(ir, "_Q142_LAKES", {})
+    monkeypatch.setattr(ir, "churn_waves", lambda spark, sf_dir, lake: iter(()))
+    monkeypatch.setattr(ir, "reco_serve", lambda spark, lake: lake)
+    lake = ir.q142_incremental_hybrid_recommendations(spark, SF_DIR)
+    assert lake.root == scratch_table_path(spark, "reco_lake", SF_DIR)

@@ -701,7 +701,23 @@ def test_dynamic_partition_overwrite(spark, tmp_path):
 
 def test_replace_where_conflicts_with_in_scope_append(spark, tmp_path, monkeypatch):
     """A concurrent append INTO the replaced scope conflicts (its rows
-    would silently vanish); an out-of-scope append rebases."""
+    would silently vanish); an out-of-scope append rebases. A dynamic
+    partition overwrite conflicts with ANY concurrent append, even into
+    another partition, and the raced rows stay visible."""
+    r = _mk(spark, tmp_path, name="dyn")
+    _race_once_local(
+        monkeypatch, r,
+        lambda: S.snapshot_append(_pdf(spark, [(777, 1999, "raced")]), r),
+    )
+    with pytest.raises(S.ConcurrentSnapshotError):
+        S.snapshot_dynamic_partition_overwrite(
+            _pdf(spark, [(1000, 1992, "new")]), r
+        )
+    monkeypatch.undo()
+    assert S.snapshot_versions(r) == [1, 2]
+    got = S.snapshot_read(spark, r)
+    assert got.count() == 31 and got.filter(F.col("k") == 777).count() == 1
+
     p = _mk(spark, tmp_path)
 
     _race_once_local(
@@ -726,6 +742,85 @@ def test_replace_where_conflicts_with_in_scope_append(spark, tmp_path, monkeypat
     got = S.snapshot_read(spark, p2)
     assert got.filter(F.col("k") == 888).count() == 1
     assert {r["k"] for r in got.filter(F.col("year") == 1991).collect()} == {1000}
+
+
+_SHAPE_COLS = ["k", "year", "seq", "body"]
+
+
+def _shape_src(spark, rows):
+    return spark.createDataFrame(rows, _SHAPE_COLS)
+
+
+# op name -> (expected manifest "op", the operation run on the renamed table)
+_FILE_SWAP_OPS = {
+    "merge": ("merge", lambda spark, p: S.snapshot_merge(
+        _shape_src(spark, [(1, 1991, 1, "m"), (100, 1990, 1, "new")]),
+        p, ["k"], "seq", manifest_extra={"tag": 7})),
+    "merge_dv": ("merge_dv", lambda spark, p: S.snapshot_merge(
+        _shape_src(spark, [(1, 1991, 1, "m"), (100, 1990, 1, "new")]),
+        p, ["k"], "seq", manifest_extra={"tag": 7}, mode="dv")),
+    "merge_when": ("merge", lambda spark, p: S.snapshot_merge_when(
+        _shape_src(spark, [(1, 1991, 1, "m")]), p, ["k"],
+        when_matched=[{"action": "update", "set": {"body": "'upd'"}}],
+        manifest_extra={"tag": 7})),
+    "delete_where": ("delete_where", lambda spark, p: S.snapshot_delete_where(
+        spark, p, "k < 4")),
+    "delete_partition": ("delete_where", lambda spark, p: S.snapshot_delete_where(
+        spark, p, "year = 1990")),
+    "delete_dv": ("delete_dv", lambda spark, p: S.snapshot_delete_where(
+        spark, p, "k < 4", mode="dv")),
+    "update_where": ("update_where", lambda spark, p: S.snapshot_update_where(
+        spark, p, "k < 4", {"body": "'u'"})),
+    "update_dv": ("update_dv", lambda spark, p: S.snapshot_update_where(
+        spark, p, "k < 4", {"body": "'u'"}, mode="dv")),
+    "replace_where": ("replace_where", lambda spark, p: S.snapshot_replace_where(
+        _shape_src(spark, [(200, 1991, 0, "r")]), p, "year = 1991",
+        manifest_extra={"tag": 7})),
+    "dynamic_overwrite": (
+        "dynamic_overwrite",
+        lambda spark, p: S.snapshot_dynamic_partition_overwrite(
+            _shape_src(spark, [(300, 1992, 0, "d")]), p,
+            manifest_extra={"tag": 7})),
+    "compact": ("compact", lambda spark, p: S.snapshot_compact(spark, p)),
+    "zorder": ("zorder", lambda spark, p: S.snapshot_zorder(
+        spark, p, ["k"], target_files=2, where="year = 1991")),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_FILE_SWAP_OPS))
+def test_file_swap_manifest_shape(spark, tmp_path, name):
+    """Every operation that swaps data files commits the same manifest
+    shape: its op stamp, the live row count readers see, the column
+    mapping of an earlier rename, caller metadata where the operation
+    takes it, and data_change=false (plus clustering keys) on the
+    content-preserving rewrites."""
+    op, run = _FILE_SWAP_OPS[name]
+    p = str(tmp_path / name)
+    S.snapshot_write(
+        spark.createDataFrame(
+            [(i, 1990 + i % 3, 0, f"p{i}") for i in range(30)],
+            ["k", "year", "seq", "payload"],
+        ),
+        p, stats_cols=["k"], partition_by=["year"],
+    )
+    S.snapshot_rename_columns(p, {"payload": "body"})
+    v = run(spark, p)
+    assert v == 3
+    m = S._read_manifest(p, v)
+    assert m["op"] == op
+    assert m["column_mapping"] == {"body": "payload"}
+    assert m["n_rows"] == S.snapshot_read(spark, p).count()
+    assert ("tag" in m) == (name in (
+        "merge", "merge_dv", "merge_when", "replace_where", "dynamic_overwrite"
+    ))
+    if "tag" in m:
+        assert m["tag"] == 7
+    assert m.get("data_change", True) is (name not in ("compact", "zorder"))
+    if name == "zorder":
+        assert m["clustered_by"] == ["k"]
+        assert m["clustered_where"] == "year = 1991"
+    else:
+        assert "clustered_by" not in m and "clustered_where" not in m
 
 
 def _race_once_local(monkeypatch, path, action):

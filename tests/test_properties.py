@@ -89,6 +89,31 @@ def test_cooccurrence_pre_distinct_equivalent(rows):
     assert got == want
 
 
+def test_pre_distinct_call_sites_are_distinct(spark, sf_dir):
+    """pre_distinct=True skips the pair build's own distinct on the
+    caller's word: the input of every engine call site must already be
+    distinct on the projected (group, item) pair, or pair counts inflate."""
+    import pathlib
+
+    import music_recommendation_service_spark as engine
+    from music_recommendation_service_spark.plans.reference_parity import (
+        _baskets_m,
+        _likes_m,
+    )
+
+    sites = sum(
+        f.read_text().count("pre_distinct=True")
+        for f in pathlib.Path(engine.__file__).parent.rglob("*.py")
+    )
+    assert sites == 2, "a new pre_distinct=True call site: check its input here"
+    for df, cols in (
+        (_likes_m(spark, sf_dir), ["user_id", "item_id"]),  # q03 / q05
+        (_baskets_m(spark, sf_dir), ["l_orderkey", "l_partkey"]),  # q122 / q123
+    ):
+        pair = df.select(*cols)
+        assert pair.count() == pair.distinct().count() > 0
+
+
 @given(rows=pairs_rows)
 @SETTINGS
 def test_symmetrize_is_involution_free(rows):
