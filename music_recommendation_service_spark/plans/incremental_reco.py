@@ -43,11 +43,11 @@ Incremental algebra per stage (all EXACT, no approximation):
 - gold: a user's top-5 changes iff (a) their own likes changed, (b) a
   neighbor list of an item they like changed, or (c) their nation's
   leaderboard changed. That affected set is computed FROM THE CDFs of
-  likes/cf_top/nation_top, the exact scoring tail (identical operators to
-  q05's: fan-out join -> one user_id-shuffle sum -> anti-join -> top-5
-  window) runs over ONLY those users, and the result MERGEs in keyed
-  (user_id, rank). Bootstrap (no gold yet) scores everyone — the batch
-  q05 plan.
+  likes/cf_top/nation_top, the scoring tail q05 and the pipeline share
+  (``operators/hybrid.py``: fan-out join -> one user_id-shuffle sum that
+  also drops liked items -> top-5 window) runs over ONLY those users, and
+  the result MERGEs in keyed (user_id, rank). Bootstrap (no gold yet)
+  scores everyone.
 
 Hot-group degradation is honest and measured: a wave touching a hot item
 or many nations approaches a full recompute (the affected-user set IS the
@@ -64,24 +64,25 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from music_recommendation_service_spark.functions import rnd
+from music_recommendation_service_spark.operators.hybrid import hybrid_top_k
+from music_recommendation_service_spark.operators.pairs import symmetrize_pairs
+from music_recommendation_service_spark.operators.topk import topk_per_key
 from music_recommendation_service_spark.plans import register, registry
 from music_recommendation_service_spark.plans.reference_parity import (
     _LIKES_SQL,
     _likes,
+    _sim_pairs_m,
     _t,
+    _trending_m,
     NEIGHBOR_TOP,
     RECO_K,
     SOCIAL_TOP,
-    TREND_CUTOFF,
-    TREND_TOP,
     W_CF,
     W_SIM,
     W_SOCIAL,
-    W_TREND,
 )
 from music_recommendation_service_spark.sources.snapshots import (
     StaleCursorError,
@@ -158,7 +159,7 @@ def _stage_changes(spark, source_path, cursor_path, view_path, key_cols):
 def _merge_persisted(upsert: DataFrame, *args, **kwargs) -> int | None:
     """Persist a maintenance upsert before handing it to snapshot_merge:
     the merge runs SEVERAL internal actions over its source (key bounds,
-    dup guard, membership scan, the write), and an unpersisted source
+    membership scan, the write), and an unpersisted source
     would re-execute the whole delta plan — the scoring tail, the pair
     self-joins — once per action (measured at sf0.1: 3-5x the wave cost).
     Returns None without committing when the upsert is empty."""
@@ -338,6 +339,14 @@ def _ranked_merge(
     )
 
 
+def _neighbor_top(sym: DataFrame) -> DataFrame:
+    """Both-direction (src, dst, n) neighbors -> each src's top
+    NEIGHBOR_TOP, keyed (src, rank) — q05's truncation window."""
+    return topk_per_key(
+        sym, ["src"], NEIGHBOR_TOP, F.desc("n"), F.asc("dst")
+    ).select("src", "rank", "dst", "n")
+
+
 def maintain_cf_top(spark: SparkSession, lake: RecoLake) -> int | None:
     """cf_counts CDF -> per-item top-NEIGHBOR_TOP neighbor lists, keyed
     (src, rank). Only items whose any pair count changed recompute."""
@@ -351,27 +360,11 @@ def maintain_cf_top(spark: SparkSession, lake: RecoLake) -> int | None:
     counts = snapshot_read(spark, lake.cf_counts, to_v).select(
         "i1", "i2", "n"
     )
-
-    def full_sym(c):
-        return c.select(
-            F.col("i1").alias("src"), F.col("i2").alias("dst"), "n"
-        ).unionByName(
-            c.select(F.col("i2").alias("src"), F.col("i1").alias("dst"), "n")
-        )
-
-    w = Window.partitionBy("src").orderBy(F.desc("n"), F.asc("dst"))
-
-    def topn(scoped):
-        return (
-            scoped.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= NEIGHBOR_TOP)
-            .select("src", "rank", "dst", "n")
-        )
-
+    all_top = _neighbor_top(symmetrize_pairs(counts, "i1", "i2", "n"))
     bootstrap = applied < 0
     if bootstrap:
         v = _ranked_merge(
-            spark, lake.cf_top, None, topn(full_sym(counts)), ["src"],
+            spark, lake.cf_top, None, all_top, ["src"],
             NEIGHBOR_TOP, to_v, ["dst", "n"], True,
         )
         commit()
@@ -391,9 +384,7 @@ def maintain_cf_top(spark: SparkSession, lake: RecoLake) -> int | None:
             # a change wave reordering most items' lists: overwrite-rebuild
             # is cheaper than merging nearly every (src, rank) row
             v = snapshot_write(
-                topn(full_sym(counts)).withColumn(
-                    "_seq", F.lit(to_v).cast("long")
-                ),
+                all_top.withColumn("_seq", F.lit(to_v).cast("long")),
                 lake.cf_top, stats_cols=["src"], bloom_cols=["src"],
                 manifest_extra={"source_version": to_v},
             )
@@ -407,9 +398,11 @@ def maintain_cf_top(spark: SparkSession, lake: RecoLake) -> int | None:
                 )
             else:
                 pruned = counts
-            scoped = full_sym(pruned).join(affected, "src", "semi")
+            scoped = symmetrize_pairs(pruned, "i1", "i2", "n").join(
+                affected, "src", "semi"
+            )
             v = _ranked_merge(
-                spark, lake.cf_top, affected, topn(scoped), ["src"],
+                spark, lake.cf_top, affected, _neighbor_top(scoped), ["src"],
                 NEIGHBOR_TOP, to_v, ["dst", "n"], False,
             )
     finally:
@@ -438,14 +431,9 @@ def maintain_nation_top(spark: SparkSession, lake: RecoLake) -> int | None:
     else:
         affected = changes.select("nationkey").distinct()
         scoped = counts.join(affected, "nationkey", "semi")
-    w = Window.partitionBy("nationkey").orderBy(
-        F.desc("cnt"), F.asc("item_id")
-    )
-    recomputed = (
-        scoped.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= SOCIAL_TOP)
-        .select("nationkey", "rank", "item_id", "cnt")
-    )
+    recomputed = topk_per_key(
+        scoped, ["nationkey"], SOCIAL_TOP, F.desc("cnt"), F.asc("item_id")
+    ).select("nationkey", "rank", "item_id", "cnt")
     v = _ranked_merge(
         spark, lake.nation_top, affected, recomputed, ["nationkey"],
         SOCIAL_TOP, to_v, ["item_id", "cnt"], bootstrap,
@@ -455,55 +443,17 @@ def maintain_nation_top(spark: SparkSession, lake: RecoLake) -> int | None:
 
 
 def bootstrap_static(spark: SparkSession, sf_dir: str, lake: RecoLake):
-    """Build the likes-churn-invariant silver tables once: basket
-    similarity neighbors (from lineitem) and weighted trending scores
-    (from orders x lineitem) — q05's exact definitions."""
+    """Build the likes-churn-invariant silver tables once from q02's and
+    q05's silver builders, which the session's scratch cache shares:
+    basket similarity neighbors (q02's pair table) and weighted trending
+    scores."""
     if not snapshot_versions(lake.sim_top):
-        lineitem = _t(spark, sf_dir, "lineitem")
-        basket = lineitem.select(
-            F.col("l_orderkey").alias("user_id"),
-            F.col("l_partkey").alias("item_id"),
-        ).distinct()
-        sym = _pair_counts(basket)
-        both = sym.select(
-            F.col("i1").alias("src"), F.col("i2").alias("dst"), "n"
-        ).unionByName(
-            sym.select(F.col("i2").alias("src"), F.col("i1").alias("dst"), "n")
-        )
-        w = Window.partitionBy("src").orderBy(F.desc("n"), F.asc("dst"))
-        snapshot_write(
-            both.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= NEIGHBOR_TOP)
-            .select("src", "rank", "dst", "n"),
-            lake.sim_top, stats_cols=["src"],
-        )
+        sym = symmetrize_pairs(
+            _sim_pairs_m(spark, sf_dir), "l_partkey_1", "l_partkey_2"
+        ).withColumnRenamed("score", "n")
+        snapshot_write(_neighbor_top(sym), lake.sim_top, stats_cols=["src"])
     if not snapshot_versions(lake.trending):
-        lineitem = _t(spark, sf_dir, "lineitem")
-        orders = _t(spark, sf_dir, "orders")
-        plays = (
-            lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-            .filter(
-                F.col("o_orderdate")
-                >= F.lit(f"{TREND_CUTOFF} 00:00:00").cast("timestamp")
-            )
-            .groupBy(F.col("l_partkey").alias("item_id"))
-            .agg(F.count(F.lit(1)).alias("play_count"))
-        )
-        max_play = plays.agg(F.max("play_count").alias("m"))
-        snapshot_write(
-            plays.crossJoin(F.broadcast(max_play))
-            .select(
-                "item_id",
-                (F.lit(W_TREND) * F.col("play_count") / F.col("m")).alias(
-                    "score"
-                ),
-                "play_count",
-            )
-            .orderBy(F.desc("play_count"), F.asc("item_id"))
-            .limit(TREND_TOP)
-            .select("item_id", "score"),
-            lake.trending,
-        )
+        snapshot_write(_trending_m(spark, sf_dir), lake.trending)
 
 
 def _score_tail(
@@ -515,11 +465,11 @@ def _score_tail(
     nation_top: DataFrame,
     trending: DataFrame,
 ) -> DataFrame:
-    """q05's exact scoring tail over a (possibly user-restricted) scope:
-    weighted fan-out candidates -> ONE user_id-keyed sum -> anti-join
-    already-liked -> top-RECO_K window. Identical operators and constants
-    to ``q05_hybrid_recommendations`` (reference_parity.py) — the oracle
-    pins the equivalence."""
+    """q05's candidate models over a (possibly user-restricted) scope,
+    read from the maintained neighbor and leaderboard tables, scored by
+    the shared tail (``operators/hybrid.py::hybrid_top_k``) with q05's
+    constants — the q142 oracle pins the equivalence. Returns
+    (user_id, rank, item_id, score)."""
     neighbors = cf_top.select(
         "src", "dst", (F.lit(W_CF) * F.col("n")).alias("score")
     ).unionByName(
@@ -540,22 +490,9 @@ def _score_tail(
     )
     active = likes_scoped.select("user_id").distinct()
     trend_cand = active.crossJoin(F.broadcast(trending))
-    scored = (
-        item_cand.unionByName(social_cand)
-        .unionByName(trend_cand)
-        .repartition(F.col("user_id"))
-        .groupBy("user_id", "item_id")
-        .agg(rnd(F.sum("score"), 6).alias("score"))
-    )
-    filtered = scored.join(
-        likes_scoped, ["user_id", "item_id"], "left_anti"
-    )
-    w = Window.partitionBy("user_id").orderBy(F.desc("score"), F.asc("item_id"))
-    return (
-        filtered.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= RECO_K)
-        .select("user_id", "rank", "item_id", "score")
-    )
+    return hybrid_top_k(
+        [item_cand, social_cand, trend_cand], likes_scoped, RECO_K
+    ).select("user_id", "rank", "item_id", "score")
 
 
 def maintain_gold(

@@ -7,17 +7,19 @@ enforced by tests/test_music_domain.py against DuckDB oracles over seeded
 fixtures (FIXTURES.md §9 golden shapes).
 
 Scale design mirrors the catalog queries: canonical `<` pair self-joins
-(never `!=`), distinct-before-self-join, neighbor truncation before the
-per-user fan-out, broadcast dims, single final aggregate for the hybrid
-union (sum associativity), anti-join exclusion last.
+(never `!=`), distinct-before-self-join, broadcast dims, and the hybrid
+scorer's shared tail (``operators/hybrid.py``): one aggregate over the
+candidate union (sum associativity) that also drops the already-liked
+tracks.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from music_recommendation_service_spark.functions import rnd_sql
+from music_recommendation_service_spark.operators.hybrid import hybrid_top_k
 from music_recommendation_service_spark.operators.pairs import (
     cooccurrence_pairs,
     symmetrize_pairs,
@@ -147,8 +149,8 @@ def hybrid_recommendations(
         sym = symmetrize_pairs(pairs, t1, t2)
         return likes.join(sym, likes.track_id == sym.src).select(
             "user_id",
-            F.col("dst").alias("cand_track"),
-            (F.lit(weight) * F.col("score")).alias("s"),
+            F.col("dst").alias("item_id"),
+            (F.lit(weight) * F.col("score")).alias("score"),
         )
 
     cf_cand = model_cand(cf_pairs, "track_id_1", "track_id_2", W_CF)
@@ -156,36 +158,23 @@ def hybrid_recommendations(
 
     social_cand = (
         follows.join(likes, follows.user_id_b == likes.user_id)
-        .groupBy(F.col("user_id_a").alias("user_id"), F.col("track_id").alias("cand_track"))
-        .agg((F.lit(W_SOCIAL) * F.count(F.lit(1))).alias("s"))
+        .groupBy(F.col("user_id_a").alias("user_id"), F.col("track_id").alias("item_id"))
+        .agg((F.lit(W_SOCIAL) * F.count(F.lit(1))).alias("score"))
     )
 
     max_play = trending.agg(F.max("listen_count").alias("m"))
     trend_norm = trending.crossJoin(F.broadcast(max_play)).select(
-        F.col("track_id").alias("cand_track"),
-        (F.lit(W_TREND) * F.col("listen_count") / F.col("m")).alias("s"),
+        F.col("track_id").alias("item_id"),
+        (F.lit(W_TREND) * F.col("listen_count") / F.col("m")).alias("score"),
     )
     active = likes.select("user_id").distinct()
     trend_cand = active.crossJoin(F.broadcast(trend_norm))
 
-    scored = (
-        cf_cand.unionByName(sim_cand)
-        .unionByName(social_cand)
-        .unionByName(trend_cand)
-        .groupBy("user_id", "cand_track")
-        .agg(F.round(F.sum("s") + F.lit(1e-9), 6).alias("score"))
-    )
-    filtered = scored.join(
-        likes.withColumnRenamed("track_id", "cand_track"),
-        ["user_id", "cand_track"],
-        "left_anti",
-    )
-    w = Window.partitionBy("user_id").orderBy(F.desc("score"), F.asc("cand_track"))
-    return (
-        filtered.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("user_id", F.col("cand_track").alias("track_id"), "score", "rank")
-    )
+    return hybrid_top_k(
+        [cf_cand, sim_cand, social_cand, trend_cand],
+        likes.withColumnRenamed("track_id", "item_id"),
+        k,
+    ).select("user_id", F.col("item_id").alias("track_id"), "score", "rank")
 
 
 # ---------------------------------------------------------------------------

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from music_recommendation_service_spark.functions import rnd
+from music_recommendation_service_spark.operators.hybrid import hybrid_top_k
 from music_recommendation_service_spark.operators.pairs import (
     cooccurrence_pairs,
     symmetrize_pairs,
@@ -241,6 +241,43 @@ def _sim_pairs_m(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _trending_m(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Silver trending dim: the TREND_TOP items by plays since TREND_CUTOFF,
+    scored W_TREND * plays / max(plays) (A6); q05's model and q142's
+    static ``trending`` table.
+
+    plays feeds TWO consumers (the max-normalizer subquery and the ranked
+    list itself); inline it executed the lineitem+orders join+aggregate
+    once per consumer — the plan carried two full fact scans. It is
+    O(items) rows at every scale, so one scratch materialization serves
+    both (guide §2.1), and the final 20-row trending dim is itself a
+    silver artifact warm runs re-read instead of re-rank."""
+    from music_recommendation_service_spark.sources.writers import scratch_materialize
+
+    orders = _t(spark, sf_dir, "orders")
+    lineitem = _t(spark, sf_dir, "lineitem")
+    plays = scratch_materialize(
+        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
+        .filter(F.col("o_orderdate") >= F.lit(f"{TREND_CUTOFF} 00:00:00").cast("timestamp"))
+        .groupBy(F.col("l_partkey").alias("item_id"))
+        .agg(F.count(F.lit(1)).alias("play_count")),
+        "q05_plays",
+    )
+    max_play = plays.agg(F.max("play_count").alias("m"))
+    return scratch_materialize(
+        plays.crossJoin(F.broadcast(max_play))
+        .select(
+            "item_id",
+            (F.lit(W_TREND) * F.col("play_count") / F.col("m")).alias("score"),
+            "play_count",
+        )
+        .orderBy(F.desc("play_count"), F.asc("item_id"))
+        .limit(TREND_TOP)
+        .select("item_id", "score"),
+        "q05_trending",
+    )
+
+
 # ---------------------------------------------------------------------------
 # q04 — likes analysis (analyze_listening_data.py:12-34; U1,J4,J5,P7,A3):
 # per-user total likes vs likes on "relevant" items (items that appear in a
@@ -433,8 +470,6 @@ def q04_likes_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q05_hybrid_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The serving layer's weighted 4-model scorer as pure DataFrame ops."""
     customer = _t(spark, sf_dir, "customer")
-    orders = _t(spark, sf_dir, "orders")
-    lineitem = _t(spark, sf_dir, "lineitem")
     # likes feeds six operators below. Measured at sf0.1: persist() is a NET
     # LOSS (13s -> 21s; the cached InMemoryRelation hides source stats from
     # AQE, flipping downstream broadcast joins to sort-merge), while a
@@ -558,33 +593,7 @@ def q05_hybrid_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Trending: recent play counts normalized by the max (A6), top-N items
     # broadcast to every active user (the reference adds trending tracks to
     # every candidate pool, RecommendationService.cs:85-94).
-    #
-    # plays feeds TWO consumers (the max-normalizer subquery and the ranked
-    # list itself); inline it executed the lineitem+orders join+aggregate
-    # once per consumer — the plan carried two full fact scans. It is
-    # O(items) rows at every scale, so one scratch materialization serves
-    # both (guide §2.1), and the final 20-row trending dim is itself a
-    # silver artifact warm runs re-read instead of re-rank.
-    plays = scratch_materialize(
-        lineitem.join(orders, lineitem.l_orderkey == orders.o_orderkey)
-        .filter(F.col("o_orderdate") >= F.lit(f"{TREND_CUTOFF} 00:00:00").cast("timestamp"))
-        .groupBy(F.col("l_partkey").alias("item_id"))
-        .agg(F.count(F.lit(1)).alias("play_count")),
-        "q05_plays",
-    )
-    max_play = plays.agg(F.max("play_count").alias("m"))
-    trending = scratch_materialize(
-        plays.crossJoin(F.broadcast(max_play))
-        .select(
-            "item_id",
-            (F.lit(W_TREND) * F.col("play_count") / F.col("m")).alias("score"),
-            "play_count",
-        )
-        .orderBy(F.desc("play_count"), F.asc("item_id"))
-        .limit(TREND_TOP)
-        .select("item_id", "score"),
-        "q05_trending",
-    )
+    trending = _trending_m(spark, sf_dir)
     # active_users is O(customers) rows and otherwise re-runs a distinct
     # exchange over likes every execution — the fourth and last bounded
     # silver dim of the scorer (round-13 interleaved A/B: ~0.2s/run).
@@ -593,32 +602,8 @@ def q05_hybrid_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     trend_cand = active_users.crossJoin(F.broadcast(trending))
 
-    # The candidate keys are nearly unique (measured at sf0.1: 8.0M candidate
-    # rows -> 6.76M distinct (user, item) groups, a 1.18:1 reduction), so the
-    # default partial->shuffle->final aggregation buys nothing map-side and
-    # pays TWO multi-million-row shuffles: one on (user, item) for the agg,
-    # another on user for the ranking window. Hash-partitioning on user_id
-    # alone satisfies the clustered-distribution requirement of BOTH (equal
-    # (user, item) implies equal user), so one explicit repartition folds
-    # agg + window into a single shuffle; AQE can still coalesce it. At
-    # 100 TB user_id is also the natural serving shard key, and per-user
-    # candidate counts are bounded by |likes_u| * 2*NEIGHBOR_TOP +
-    # SOCIAL_TOP + TREND_TOP, so no hot partition can form.
-    #
-    # Already-liked exclusion (J8) rides the SAME union/shuffle/aggregate as
-    # the scoring instead of a LEFT ANTI join: each likes row joins the
-    # candidate stream once with score +0.0 and liked=1, and groups whose
-    # max(liked)=1 are filtered after the aggregate. Equivalence is exact —
-    # likes is distinct on (user_id, item_id), so a group carries the marker
-    # iff the pair is liked (the anti-join predicate), and x + 0.0 == x
-    # bit-exactly for the non-negative partial sums here, so surviving
-    # groups' sums are bit-identical to the anti-join form (verified:
-    # exceptAll empty both ways at sf0.1 + oracle hash at all SFs). The win
-    # (round-13 A/B: ~1.0s of the 5.46 -> 2.77s chain): the optimizer pushed
-    # the anti-join below the aggregate AND the union, building the O(likes)
-    # broadcast hash relation once per union branch and probing every one of
-    # the 8M candidate rows, where the union form adds only |likes| skinny
-    # rows to a shuffle that already moves 8M.
+    # Scoring: the shared tail (operators/hybrid.py) sums the candidates,
+    # drops liked items and ranks in one user_id shuffle.
     #
     # Reduce width (guide §2.2/§5, measured at sf1): with the width
     # inherited from spark.sql.shuffle.partitions (= cores locally), the
@@ -640,6 +625,7 @@ def q05_hybrid_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     likes_rows = rows_in_files(likes)
     cust_rows = rows_in_files(customer)
+    n_score = None  # non-local scratch: keep the AQE-adjustable width
     if likes_rows is not None and cust_rows is not None:
         est_cand = likes_rows * 2 * NEIGHBOR_TOP + cust_rows * (
             SOCIAL_TOP + TREND_TOP
@@ -647,29 +633,6 @@ def q05_hybrid_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_score = max(
             spark.sparkContext.defaultParallelism, -(-est_cand // 250_000)
         )
-        repart_args = (n_score, F.col("user_id"))
-    else:  # non-local scratch: keep the AQE-adjustable keyed repartition
-        repart_args = (F.col("user_id"),)
-    scored = (
-        item_cand.withColumn("liked", F.lit(0))
-        .unionByName(social_cand.withColumn("liked", F.lit(0)))
-        .unionByName(trend_cand.withColumn("liked", F.lit(0)))
-        .unionByName(
-            likes.select(
-                "user_id",
-                "item_id",
-                F.lit(0.0).alias("score"),
-                F.lit(1).alias("liked"),
-            )
-        )
-        .repartition(*repart_args)
-        .groupBy("user_id", "item_id")
-        .agg(rnd(F.sum("score"), 6).alias("score"), F.max("liked").alias("liked"))
-    )
-    filtered = scored.filter(F.col("liked") == 0).drop("liked")
-    w = Window.partitionBy("user_id").orderBy(F.desc("score"), F.asc("item_id"))
-    return (
-        filtered.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= RECO_K)
-        .select("user_id", "item_id", "score", "rank")
+    return hybrid_top_k(
+        [item_cand, social_cand, trend_cand], likes, RECO_K, partitions=n_score
     )

@@ -35,7 +35,7 @@ N_WAVE = int(os.environ.get("RECO_WAVE_ROWS", "1000"))
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     import random
 
     from pyspark.sql import functions as F

@@ -38,7 +38,7 @@ WAVE = int(os.environ.get("MAINT_WAVE", "10000"))
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     import tempfile
 
     from pyspark.sql import Window

@@ -43,7 +43,7 @@ SHARE = 10  # churn 1/SHARE of dim keys
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     from pyspark.sql import functions as F
 
     from music_recommendation_service_spark.session import get_spark

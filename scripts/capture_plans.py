@@ -48,7 +48,7 @@ def main() -> None:
     from music_recommendation_service_spark.plans import registry
     from music_recommendation_service_spark.session import get_spark
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     spark = get_spark("capture_plans")
     reg = registry()
     names = [n for n, q in sorted(reg.items()) if q.bench] + [

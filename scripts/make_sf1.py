@@ -59,7 +59,7 @@ SHIFTS: dict[str, dict[str, int]] = {
 
 
 def main() -> None:
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
+    os.environ.setdefault("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     from pyspark.sql import functions as F
 
     from music_recommendation_service_spark.session import get_spark

@@ -217,7 +217,7 @@ def test_serving_read_plan_is_scan_only(spark, lake):
     assert "Join" not in plan and "Exchange" not in plan, plan
 
 
-def test_q142_lake_lives_in_application_scratch(spark, monkeypatch):
+def test_q142_lake_lives_in_application_scratch(spark, monkeypatch, tmp_path):
     """q142 builds its maintained lake under this application's scratch
     path, which the process-exit hook removes (a temp dir of its own would
     outlive the process)."""
@@ -226,8 +226,11 @@ def test_q142_lake_lives_in_application_scratch(spark, monkeypatch):
         scratch_table_path,
     )
 
+    # a data dir no real q142 build uses: the stubbed build clears the
+    # lake root, which must not be the live lake a session's q142 serves
+    sf_dir = str(tmp_path / "sf")
     monkeypatch.setattr(ir, "_Q142_LAKES", {})
     monkeypatch.setattr(ir, "churn_waves", lambda spark, sf_dir, lake: iter(()))
     monkeypatch.setattr(ir, "reco_serve", lambda spark, lake: lake)
-    lake = ir.q142_incremental_hybrid_recommendations(spark, SF_DIR)
-    assert lake.root == scratch_table_path(spark, "reco_lake", SF_DIR)
+    lake = ir.q142_incremental_hybrid_recommendations(spark, sf_dir)
+    assert lake.root == scratch_table_path(spark, "reco_lake", sf_dir)

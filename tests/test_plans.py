@@ -13,12 +13,15 @@ import pytest
 from music_recommendation_service_spark.plans import registry
 
 
-def _plan(spark, sf_dir, name: str) -> str:
-    df = registry()[name].build(spark, sf_dir)
+def _explain(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def _plan(spark, sf_dir, name: str) -> str:
+    return _explain(registry()[name].build(spark, sf_dir))
 
 
 def test_q06_pushdown_and_pruning(spark, sf_dir):
@@ -47,15 +50,82 @@ def test_no_cartesian_in_hybrid(spark, sf_dir):
     assert "CartesianProduct" not in p
 
 
-def test_q05_single_shuffle_scoring_tail(spark, sf_dir):
-    """The candidate keys are nearly unique, so the scorer repartitions by
-    user_id once and the candidate aggregation AND the ranking window must
-    ride that ONE exchange — no second shuffle between agg and window
-    (plans/reference_parity.py scoring-tail note). The window sort must
-    also be group-limited, not global."""
+def _pipeline_gold(spark, sf_dir, tmp_path_factory):
+    from music_recommendation_service_spark.plans.music_domain import (
+        bronze_ingest,
+        collaborative_filtering,
+        hybrid_recommendations,
+        silver_weekly_trending,
+        song_similarity,
+    )
+    from tests.music_fixtures import build_fixtures
+
+    paths = build_fixtures(str(tmp_path_factory.mktemp("music_fixtures")))
+    dfs = {name: spark.read.parquet(p) for name, p in paths.items()}
+    bronze = bronze_ingest(dfs["fact_listening_events"], validate=False)
+    trending = silver_weekly_trending(
+        bronze, dfs["dim_songs"], "2024-02-08"
+    ).select("track_id", "listen_count")
+    return hybrid_recommendations(
+        bronze,
+        song_similarity(dfs["bridge_playlist_tracks"]),
+        collaborative_filtering(bronze),
+        dfs["graph_user_follows"],
+        trending,
+    )
+
+
+def _q142_score_tail(spark, sf_dir, tmp_path_factory):
+    from pyspark.sql import functions as F
+
+    from music_recommendation_service_spark.operators.pairs import (
+        symmetrize_pairs,
+    )
+    from music_recommendation_service_spark.operators.topk import topk_per_key
+    from music_recommendation_service_spark.plans.incremental_reco import (
+        _pair_counts,
+        _score_tail,
+    )
+    from music_recommendation_service_spark.plans.reference_parity import _likes
+    from music_recommendation_service_spark.sources.catalog import load_table
+
+    likes = _likes(spark, sf_dir)
+    customer = load_table(spark, sf_dir, "customer")
+    top = topk_per_key(
+        symmetrize_pairs(_pair_counts(likes), "i1", "i2", "n"),
+        ["src"], 20, F.desc("n"), F.asc("dst"),
+    )
+    nation_top = (
+        likes.join(customer, likes.user_id == customer.c_custkey)
+        .groupBy(F.col("c_nationkey").alias("nationkey"), "item_id")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    trending = spark.createDataFrame([(1, 0.2)], "item_id long, score double")
+    return _score_tail(spark, likes, customer, top, top, nation_top, trending)
+
+
+_SCORERS = {
+    "q05": lambda spark, sf_dir, _: registry()[
+        "q05_hybrid_recommendations"
+    ].build(spark, sf_dir),
+    "pipeline_gold": _pipeline_gold,
+    "q142_score_tail": _q142_score_tail,
+}
+
+
+@pytest.mark.parametrize("scorer", sorted(_SCORERS))
+def test_q05_single_shuffle_scoring_tail(spark, sf_dir, tmp_path_factory, scorer):
+    """The three hybrid recommenders share one scoring tail
+    (operators/hybrid.py): the candidate keys are nearly unique, so it
+    repartitions by user_id once and the candidate aggregation AND the
+    ranking window ride that ONE exchange — no second shuffle between agg
+    and window, and no anti-join: the liked pairs are dropped by the
+    aggregate itself. The window sort must also be group-limited, not
+    global."""
     import re
 
-    p = _plan(spark, sf_dir, "q05_hybrid_recommendations")
+    p = _explain(_SCORERS[scorer](spark, sf_dir, tmp_path_factory))
+    assert "LeftAnti" not in p
     tree = p.split("\n\n")[0]
     # walk the operator tree top-down: Window ... then HashAggregate, with
     # no shuffle Exchange between them (BroadcastExchange is fine)
