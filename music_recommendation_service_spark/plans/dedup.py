@@ -159,7 +159,7 @@ def _q27_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # at sf0.1 once spread across cores; no-op at scale where the scan is
     # already parallel — see spread_if_narrow). The REBALANCE before the
     # write lets AQE size the scratch files by bytes (guide §6.2): without
-    # it the 32-way compute lands 32 tiny files whose per-file open cost
+    # it the per-core compute lands one tiny file per core whose open cost
     # the four warm consumers then pay every run (measured +0.2-0.4s warm).
     spread_if_narrow(docs).createOrReplaceTempView("q27_docs")
     sh = scratch_materialize(
@@ -176,7 +176,9 @@ def _q27_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     # JOIN KEY is never a wasted exchange: if the planner shuffles the
     # pair join the exchange is reused as-is, and if it broadcasts, the
     # exchange is what gives the explode stage its width. The other three
-    # consumers (sizes, common, build side b) keep the plain scan.
+    # consumers (sizes, common, build side b) keep the plain scan. Left to
+    # AQE, on 4 cores at sf0.1 q27 warm went 2.58/2.85 -> 3.69/2.94 s
+    # (AB_pr9_sizing.json).
     sh.repartition(
         int(spark.conf.get("spark.sql.shuffle.partitions")), "s"
     ).createOrReplaceTempView("q27_sh_rep")
@@ -736,12 +738,14 @@ def _q131(
     # — but each row downstream pays an intersection-count verification,
     # so per-row cost, not bytes, should size the stage. The REPARTITION
     # hint re-spreads candidates across spark.sql.shuffle.partitions
-    # (env-parameterized) before the verification; hash-partitioning on
+    # (one per core) before the verification; hash-partitioning on
     # (d1, d2) lets the one-row-per-group aggregate barrier below reuse
     # the same exchange. The DuckDB oracle text is unchanged.
-    # The explicit partition count (the session's configured shuffle
-    # parallelism, env-parameterized — NOT a constant) keeps AQE from
-    # byte-coalescing the tiny candidate rows back to one partition.
+    # The explicit partition count (the session's shuffle parallelism, one
+    # task per core — NOT a constant) keeps AQE from byte-coalescing the
+    # tiny candidate rows back to one partition. Left to AQE, on 4 cores
+    # at sf0.1 q131 went 13.5/13.6 -> 19.8/17.9 s cold and 2.24/2.61 ->
+    # 5.78/4.81 s warm (AB_pr9_sizing.json).
     cand_tail = (
         f"""),
     cand AS (SELECT /*+ REPARTITION({n_part}, d1) */ * FROM cand0
@@ -999,9 +1003,11 @@ def _q135(
     # levenshtein verification each — AQE's byte-based coalescing collapses
     # them to 1-2 partitions, so re-spread before the verification joins
     # (same rationale as _q131; oracle text unchanged).
-    # Explicit count (the session's configured shuffle parallelism) so AQE
-    # cannot byte-coalesce the tiny candidate rows back to one partition —
-    # per-row verification cost, not bytes, sizes this stage.
+    # Explicit count (the session's shuffle parallelism) so AQE cannot
+    # byte-coalesce the tiny candidate rows back to one partition —
+    # per-row verification cost, not bytes, sizes this stage. Left to AQE,
+    # on 4 cores at sf0.1 q135 went 5.0/6.0 -> 6.9/6.2 s cold and
+    # 1.47/1.60 -> 2.20/1.72 s warm (AB_pr9_sizing.json).
     cand_tail = (
         f"""),
     cand AS (SELECT /*+ REPARTITION({n_part}, id1) */ * FROM cand0

@@ -606,21 +606,20 @@ def q05_hybrid_recommendations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # drops liked items and ranks in one user_id shuffle.
     #
     # Reduce width (guide §2.2/§5, measured at sf1): with the width
-    # inherited from spark.sql.shuffle.partitions (= cores locally), the
-    # one scoring exchange landed ~75M candidate rows on 32 reduce tasks —
+    # inherited from spark.sql.shuffle.partitions (= cores), the one
+    # scoring exchange landed ~75M candidate rows on 32 reduce tasks —
     # 2.4M-group hash-agg + window sort per task spilled 16 GB memory /
-    # 1.2 GB disk (the round-12 verdict's spill audit). AQE cannot widen a
-    # shuffle (coalescePartitions only merges, and parallelismFirst floors
-    # the TARGET SIZE at bytes/defaultParallelism), so the width is derived
-    # from the input itself: candidate rows are bounded by
+    # 1.2 GB disk (the round-12 verdict's spill audit). So the width is
+    # derived from the input itself: candidate rows are bounded by
     # |likes| * 2*NEIGHBOR_TOP + |customer| * (SOCIAL_TOP + TREND_TOP),
     # counted from parquet FOOTERS (no job), at 250k candidate rows per
-    # task (~25-60 MB of per-task aggregate state — no spill), floored at
-    # defaultParallelism. At sf0.1 the formula lands exactly on the floor
-    # (32 locally), so the local plan and bench are unchanged; at sf1 it
-    # widens to ~300 tasks and the spill disappears; at 100 TB it keeps
-    # growing with the data instead of pinning per-task state to
-    # corpus_size / cores.
+    # task (~25-60 MB of per-task aggregate state), floored at
+    # defaultParallelism: 362 tasks at sf1, growing with the data at
+    # 100 TB. AQE does not reproduce it. On 4 cores at sf1
+    # (AB_pr9_sizing.json) q05 ran 208 s cold / 63.5 s warm with this
+    # width; 217 / 103 s at the session width (1.3 GB spilled); 240 / 86 s
+    # from 128 initial partitions at AQE's 64 MB advisory size; 264 / 78 s
+    # from 512 at a 2 MB advisory size.
     from music_recommendation_service_spark.sources.catalog import rows_in_files
 
     likes_rows = rows_in_files(likes)

@@ -606,6 +606,12 @@ def q46_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no core count parallelizes (measured: q47's twin shape 4.2-4.9s ->
     # 1.0-1.3s; 8-vs-32-core ratio was 0.96, i.e. fully serial). At sf0.1
     # the slice fits and the all-broadcast plan is byte-identical.
+    #
+    # Session settings do not replace it. On 4 cores at sf1
+    # (AB_pr9_sizing.json) q46 ran 2.25-3.06 s warm with the guard, 5.31 s
+    # without it, and 3.70 s without it under a 10 MB static / 64 MB
+    # adaptive broadcast threshold, which also slowed q51 at sf0.1 by
+    # shuffling dimension joins it used to broadcast.
     if fits_broadcast(l, ncols=4) is False:
         co = co.hint("shuffle_hash")
     return (
@@ -665,7 +671,9 @@ def q47_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     # build — the 8-vs-32-core ratio was 0.96, fully serial); shuffled-hash
     # building the smaller c⋈o side runs 4.2-4.9s -> 1.0-1.3s interleaved
     # (rows exceptAll-equal both ways). sf0.1 fits and keeps the
-    # all-broadcast plan byte-identical.
+    # all-broadcast plan byte-identical. On 4 cores at sf1
+    # (AB_pr9_sizing.json): 3.22-3.42 s warm with the guard, 5.33 s
+    # without, 4.32 s without under the 10 MB / 64 MB thresholds.
     if fits_broadcast(l, ncols=4) is False:
         co = co.hint("shuffle_hash")
     return (
@@ -774,24 +782,12 @@ def q51_nation_trade_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation")
         )
     )
-    # Deliberate join strategy (guide §3.1): the nation-sliced supplier dim
-    # (2 of 25 nations, O(suppliers/12) rows at every scale) is the side to
-    # broadcast into the lineitem probe — the planner instead broadcast the
-    # FILTERED LINEITEM (and orders) from file-size estimates, a serial
-    # fact-sized hash build (sf1: 8-vs-32-core ratio 0.96). The supplier
-    # slice broadcasts only while raw supplier fits the threshold by footer
-    # count; past that both legs pin shuffled-hash. The orders leg gets the
-    # same q46/q47/q58 guard. At sf0.1 the supplier slice is ~800 rows vs
-    # the 170k-row lineitem broadcast it replaces — strictly smaller.
-    from music_recommendation_service_spark.sources.catalog import fits_broadcast
-
-    sn = s.join(n1, s.s_nationkey == F.col("n1_key"))
-    sn = F.broadcast(sn) if fits_broadcast(s, ncols=2) is not False else sn.hint(
-        "shuffle_hash"
-    )
+    # The nation-sliced supplier dim (2 of 25 nations, O(suppliers/12)
+    # rows at every scale) is the side to broadcast into the lineitem
+    # probe. The planner cannot see that from estimates: a join's size
+    # estimate is the product of its inputs', far above the threshold.
+    sn = F.broadcast(s.join(n1, s.s_nationkey == F.col("n1_key")))
     sl = sn.join(l, s.s_suppkey == l.l_suppkey)
-    if fits_broadcast(o, ncols=2) is False:
-        sl = sl.hint("shuffle_hash")
     return (
         sl.join(o, o.o_orderkey == l.l_orderkey)
         .join(c.join(n2, c.c_nationkey == F.col("n2_key")), o.o_custkey == c.c_custkey)

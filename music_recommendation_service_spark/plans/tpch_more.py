@@ -140,8 +140,6 @@ def q57_priority_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("tpch", "J1", "A1", "like"),
 )
 def q58_nation_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from music_recommendation_service_spark.sources.catalog import fits_broadcast
-
     l = _t(spark, sf_dir, "lineitem")
     p = F.broadcast(
         _t(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
@@ -149,14 +147,6 @@ def q58_nation_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = F.broadcast(_t(spark, sf_dir, "supplier"))
     n = F.broadcast(_t(spark, sf_dir, "nation"))
     o = _t(spark, sf_dir, "orders")
-    # lineitem ⋈ orders is the one fact-fact leg: when orders' 2-column
-    # slice exceeds the broadcast threshold by footer count (the planner's
-    # file-size estimate undercounts the in-memory hash relation and
-    # serially builds it — the q46/q47 pattern), pin shuffled-hash with
-    # orders as the per-partition build side. sf0.1 fits (~10 MB) and the
-    # plan is byte-identical.
-    if fits_broadcast(o, ncols=2) is False:
-        o = o.hint("shuffle_hash")
     profit = F.col("l_extendedprice") * (1 - F.col("l_discount")) - F.lit(
         0.05
     ) * F.col("p_retailprice") * F.col("l_quantity")

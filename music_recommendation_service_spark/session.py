@@ -2,18 +2,20 @@
 
 Replaces the reference's session bootstrap (``pyspark_jobs/spark_utils.py:20-39``
 builds a session against a standalone master with Delta + S3A config). Here the
-session is cluster-agnostic: master/shuffle-partitions come from the
-environment so the same code runs on a laptop, in tests (``tests/conftest.py``
-sets 4 cores) and on a large cluster unchanged. With ``SPARK_GRAFT_CPUS``
-unset the session is ``local[*]`` with 32 shuffle partitions.
+session is cluster-agnostic and sized by the host it lands on: the master
+comes from the environment (``tests/conftest.py`` sets 4 cores), the shuffle
+width from the session's own parallelism and the driver heap from the host's
+memory, so the same code runs on a laptop, in tests and on a cluster
+unchanged. With ``SPARK_GRAFT_CPUS`` unset the session is ``local[*]``.
 
 Scale notes
 -----------
 - AQE on: runtime partition coalescing, skew-join splitting, and dynamic
   join-strategy switching are the first line of defense at 100 TB.
-- ``spark.sql.shuffle.partitions`` defaults to an env-provided core count
-  locally; on a real cluster leave it to AQE's coalescing from a high initial
-  value (set SPARK_GRAFT_SHUFFLE_PARTITIONS).
+- ``spark.sql.shuffle.partitions`` is the session's ``defaultParallelism``
+  (``local[N]`` cores, or a cluster's executor cores), set after the session
+  starts. A high ``initialPartitionNum`` and a lower static broadcast
+  threshold lost to the plans' own sizing code (``AB_pr9_sizing.json``).
 - Arrow enabled for the Pandas-UDF slow path (vectorized batches, not rows).
 - Session timezone pinned UTC so date/timestamp semantics are deterministic
   across engines (the DuckDB oracle also runs in UTC).
@@ -52,11 +54,30 @@ from pyspark.sql import SparkSession
 CODEGEN_CACHE_ENTRIES = 4096
 
 
-def _env_int(name: str, default: int) -> int:
-    try:
-        return int(os.environ.get(name, "") or default)
-    except ValueError:
-        return default
+# Share of the host's memory given to the driver heap when
+# SPARK_GRAFT_DRIVER_MEM is unset; the rest is headroom for the Python
+# workers, the JVM's off-heap memory and the page cache.
+DRIVER_HEAP_SHARE = 0.6
+
+
+def default_driver_memory() -> str:
+    """Driver heap for a session that names none: DRIVER_HEAP_SHARE of the
+    memory this process may use, its cgroup's limit (v2 ``memory.max``, v1
+    ``memory.limit_in_bytes``) when one is set, else physical RAM."""
+    limit = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    for path in (
+        "/sys/fs/cgroup/memory.max",
+        "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+    ):
+        try:
+            with open(path) as f:
+                value = f.read().strip()
+        except OSError:
+            continue
+        if value.isdigit():  # v2 writes "max" for no limit
+            limit = min(limit, int(value))
+            break
+    return f"{int(limit * DRIVER_HEAP_SHARE) >> 20}m"
 
 
 def _delta_jars_available() -> bool:
@@ -101,22 +122,18 @@ def get_spark(app_name: str = "music_recommendation_service_spark") -> SparkSess
     """Build (or reuse) the engine session.
 
     Environment overrides:
-      SPARK_GRAFT_MASTER  — master URL (default ``local[N]`` with
-                            N = SPARK_GRAFT_CPUS or ``*``).
-      SPARK_GRAFT_CPUS    — local core count, also used for shuffle
-                            partition sizing in local mode.
-      SPARK_GRAFT_SHUFFLE_PARTITIONS — explicit shuffle partition count.
+      SPARK_GRAFT_MASTER     — master URL (default ``local[N]`` with
+                               N = SPARK_GRAFT_CPUS or ``*``).
+      SPARK_GRAFT_CPUS       — local core count.
+      SPARK_GRAFT_DRIVER_MEM — driver heap (default
+                               :func:`default_driver_memory`).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus or '*'}]")
-    shuffle = _env_int(
-        "SPARK_GRAFT_SHUFFLE_PARTITIONS", int(cpus) if cpus.isdigit() else 32
-    )
 
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -129,7 +146,10 @@ def get_spark(app_name: str = "music_recommendation_service_spark") -> SparkSess
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
     )
     if _delta_jars_available():
         # Delta session wiring (reference parity: ``spark_utils.py:33-37``
@@ -149,6 +169,11 @@ def get_spark(app_name: str = "music_recommendation_service_spark") -> SparkSess
         )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    # One shuffle task per core the session can run: known only once the
+    # master is up (local[*], local[N] or a cluster's executors).
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism)
+    )
     try:
         # format("snapshot") everywhere the engine session reaches
         # (sources/datasource.py). Guarded: the Python DataSource API

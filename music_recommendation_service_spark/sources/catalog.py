@@ -121,7 +121,14 @@ def spread_if_narrow(df: DataFrame) -> DataFrame:
     converts through the RDD path whose partitioning can disagree with
     the SQL scan's openCost file packing (measured at sf1: a 32-file
     scratch read reported 32 RDD partitions while the SQL stage ran 10
-    tasks, leaving the downstream pair-explode 3x under-parallel)."""
+    tasks, leaving the downstream pair-explode 3x under-parallel).
+
+    Without it, on 4 cores at sf0.1 (``AB_pr9_sizing.json``), cold and
+    warm seconds went: q27 10.2/10.7 -> 20.5/15.7 and 2.58/2.85 ->
+    5.63/3.76; q102 4.1/4.8 -> 6.9/7.5 and 1.12/1.26 -> 1.70/1.97; q135
+    5.0/6.0 -> 6.2/6.3 and 1.47/1.60 -> 1.99/1.75 (q131: no-op there).
+    The sf0.1 corpus is one parquet row group, the unit parquet scans
+    split by, so split-size settings cannot widen that scan."""
     sc = df.sparkSession.sparkContext
     try:
         splits = (

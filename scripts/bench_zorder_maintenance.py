@@ -22,7 +22,8 @@ with the confounders separated:
                 files whose g-rectangle overlaps it
 
 Run: python scripts/bench_zorder_maintenance.py   (env: MAINT_ROWS/GROUPS,
-SPARK_GRAFT_SHUFFLE_PARTITIONS to set the plain view's file count)
+SPARK_GRAFT_CPUS to set the session's cores, and with them the shuffle width
+that sets the plain view's file count)
 """
 
 from __future__ import annotations

@@ -35,17 +35,21 @@ def main() -> int:
     import __spark_entry__ as E
     from tests.oracle import _canon, duck_run
 
+    from music_recommendation_service_spark.session import default_driver_memory
+
     def make_session():
-        # The driver contract itself is vanilla; the artifact sweep adds
-        # driver memory because it COLLECTS full result sets (q02 at sf0.1
-        # is 1.2M rows) — the default 1g driver dies mid-sweep otherwise.
+        # The driver contract itself is vanilla; the artifact sweep runs on
+        # the cores this process may use and adds the engine's host-derived
+        # driver heap because it COLLECTS full result sets (q02 at sf0.1 is
+        # 1.2M rows) — the default 1g driver dies mid-sweep otherwise.
+        cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
         s = (
-            SparkSession.builder.master(
-                f"local[{os.environ.get('SPARK_GRAFT_CPUS', 8)}]"
-            )
+            SparkSession.builder.master(f"local[{cpus}]")
             .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.sql.shuffle.partitions", "32")
-            .config("spark.driver.memory", os.environ.get("SWEEP_DRIVER_MEM", "12g"))
+            .config(
+                "spark.driver.memory",
+                os.environ.get("SWEEP_DRIVER_MEM") or default_driver_memory(),
+            )
             .getOrCreate()
         )
         s.sparkContext.setLogLevel("ERROR")

@@ -232,7 +232,11 @@ def test_scratch_materialize_reuses_within_session(spark, sf_dir):
 def test_scratch_removed_at_process_exit(tmp_path):
     """A session in its own process leaves no scratch behind when it exits:
     keyed, unkeyed (reuse=False), async-written and per-query fixture
-    directories all go, while another application's directory stays."""
+    directories all go, while another application's directory stays.
+
+    The same session runs with no sizing variable set, so it also pins the
+    host-derived defaults: one shuffle partition per core the session can
+    run, and a driver heap that fits in the host's memory."""
     import os
     import subprocess
     import sys
@@ -254,13 +258,13 @@ scratch_materialize(df, "unkeyed", reuse=False).count()
 scratch_materialize_async(df.where("k = 1"), "async")
 df.write.parquet(scratch_table_path(spark, "fixture", "/no/such/sf"))
 print(sorted(os.listdir(sys.argv[1])))
+print("SIZING", spark.conf.get("spark.sql.shuffle.partitions"),
+      spark.sparkContext.defaultParallelism,
+      spark.sparkContext.getConf().get("spark.driver.memory"))
 """
-    env = dict(
-        os.environ,
-        SPARK_GRAFT_SCRATCH=str(tmp_path),
-        SPARK_GRAFT_CPUS="2",
-        SPARK_GRAFT_DRIVER_MEM="1g",
-    )
+    sizing_vars = ("SPARK_GRAFT_MASTER", "SPARK_GRAFT_CPUS", "SPARK_GRAFT_DRIVER_MEM")
+    env = {k: v for k, v in os.environ.items() if k not in sizing_vars}
+    env["SPARK_GRAFT_SCRATCH"] = str(tmp_path)
     r = subprocess.run(
         [sys.executable, "-c", script, str(root)],
         cwd=Path(__file__).resolve().parents[1],
@@ -270,6 +274,13 @@ print(sorted(os.listdir(sys.argv[1])))
     for name in ("keyed-", "unkeyed-", "fixture-"):
         assert name in r.stdout, r.stdout  # written while the session lived
     assert os.listdir(root) == [foreign.name]
+
+    sizing = next(ln for ln in r.stdout.splitlines() if ln.startswith("SIZING"))
+    _, partitions, parallelism, heap = sizing.split()
+    assert partitions == parallelism
+    units = {"k": 2**10, "m": 2**20, "g": 2**30, "t": 2**40}
+    heap_bytes = int(heap[:-1]) * units[heap[-1].lower()]
+    assert heap_bytes <= os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
 
 
 def test_scratch_lookup_and_async_materialize(spark, sf_dir):
