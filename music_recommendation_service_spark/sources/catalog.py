@@ -200,15 +200,6 @@ def fits_broadcast(df: DataFrame, ncols: int) -> bool | None:
     return est <= thr
 
 
-def _delta_available() -> bool:
-    try:  # pragma: no cover - environment probe
-        import delta  # noqa: F401
-
-        return True
-    except Exception:
-        return False
-
-
 class Catalog:
     """Name -> DataFrame resolution over a lake directory of one file/table."""
 

@@ -43,6 +43,7 @@ rewritten; everything else is carried into the new version by reference.
 
 from __future__ import annotations
 
+import datetime as _dt
 import functools
 import json
 import os
@@ -52,6 +53,8 @@ from typing import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from music_recommendation_service_spark.sources.xxhash64 import bloom_positions
 
 
 class SnapshotFS:
@@ -494,6 +497,14 @@ def _read_manifest(path: str, version: int) -> dict:
             f"{path} version {version} needs protocol reader {need}; this "
             f"engine implements {_READER_VERSION} — upgrade before reading"
         )
+    ck = m.get("files_ckpt")
+    if ck is not None and ck.get("layout") != "typed":
+        # the JSON-string checkpoint layout is no longer read
+        raise UnsupportedSnapshotProtocolError(
+            f"{path} version {version} points at a "
+            f"{ck.get('layout', 'json')!r}-layout checkpoint; this engine "
+            f"reads only the typed layout"
+        )
     return m
 
 
@@ -620,9 +631,9 @@ def _ckpt_typed_columns(files: list[dict]):
     style): per stats column a has/min/max triple in its native type, the
     partition tuple as string columns, dv as ref+n. Returns
     ``(columns, layout_meta)`` or ``None`` when any entry shape is
-    irregular — mixed-typed stats after widening, unexpected dv keys,
-    varying partition key sets — in which case the caller falls back to
-    the JSON-string layout (always correct, slower to resolve)."""
+    irregular — mixed-typed stats after widening, int64 overflow,
+    unexpected dv keys, varying partition key sets — in which case the
+    file list stays inline in the JSON manifest (always exact)."""
     import pyarrow as pa
 
     stats_cols: list[str] = []
@@ -676,7 +687,7 @@ def _ckpt_typed_columns(files: list[dict]):
             cols[f"s{i}_min"] = pa.array(mins, t)
             cols[f"s{i}_max"] = pa.array(maxs, t)
         except (pa.ArrowInvalid, OverflowError):
-            return None  # e.g. int64 overflow: JSON layout handles it
+            return None  # e.g. int64 overflow: the list stays inline
         cols[f"s{i}_has"] = pa.array(has, pa.bool_())
     cols["part_null"] = pa.array(
         [e.get("partition") is None for e in files], pa.bool_()
@@ -709,67 +720,30 @@ def _ckpt_typed_columns(files: list[dict]):
     return cols, {"stats_cols": stats_cols, "part_cols": part_cols or []}
 
 
-def _write_parquet_checkpoint(path: str, files: list[dict], version: int) -> dict:
-    """Serialize ``files`` to a parquet checkpoint under
-    ``_snapshots/checkpoints/`` and return the ``files_ckpt`` pointer.
-
-    Preferred layout is TYPED (``layout: "typed"``): stats min/max in
-    native parquet types (Delta's ``stats_parsed``), partition values and
-    dv refs as dedicated columns — cold resolve then reconstructs entries
-    from typed arrays with NO JSON parsing of the payload. Irregular entry
-    shapes (mixed-typed stats after widening, unknown dv keys) fall back
-    to the JSON-string layout (``layout: "json"`` — Delta's ``add.stats``
-    string form), which is always exact. Both layouts JSON round-trip
-    values, so fidelity matches the inline-JSON manifest form. The file
-    name carries a uuid: a commit-race loser's checkpoint becomes an
-    unreferenced orphan (vacuum sweeps it), never a collision."""
+def _write_parquet_checkpoint(
+    path: str, files: list[dict], version: int
+) -> dict | None:
+    """Serialize ``files`` to a TYPED parquet checkpoint under
+    ``_snapshots/checkpoints/`` and return the ``files_ckpt`` pointer:
+    stats min/max in native parquet types (Delta's ``stats_parsed``),
+    partition values and dv refs as dedicated columns — cold resolve then
+    reconstructs entries from typed arrays with NO JSON parsing of the
+    payload. Returns None, writing nothing, when ``_ckpt_typed_columns``
+    cannot hold the list (irregular entry shapes); the caller keeps it
+    inline. The file name carries a uuid: a commit-race loser's checkpoint
+    becomes an unreferenced orphan (vacuum sweeps it), never a
+    collision."""
     import io
     import uuid as _uuid
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    ptr: dict = {"count": len(files)}
     typed = _ckpt_typed_columns(files)
-    if typed is not None:
-        cols, meta = typed
-        ptr["layout"] = "typed"
-        ptr.update(meta)
-    else:
-
-        def j(e, k):
-            v = e.get(k)
-            return json.dumps(v, sort_keys=True) if v is not None else None
-
-        ptr["layout"] = "json"
-        cols = {
-            "path": pa.array([e["path"] for e in files], pa.string()),
-            "rows": pa.array([e.get("rows") for e in files], pa.int64()),
-            "stats": pa.array([j(e, "stats") for e in files], pa.string()),
-            "partition": pa.array(
-                [j(e, "partition") for e in files], pa.string()
-            ),
-            "dv": pa.array([j(e, "dv") for e in files], pa.string()),
-            "bloom_ref": pa.array(
-                [e.get("bloom_ref") for e in files], pa.string()
-            ),
-            "extra": pa.array(
-                [
-                    json.dumps(
-                        {
-                            k: v
-                            for k, v in e.items()
-                            if k not in _CKPT_KNOWN_KEYS
-                        },
-                        sort_keys=True,
-                    )
-                    if set(e) - set(_CKPT_KNOWN_KEYS)
-                    else None
-                    for e in files
-                ],
-                pa.string(),
-            ),
-        }
+    if typed is None:
+        return None
+    cols, meta = typed
+    ptr: dict = {"count": len(files), "layout": "typed", **meta}
     buf = io.BytesIO()
     pq.write_table(pa.table(cols), buf, compression="zstd")
     rel = f"checkpoints/{version}-{_uuid.uuid4().hex[:12]}.parquet"
@@ -781,14 +755,12 @@ def _write_parquet_checkpoint(path: str, files: list[dict], version: int) -> dic
 
 
 def _read_parquet_checkpoint(path: str, ckpt: dict, table=None) -> list[dict]:
-    """Resolve a ``files_ckpt`` pointer back to FULL-FIDELITY manifest
-    entries. Key-set discipline mirrors the builders: ``path``/``rows``/
-    ``stats`` always present, optional keys only when non-null. The typed
-    layout rebuilds entries from native arrays with no payload JSON parse;
-    the json layout parses each JSON column in ONE batched ``json.loads``
-    (a single C-speed parse of a synthesized array), not one call per row.
-    Callers holding the cached Arrow handle pass it as ``table`` to skip
-    the re-read; consumers that need only path/partition/dv should use
+    """Resolve a typed ``files_ckpt`` pointer back to FULL-FIDELITY
+    manifest entries, rebuilt from native arrays with no payload JSON
+    parse. Key-set discipline mirrors the builders: ``path``/``rows``/
+    ``stats`` always present, optional keys only when non-null. Callers
+    holding the cached Arrow handle pass it as ``table`` to skip the
+    re-read; consumers that need only path/partition/dv should use
     ``_manifest_files_scan`` and never materialize full entries."""
     import io
 
@@ -797,43 +769,15 @@ def _read_parquet_checkpoint(path: str, ckpt: dict, table=None) -> list[dict]:
     if table is None:
         abs_p = os.path.join(_manifest_dir(path), ckpt["ref"])
         table = pq.read_table(io.BytesIO(_fs().read_bytes(abs_p)))
-    if ckpt.get("layout", "json") == "typed":
-        out = _decode_typed_ckpt_fast(table, ckpt)
-        if out is None:  # guard tripped (escapes/non-finite) or no orjson
-            out = _decode_typed_ckpt(table.to_pydict(), ckpt)
-    else:
-        out = _decode_json_ckpt(table.to_pydict())
+    out = _decode_typed_ckpt_fast(table, ckpt)
+    if out is None:  # guard tripped (escapes/non-finite) or no orjson
+        out = _decode_typed_ckpt(table.to_pydict(), ckpt)
     if len(out) != ckpt.get("count", len(out)):
         raise RuntimeError(
             f"parquet checkpoint {ckpt['ref']} at {path}: read "
             f"{len(out)} entries, manifest pins {ckpt['count']} — "
             f"truncated or corrupt checkpoint; refusing a partial file list"
         )
-    return out
-
-
-def _decode_json_ckpt(d: dict) -> list[dict]:
-    def batch(col: list) -> list:
-        return json.loads(
-            "[" + ",".join(x if x is not None else "null" for x in col) + "]"
-        )
-
-    stats_v = batch(d["stats"])
-    part_v = batch(d["partition"])
-    dv_v = batch(d["dv"])
-    extra_v = batch(d["extra"])
-    out = []
-    for i, p in enumerate(d["path"]):
-        e = {"path": p, "rows": d["rows"][i], "stats": stats_v[i]}
-        if part_v[i] is not None:
-            e["partition"] = part_v[i]
-        if dv_v[i] is not None:
-            e["dv"] = dv_v[i]
-        if d["bloom_ref"][i]:
-            e["bloom_ref"] = d["bloom_ref"][i]
-        if extra_v[i] is not None:
-            e.update(extra_v[i])
-        out.append(e)
     return out
 
 
@@ -1090,35 +1034,18 @@ def _manifest_files_scan(path: str, m: dict) -> list[dict]:
         return _manifest_files(path, m)
     t = _ckpt_table(path, m)
     out: list[dict] = [{"path": p} for p in t.column("path").to_pylist()]
-    if ck.get("layout") == "typed":
-        part_cols = ck.get("part_cols") or []
-        if part_cols:
-            pvals = [
-                t.column(f"p{j}").to_pylist() for j in range(len(part_cols))
-            ]
-            for e, pn, *pv in zip(
-                out, t.column("part_null").to_pylist(), *pvals
-            ):
-                if not pn:
-                    e["partition"] = dict(zip(part_cols, pv))
-        if t.column("dv_ref").null_count != len(out):
-            for e, r, n in zip(
-                out,
-                t.column("dv_ref").to_pylist(),
-                t.column("dv_n").to_pylist(),
-            ):
-                if r is not None:
-                    e["dv"] = {"ref": r} if n is None else {"ref": r, "n": n}
-    else:
-        for col in ("partition", "dv"):
-            if t.column(col).null_count == len(out):
-                continue
-            vals = t.column(col).to_pylist()
-            for i, e in enumerate(out):
-                if vals[i] is not None:
-                    v = json.loads(vals[i])
-                    if v is not None:
-                        e[col] = v
+    part_cols = ck.get("part_cols") or []
+    if part_cols:
+        pvals = [t.column(f"p{j}").to_pylist() for j in range(len(part_cols))]
+        for e, pn, *pv in zip(out, t.column("part_null").to_pylist(), *pvals):
+            if not pn:
+                e["partition"] = dict(zip(part_cols, pv))
+    if t.column("dv_ref").null_count != len(out):
+        for e, r, n in zip(
+            out, t.column("dv_ref").to_pylist(), t.column("dv_n").to_pylist()
+        ):
+            if r is not None:
+                e["dv"] = {"ref": r} if n is None else {"ref": r, "n": n}
     return out
 
 
@@ -1127,19 +1054,12 @@ def _ckpt_entry_keys(path: str, m: dict) -> set:
     dv ref identity) — two sidecar columns, no dict materialization; the
     history id chain's seed."""
     t = _ckpt_table(path, m)
-    paths = t.column("path").to_pylist()
-    if m["files_ckpt"].get("layout") == "typed":
-        refs = t.column("dv_ref").to_pylist()
-        return {
-            f"{p}@{r}" if r is not None else f"{p}@"
-            for p, r in zip(paths, refs)
-        }
-    dvs = t.column("dv").to_pylist()
-    out = set()
-    for p, d in zip(paths, dvs):
-        r = (json.loads(d) or {}).get("ref", "") if d is not None else ""
-        out.add(f"{p}@{r}")
-    return out
+    return {
+        f"{p}@{r}" if r is not None else f"{p}@"
+        for p, r in zip(
+            t.column("path").to_pylist(), t.column("dv_ref").to_pylist()
+        )
+    }
 
 
 def _ckpt_cmp_scalar(col_type, v):
@@ -1174,7 +1094,7 @@ def _manifest_files_pruned_in(
     per-value check runs on the survivors anyway). Returns a conservative
     superset or None when not applicable."""
     ck = m.get("files_ckpt")
-    if not ck or ck.get("layout") != "typed" or not vals:
+    if not ck or not vals:
         return None
     stats_cols = ck.get("stats_cols") or []
     if phys_col not in stats_cols:
@@ -1236,11 +1156,11 @@ def _manifest_files_pruned(
 
     Returns a conservative SUPERSET of the exact prune (semantics
     identical: callers re-apply ``_stats_may_contain`` on the survivors),
-    or None when not applicable — non-typed layout, no predicate on a
+    or None when not applicable — no checkpoint, no predicate on a
     stats column, or a type pairing the vectorized compare can't do
     exactly (caller falls back to the full resolve)."""
     ck = m.get("files_ckpt")
-    if not ck or ck.get("layout") != "typed" or not phys_predicates:
+    if not ck or not phys_predicates:
         return None
     stats_cols = ck.get("stats_cols") or []
     idx = {c: i for i, c in enumerate(stats_cols)}
@@ -1296,12 +1216,16 @@ def _maybe_parquet_checkpoint(path: str, manifest: dict, version: int) -> dict:
     checkpoint pays O(live files), and above the threshold that cost moves
     to a columnar sidecar. Readers lacking the feature must refuse
     (min_reader 3): their legacy fallback would list data dirs and
-    resurrect rewritten rows."""
+    resurrect rewritten rows. A list the typed layout cannot hold stays
+    inline."""
     files = manifest.get("files")
     if files is None or len(files) < _PARQUET_CHECKPOINT_MIN_FILES:
         return manifest
+    ptr = _write_parquet_checkpoint(path, files, version)
+    if ptr is None:
+        return manifest
     out = {k: v for k, v in manifest.items() if k != "files"}
-    out["files_ckpt"] = _write_parquet_checkpoint(path, files, version)
+    out["files_ckpt"] = ptr
     out["min_reader"] = 3
     return out
 
@@ -1362,13 +1286,17 @@ def _manifest_files(path: str, m: dict) -> list[dict]:
 
 
 # Per-file Bloom filters for point-lookup file skipping. Positions are
-# computed mod _BLOOM_M_MAX (a power of two) by the JVM on BOTH the write
-# and lookup paths (xxhash64 over the STRING form of the value, seeded per
-# hash function), then each file's filter is sized adaptively: the smallest
-# power of two >= _BLOOM_BITS_PER_VALUE * n_distinct, clamped to
-# [_BLOOM_M_MIN, _BLOOM_M_MAX]. Power-of-two sizing makes downsizing a pure
-# mask (x mod 2^j == (x mod 2^17) & (2^j - 1)), so ONE set of collected
-# positions serves every filter size, and a lookup literal hashes once.
+# xxhash64 over the STRING form of the value, seeded per hash function, mod
+# _BLOOM_M_MAX (a power of two): computed by the JVM on the write path
+# (_bloom_pos_expr) and natively for lookup literals
+# (xxhash64.bloom_positions, bit-identical — tests/test_xxhash64.py). A
+# literal whose string form the native hasher cannot reproduce gets no
+# positions and every file is read. Each file's filter is sized
+# adaptively: the smallest power of two >= _BLOOM_BITS_PER_VALUE *
+# n_distinct, clamped to [_BLOOM_M_MIN, _BLOOM_M_MAX]. Power-of-two sizing
+# makes downsizing a pure mask (x mod 2^j == (x mod 2^17) & (2^j - 1)), so
+# ONE set of collected positions serves every filter size, and a lookup
+# literal hashes once.
 # Filters live in a per-data-dir SIDECAR (_bloom.json), carried in the
 # manifest by reference — manifests stay O(files), not O(files x filter),
 # across versions, and vacuuming a data dir removes its sidecar with it.
@@ -1447,22 +1375,6 @@ def _bloom_may_contain(bloom: dict | None, positions: list[int]) -> bool:
     )
 
 
-def _bloom_literal_positions(spark: SparkSession, value) -> list[int] | None:
-    """The k MAX-modulus positions of a lookup literal, computed by the
-    SAME JVM expressions that built the file blooms (one 1-row local job —
-    a metadata-scale cost, and the only way hash parity cannot drift
-    between a Python reimplementation and Spark's xxhash64)."""
-    if value is None:
-        return None
-    row = (
-        spark.range(1)
-        .select(F.lit(value).alias("_v"))
-        .select(*[_bloom_pos_expr("_v", i).alias(f"_p{i}") for i in range(_BLOOM_K)])
-        .first()
-    )
-    return [int(row[f"_p{i}"]) for i in range(_BLOOM_K)]
-
-
 def _bloom_cols_in_use(path: str, cur: dict) -> list[str]:
     """Union of bloom-indexed columns (PHYSICAL names) across the current
     manifest's sidecars — rewrite paths preserve the table's bloom
@@ -1503,6 +1415,37 @@ def _entry_bloom(table_path: str, entry: dict, phys_col: str) -> dict | None:
     return (side.get(fname) or {}).get(phys_col)
 
 
+# Column types whose CAST(... AS STRING) a lookup literal reproduces when it
+# has the matching Python type. Any other pairing reads every file: an int
+# probing a DOUBLE column would hash "5" against files that hashed "5.0".
+_BLOOM_LIT_TYPES = {
+    "byte": int, "short": int, "integer": int, "long": int, "string": str,
+    "date": _dt.date, "timestamp": _dt.datetime, "timestamp_ntz": _dt.datetime,
+}
+
+
+def _lookup_positions_fn(m: dict | None):
+    """``positions(col, value)`` for lookups against manifest ``m``: the
+    bloom positions of literal ``value`` on logical column ``col``, or None
+    (read every file) when the literal's type does not match the column's
+    Spark type."""
+    fields = {
+        f["name"]: f["type"]
+        for f in json.loads((m or {}).get("schema") or "{}").get("fields", [])
+    }
+
+    def positions(col: str, value) -> list[int] | None:
+        t = fields.get(col)
+        want = _BLOOM_LIT_TYPES.get(t) if isinstance(t, str) else None
+        if want is None or not isinstance(value, want) or (
+            want is _dt.date and isinstance(value, _dt.datetime)
+        ):
+            return None
+        return bloom_positions(value, _BLOOM_M_MAX, _BLOOM_K)
+
+    return positions
+
+
 # Merge batches with at most this many DISTINCT keys get per-key candidate
 # refinement (stats point-tests + blooms) instead of relying on batch-wide
 # bounds alone; the refinement is driver-side python over files x keys, so
@@ -1529,51 +1472,28 @@ def _prune_candidates_by_keys(
     settles it); a dropped file provably holds none. Null key components
     skip their column's test (stats/bloom say nothing about nulls)."""
     phys = {c: _phys(mapping or {}, c) for c in key_cols}
-    pos_by_val: dict = {}
+    # bloom positions per key row and column, aligned with key_rows
     if any(e.get("bloom_ref") for e in candidates):
-        vals = sorted(
-            {r[c] for c in key_cols for r in key_rows if r[c] is not None}
-        )
-        if vals:
-            row = (
-                spark.range(1)
-                .select(
-                    F.array(
-                        *[
-                            F.struct(
-                                *[
-                                    _bloom_pos_expr_lit(v, i).alias(f"_p{i}")
-                                    for i in range(_BLOOM_K)
-                                ]
-                            )
-                            for v in vals
-                        ]
-                    ).alias("_a")
-                )
-                .first()["_a"]
-            )
-            pos_by_val = {
-                v: [int(s[f"_p{i}"]) for i in range(_BLOOM_K)]
-                for v, s in zip(vals, row)
-            }
+        positions = _lookup_positions_fn(_latest_manifest(path))
+        row_pos = [{c: positions(c, r[c]) for c in key_cols} for r in key_rows]
+    else:
+        row_pos = [{}] * len(key_rows)
 
-    def col_may_hold(e: dict, c: str, v) -> bool:
+    def col_may_hold(e: dict, c: str, v, pos) -> bool:
         if v is None:
             return True
         if not _stats_may_contain(e.get("stats"), phys[c], v, v):
             return False
-        if v in pos_by_val:
-            return _bloom_may_contain(
-                _entry_bloom(path, e, phys[c]), pos_by_val[v]
-            )
-        return True
+        return pos is None or _bloom_may_contain(
+            _entry_bloom(path, e, phys[c]), pos
+        )
 
     return [
         e
         for e in candidates
         if any(
-            all(col_may_hold(e, c, r[c]) for c in key_cols)
-            for r in key_rows
+            all(col_may_hold(e, c, r[c], rp.get(c)) for c in key_cols)
+            for r, rp in zip(key_rows, row_pos)
         )
     ]
 
@@ -1898,14 +1818,6 @@ def _live_rows(e: dict) -> int | None:
 
 def _dv_ref_path(table_path: str, ref: str) -> str:
     return ref if os.path.isabs(ref) else os.path.join(table_path, ref)
-
-
-def _rel2(p: str) -> str:
-    """Last two path segments (``dir/name``) — the identity the lineage
-    column ``_sn_file`` carries. Equals the manifest-relative path for
-    local entries and the SOURCE-relative path for shallow-clone external
-    refs (whose DV position files also store source-relative paths)."""
-    return "/".join(p.split("/")[-2:])
 
 
 def _entry_rid(e: dict) -> str:
@@ -5400,9 +5312,10 @@ def snapshot_scan(
         files = _manifest_files(path, m)
     bloom_pos: dict[str, list[int] | None] = {}
     if any(e.get("bloom_ref") for e in files):
+        positions = _lookup_positions_fn(m)
         for c, (lo, hi) in predicates.items():
             if lo == hi:
-                bloom_pos[c] = _bloom_literal_positions(spark, lo)
+                bloom_pos[c] = positions(c, lo)
     kept = [
         e
         for e in files
@@ -5438,9 +5351,9 @@ def snapshot_scan_in(
     ``values`` (per-value min/max stats + Bloom membership), then re-apply
     ``col IN (values)`` exactly. The N-key fetch a serving layer issues
     against a 100 TB table: file-set union is computed from manifest
-    metadata, all N literals hash in ONE 1-row JVM job (not N), and the
-    data read is bounded by files actually holding requested keys plus the
-    bloom's false positives."""
+    metadata, the literals hash natively on the driver (no Spark job), and
+    the data read is bounded by files actually holding requested keys plus
+    the bloom's false positives."""
     vals = [v for v in values if v is not None]
     versions = snapshot_versions(path)
     if not versions:
@@ -5454,53 +5367,24 @@ def snapshot_scan_in(
     files = _manifest_files_pruned_in(path, m, phys, vals)
     if files is None:
         files = _manifest_files(path, m)
-    has_bloom = any(e.get("bloom_ref") for e in files)
-    pos_by_val: dict = {}
-    if has_bloom and vals:
-        row = (
-            spark.range(1)
-            .select(
-                F.array(
-                    *[
-                        F.struct(
-                            *[
-                                _bloom_pos_expr_lit(val, i).alias(f"_p{i}")
-                                for i in range(_BLOOM_K)
-                            ]
-                        )
-                        for val in vals
-                    ]
-                ).alias("_a")
-            )
-            .first()["_a"]
-        )
-        pos_by_val = {
-            val: [int(s[f"_p{i}"]) for i in range(_BLOOM_K)]
-            for val, s in zip(vals, row)
-        }
+    if any(e.get("bloom_ref") for e in files):
+        positions = _lookup_positions_fn(m)
+        pos = [positions(col, val) for val in vals]
+    else:
+        pos = [None] * len(vals)
 
-    def may_hold(e: dict, val) -> bool:
+    def may_hold(e: dict, val, p) -> bool:
         if not _stats_may_contain(e.get("stats"), phys, val, val):
             return False
-        if val in pos_by_val:
-            return _bloom_may_contain(
-                _entry_bloom(path, e, phys), pos_by_val[val]
-            )
-        return True
+        return p is None or _bloom_may_contain(_entry_bloom(path, e, phys), p)
 
-    kept = [e for e in files if any(may_hold(e, val) for val in vals)]
+    kept = [
+        e for e in files if any(may_hold(e, val, p) for val, p in zip(vals, pos))
+    ]
     if not vals or not kept:
         return snapshot_read(spark, path, v).limit(0)
     base = _read_entries(spark, path, m, kept)
     return base.filter(F.col(col).isin(list(vals)))
-
-
-def _bloom_pos_expr_lit(value, i: int):
-    """Bit positions of a literal — the literal twin of _bloom_pos_expr,
-    same seeding and string canonicalization."""
-    return F.pmod(
-        F.xxhash64(F.lit(i), F.lit(value).cast("string")), F.lit(_BLOOM_M_MAX)
-    )
 
 
 def _dv_swap_changes(
@@ -6936,15 +6820,15 @@ def snapshot_files_df(
     any JSON parsing.
 
     Resolution by manifest form:
-    - typed ``files_ckpt``: Spark reads the columnar sidecar DIRECTLY
+    - ``files_ckpt``: Spark reads the columnar sidecar DIRECTLY
       (parallel, column-prunable) when it lives on a Spark-readable
       filesystem — at millions of files the list never materializes on
       the driver;
     - ``files_base`` chains: the base resolves recursively (its horizon is
       a checkpoint), then the O(changed files) removes filter out and adds
       union in — the distributed twin of ``_manifest_files``;
-    - inline ``files`` / legacy dir / json-layout checkpoints: driver
-      entries (small by construction, or the rare irregular fallback).
+    - inline ``files`` / legacy dir: driver entries (small by
+      construction, or a list the typed layout cannot hold).
     """
     versions = snapshot_versions(path)
     if not versions:
@@ -7024,7 +6908,7 @@ def _entries_to_files_df(spark: SparkSession, entries: list[dict]) -> DataFrame:
 
 def _files_df_of(spark: SparkSession, path: str, m: dict) -> DataFrame:
     ck = m.get("files_ckpt")
-    if ck is not None and ck.get("layout") == "typed":
+    if ck is not None:
         abs_p = os.path.join(_manifest_dir(path), ck["ref"])
         if os.path.isfile(abs_p):
             df = spark.read.parquet(abs_p)

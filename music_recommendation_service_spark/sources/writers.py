@@ -383,115 +383,6 @@ def append_table(df: DataFrame, path: str) -> None:
     w.save(path)
 
 
-def compact_table(
-    spark,
-    path: str,
-    target_rows_per_file: int = 1_000_000,
-    sort_cols: tuple[str, ...] = (),
-) -> tuple[int, int]:
-    """Small-file compaction (lake maintenance): rewrite a table into
-    ``ceil(rows / target_rows_per_file)`` files, optionally range-clustered.
-
-    Streaming appends (S7) and incremental batch appends (S6) accrete one+
-    file per micro-batch/run; at 100 TB that is millions of files, and file
-    listing + per-file open cost dominates scans long before data volume
-    does. Compaction is the standing maintenance job every lakehouse runs
-    (Delta OPTIMIZE / Iceberg rewrite_data_files); on plain parquet it is a
-    read -> repartition -> staged rewrite.
-
-    ``sort_cols`` additionally range-partitions AND sorts within files, so
-    every file covers a narrow key range — parquet row-group min/max stats
-    then let scans skip whole files on those predicates (the poor man's
-    Z-order; single-dimension clustering only).
-
-    Returns (files_before, files_after). Not concurrency-safe on plain
-    parquet (no transaction log) — run it as an exclusive maintenance task.
-    Crash recovery: the final overwrite of ``path`` is itself non-atomic; if
-    the process dies between the delete and the rewrite, the complete
-    compacted copy survives at ``<path>__compact_staging`` and can be moved
-    into place by hand. On success the staging copy is removed.
-    """
-    import math
-    import shutil
-
-    df = spark.read.parquet(path)
-    files_before = df.inputFiles()
-    n = df.count()
-    n_files = max(1, math.ceil(n / target_rows_per_file))
-    if sort_cols:
-        compacted = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
-    else:
-        compacted = df.repartition(n_files)
-    staging = f"{path}__compact_staging"
-    compacted.write.mode("overwrite").parquet(staging)
-    staged = spark.read.parquet(staging)
-    staged.write.mode("overwrite").parquet(path)
-    files_after = len(spark.read.parquet(path).inputFiles())
-    shutil.rmtree(staging, ignore_errors=True)
-    return len(files_before), files_after
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: tuple[str, str],
-    n_files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Two-dimensional Z-order (Morton) clustered write.
-
-    ``compact_table``'s range clustering skips files on ONE dimension;
-    interleaving the bits of two quantized dimensions gives files whose
-    min/max envelopes are narrow in BOTH — parquet row-group stats then
-    prune scans filtered on either column (the Delta OPTIMIZE ZORDER BY
-    idea, realized with pure column expressions inside codegen).
-
-    Each column is min/max-quantized to ``bits`` bits via a 1-row broadcast
-    of its bounds (one extra partial-agg pass, no shuffle), the Morton code
-    is a 2*bits-bit interleave, and the layout is repartitionByRange +
-    sortWithinPartitions on that code. The Z-code is dropped before the
-    write — it is layout, not data.
-    """
-    from pyspark.sql import functions as F
-
-    a, b = cols
-    bounds = df.agg(
-        F.min(a).alias("__amin"),
-        F.max(a).alias("__amax"),
-        F.min(b).alias("__bmin"),
-        F.max(b).alias("__bmax"),
-    )
-    top = (1 << bits) - 1
-
-    def quant(c, lo, hi):
-        span = F.when(F.col(hi) > F.col(lo), F.col(hi) - F.col(lo)).otherwise(
-            F.lit(1)
-        )
-        q = F.floor(
-            (F.col(c).cast("double") - F.col(lo)) / span * top
-        ).cast("long")
-        return F.greatest(F.lit(0), F.least(F.lit(top), q))
-
-    with_bounds = df.crossJoin(F.broadcast(bounds))
-    qa = quant(a, "__amin", "__amax")
-    qb = quant(b, "__bmin", "__bmax")
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        # Column `|` is LOGICAL or in PySpark — bitwiseOR is the bit op.
-        z = z.bitwiseOR(
-            F.shiftleft(F.shiftright(qa, i) % 2, 2 * i + 1)
-        ).bitwiseOR(F.shiftleft(F.shiftright(qb, i) % 2, 2 * i))
-    clustered = (
-        with_bounds.withColumn("__z", z)
-        .repartitionByRange(n_files, "__z")
-        .sortWithinPartitions("__z")
-        .drop("__z", "__amin", "__amax", "__bmin", "__bmax")
-    )
-    clustered.write.mode("overwrite").parquet(path)
-
-
 def write_bucketed(
     df: DataFrame,
     table: str,

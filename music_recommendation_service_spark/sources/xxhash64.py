@@ -1,12 +1,12 @@
 """Pure-Python XXH64 matching Spark's ``xxhash64`` expression bit-for-bit.
 
-Why this exists: the snapshot protocol's Bloom file-skipping hashes lookup
-literals with the SAME JVM expressions that built the per-file filters
-(``snapshots._bloom_literal_positions`` runs a 1-row Spark job). That is the
-right call on the driver, but the Python DataSource integration
-(``sources/datasource.py``) plans its scans inside a Spark *Python worker
-process* where no SparkSession exists — so bloom skipping there needs the
-hash natively. This module reimplements the exact algorithm of
+Why this exists: the snapshot protocol builds its per-file Bloom filters
+with Spark's ``xxhash64`` (``snapshots._bloom_pos_expr``), and every lookup
+literal is hashed here, natively: ``snapshot_scan``, ``snapshot_scan_in``
+and MERGE's key pruning on the driver, and the Python DataSource
+integration (``sources/datasource.py``) inside a Spark *Python worker
+process* where no SparkSession exists. No lookup runs a Spark job to hash
+its literals. This module reimplements the exact algorithm of
 ``org.apache.spark.sql.catalyst.expressions.XXH64`` (the standard xxHash64
 of Cyan4973/xxHash, which Spark follows for 8-byte-aligned and tail inputs
 alike) in pure Python, and ``tests/test_xxhash64.py`` pins bit-parity
@@ -130,12 +130,12 @@ def spark_xxhash64_int_then_string(i: int, s: str, seed: int = SPARK_DEFAULT_SEE
 
 
 def bloom_positions(value, m_max: int, k: int) -> list[int] | None:
-    """The k max-modulus bloom bit positions of a lookup literal — the
-    native twin of ``snapshots._bloom_literal_positions`` (which computes
-    the same thing with a 1-row Spark job). Values are canonicalized to
-    their Spark ``cast("string")`` form; a value whose string form is not
-    reproducible here (None, or an unsupported type) returns None and the
-    caller must treat every file as "may contain"."""
+    """The k max-modulus bloom bit positions of a lookup literal, equal to
+    what ``snapshots._bloom_pos_expr`` computes for the same value in a
+    column. Values are canonicalized to their Spark ``cast("string")``
+    form; a value whose string form is not reproducible here (None, bools,
+    floats, decimals, bytes, zoned timestamps) returns None and the caller
+    must treat every file as "may contain"."""
     s = spark_string_form(value)
     if s is None:
         return None

@@ -21,8 +21,6 @@ Scale design
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -358,66 +356,6 @@ def kafka_avro_sink(
     )
 
 
-def foreach_batch_upsert(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    key_cols: tuple[str, ...],
-    seq_col: str,
-    available_now: bool = True,
-) -> StreamingQuery:
-    """Stream-materialized KEYED table: upsert each micro-batch by key,
-    keeping the row with the HIGHEST ``seq_col`` per key — across batch and
-    table, so an out-of-order micro-batch (normal in streaming) whose rows
-    carry lower sequence numbers than what the table already holds can never
-    regress a key to stale state. On a seq tie the incoming row wins, which
-    keeps micro-batch REPLAY a content no-op (exactly-once, SURVEY.md T2).
-
-    This is the stream->dim-table pattern the reference's append-only sink
-    (S7) cannot express: ``recommendation_events`` appends forever; a keyed
-    table needs MERGE. With Delta on the classpath this body would be a
-    single ``MERGE INTO``; the parquet fallback below does copy-on-write of
-    the whole table (read + union + window + rewrite), which is correct and
-    idempotent but O(|table|) per batch — fine for dimension-sized tables.
-    For the scale path, use :func:`foreach_batch_merge`: it goes through the
-    snapshot protocol's keyed MERGE and rewrites only the files that contain
-    a matched key (per-file min/max stats pruning).
-    """
-    from pyspark.sql import Window
-
-    def upsert(batch: DataFrame, _batch_id: int) -> None:
-        spark = batch.sparkSession
-        latest = _latest_per_key(batch, key_cols, seq_col).withColumn(
-            "_src", F.lit(1)
-        )
-        # Missing table => first batch. ONLY that condition may fall through
-        # to overwrite-with-batch: a transient read failure of an existing
-        # table must abort the micro-batch, not silently truncate the table.
-        if os.path.isdir(path):
-            existing = spark.read.parquet(path).withColumn("_src", F.lit(0))
-            merged = existing.unionByName(latest)
-        else:
-            merged = latest
-        w = Window.partitionBy(*key_cols).orderBy(F.desc(seq_col), F.desc("_src"))
-        out = (
-            merged.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_src")
-        )
-        # The output plan READS ``path`` lazily, so land the merged result on
-        # a staging dir first, then rewrite the table from the staged copy.
-        staging = f"{path}__staging"
-        out.write.mode("overwrite").parquet(staging)
-        spark.read.parquet(staging).write.mode("overwrite").parquet(path)
-
-    writer = df.writeStream.foreachBatch(upsert).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
 def foreach_batch_merge(
     df: DataFrame,
     path: str,
@@ -429,16 +367,20 @@ def foreach_batch_merge(
     output_mode: str = "append",
     merge_mode: str = "rewrite",
 ) -> StreamingQuery:
-    """Keyed stream materialization through the snapshot protocol's MERGE —
-    the scale path of :func:`foreach_batch_upsert`. Each micro-batch becomes
-    one snapshot version; only files containing a matched key are rewritten
-    (per-file min/max key stats prune the rest), so cost per batch is
-    O(matched files), not O(|table|). Read the result with
+    """Stream-materialized KEYED table: upsert each micro-batch by key
+    through the snapshot protocol's MERGE — the stream->dim-table pattern
+    the reference's append-only sink (S7) cannot express. Each micro-batch
+    becomes one snapshot version; only files containing a matched key are
+    rewritten (per-file min/max key stats prune the rest), so cost per
+    batch is O(matched files), not O(|table|). Read the result with
     ``sources.snapshots.snapshot_read`` (time travel included).
 
-    Same merge contract as the parquet fallback: highest ``seq_col`` per key
-    wins across batch and table; incoming wins seq ties, so replaying an
-    already-applied batch is a content no-op.
+    The row with the HIGHEST ``seq_col`` per key wins across batch and
+    table, so an out-of-order micro-batch carrying lower sequence numbers
+    than the table holds never regresses a key to stale state. Incoming
+    wins seq ties, so replaying an already-applied batch is a content
+    no-op, and each batch commits atomically or not at all: the idempotent
+    sink exactly-once needs (SURVEY.md T2).
 
     A concurrent writer committing between a merge's state read and its
     manifest write makes the merge's rewrite plan stale; ``snapshot_merge``
@@ -478,19 +420,6 @@ def foreach_batch_merge(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def _latest_per_key(
-    df: DataFrame, key_cols: tuple[str, ...], seq_col: str
-) -> DataFrame:
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(*key_cols).orderBy(F.desc(seq_col))
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def write_stream_parquet(

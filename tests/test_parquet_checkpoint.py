@@ -81,7 +81,9 @@ def test_checkpoint_entry_fidelity_unit():
     """Byte-level fidelity: every entry shape the protocol produces —
     stats, partition values, DVs, bloom refs, None rows, unknown future
     keys — round-trips the sidecar EXACTLY (dict equality), so delta
-    compression against a checkpointed base still fires."""
+    compression against a checkpointed base still fires. Each stats column
+    holds one type (int, float, string); a column mixing them is the
+    irregular shape the sidecar declines (it stays inline)."""
     import tempfile
 
     files = [
@@ -90,13 +92,13 @@ def test_checkpoint_entry_fidelity_unit():
         {
             "path": "v=1-a/year=1990/f3.parquet",
             "rows": 5,
-            "stats": {"year": [1990, 1990], "k": [0.5, 2.25]},
+            "stats": {"year": [1990, 1990], "amount": [0.5, 2.25]},
             "partition": {"year": "1990"},
         },
         {
             "path": "v=2-b/f4.parquet",
             "rows": 7,
-            "stats": {"k": ["a", "zz"]},
+            "stats": {"name": ["a", "zz"]},
             "dv": {"ref": "dv=3-c", "n": 2},
             "bloom_ref": "v=2-b/_blooms.json",
         },
@@ -111,6 +113,9 @@ def test_checkpoint_entry_fidelity_unit():
         S._fs().mkdirs(S._manifest_dir(d))
         ckpt = S._write_parquet_checkpoint(d, files, 1)
         back = S._read_parquet_checkpoint(d, ckpt)
+        mixed = [dict(e) for e in files]
+        mixed[3]["stats"] = {"k": ["a", "zz"]}
+        assert S._write_parquet_checkpoint(d, mixed, 2) is None
     assert back == files
 
     # a truncated/corrupt sidecar refuses instead of serving a partial list
@@ -322,13 +327,12 @@ def test_clone_and_rollback_across_checkpoints(spark, tmp_path, monkeypatch):
     assert S.snapshot_read(spark, dst).count() == 200
 
 
-def test_typed_layout_default_json_fallback_on_mixed(spark, tmp_path, monkeypatch):
+def test_typed_layout_default_inline_on_mixed(spark, tmp_path, monkeypatch):
     """Regular tables get the TYPED layout (native min/max columns, no
-    payload JSON); irregular entry shapes — mixed-typed stats after
-    widening — fall back to the JSON layout. Both resolve identically."""
-    import tempfile
-
-    _low_thresholds(monkeypatch)
+    payload JSON); a file list the typed layout cannot hold — mixed-typed
+    stats after widening — stays inline in the JSON manifest, writes no
+    sidecar, and resolves to the same entries."""
+    _low_thresholds(monkeypatch, ckpt=2)
     p = str(tmp_path / "typed")
     S.snapshot_write(_df(spark), p, stats_cols=["k"])
     ck = S._latest_manifest(p)["files_ckpt"]
@@ -338,11 +342,34 @@ def test_typed_layout_default_json_fallback_on_mixed(spark, tmp_path, monkeypatc
         {"path": "v=1-x/a.parquet", "rows": 1, "stats": {"k": [1, 5]}},
         {"path": "v=1-x/b.parquet", "rows": 1, "stats": {"k": ["a", "b"]}},
     ]
-    with tempfile.TemporaryDirectory() as d:
-        S._fs().mkdirs(S._manifest_dir(d))
-        ptr = S._write_parquet_checkpoint(d, mixed, 1)
-        assert ptr["layout"] == "json"
-        assert S._read_parquet_checkpoint(d, ptr) == mixed
+    d = str(tmp_path / "mixed")
+    S._fs().mkdirs(S._manifest_dir(d))
+    assert S._write_parquet_checkpoint(d, mixed, 1) is None
+    m = S._maybe_parquet_checkpoint(d, {"version": 1, "files": mixed}, 1)
+    assert "files_ckpt" not in m and "min_reader" not in m
+    assert S._manifest_files(d, m) == mixed
+    assert not os.path.exists(os.path.join(S._manifest_dir(d), "checkpoints"))
+
+
+@pytest.mark.parametrize("layout", ["json", None])
+def test_json_layout_pointer_refused(spark, tmp_path, monkeypatch, layout):
+    """A manifest pointing at a JSON-string-layout checkpoint (written as
+    ``layout: "json"``, or by engines that predate the ``layout`` key) is
+    refused with UnsupportedSnapshotProtocolError, never guessed at."""
+    _low_thresholds(monkeypatch)
+    p = str(tmp_path / "old")
+    S.snapshot_write(_df(spark), p, stats_cols=["k"])
+    v = S.snapshot_versions(p)[-1]
+    mpath = os.path.join(S._manifest_dir(p), f"{v}.json")
+    with open(mpath) as f:
+        m = json.load(f)
+    m["files_ckpt"].pop("layout")
+    if layout is not None:
+        m["files_ckpt"]["layout"] = layout
+    with open(mpath, "w") as f:
+        json.dump(m, f)
+    with pytest.raises(S.UnsupportedSnapshotProtocolError, match="typed layout"):
+        S.snapshot_read(spark, p)
 
 
 def test_pruned_resolve_superset_and_scan_equivalence(spark, tmp_path, monkeypatch):

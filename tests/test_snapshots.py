@@ -3075,7 +3075,7 @@ def test_bloom_merge_preserves_discipline(spark, tmp_path):
 
 def test_snapshot_scan_in_bloom_union(spark, tmp_path):
     """N-key IN-list fetch: the opened file set is the UNION of per-key
-    bloom/stats survivors (one JVM hash job for all literals), results
+    bloom/stats survivors (literals hashed natively, no Spark job), results
     exactly equal read + isin, and an all-absent list answers from
     manifest metadata alone — zero files opened."""
     from pyspark.sql import functions as F
@@ -3107,6 +3107,31 @@ def test_snapshot_scan_in_bloom_union(spark, tmp_path):
     assert miss.inputFiles() == [] and miss.count() == 0
     # schema preserved on the empty answer
     assert miss.columns == S.snapshot_read(spark, path).columns
+
+
+def test_bloom_lookup_literal_of_other_type_reads_every_file(spark, tmp_path):
+    """A bloom holds the hash of each value's Spark string form. An int
+    literal probing a DOUBLE column ("5" vs "5.0") must not consult it:
+    the lookup reads every file and returns what read + filter returns.
+    A literal of the column's own type still skips files."""
+    from pyspark.sql import functions as F
+
+    from music_recommendation_service_spark.sources import snapshots as S
+
+    path = str(tmp_path / "t")
+    df = spark.range(400).select(
+        F.col("id").cast("double").alias("x"), F.col("id").alias("k")
+    ).repartition(8)
+    S.snapshot_write(df, path, stats_cols=[], bloom_cols=["x", "k"])
+    n_files = len(S._manifest_files(path, S._latest_manifest(path)))
+
+    got = S.snapshot_scan(spark, path, {"x": (5, 5)})
+    assert len(got.inputFiles()) == n_files and got.count() == 1
+    got = S.snapshot_scan_in(spark, path, "x", [5, 7])
+    assert len(got.inputFiles()) == n_files and got.count() == 2
+
+    got = S.snapshot_scan(spark, path, {"k": (5, 5)})
+    assert len(got.inputFiles()) < n_files and got.count() == 1
 
 
 def test_snapshot_history_describes_commits(spark, tmp_path):

@@ -137,69 +137,6 @@ def test_append_rejects_schema_drift(spark, tmp_path):
     assert spark.read.parquet(out).count() == 2
 
 
-def test_compact_table_small_files(spark, sf_dir, tmp_path):
-    """Many tiny append files -> one compacted, clustered file; data and
-    schema survive byte-identically."""
-    from music_recommendation_service_spark.sources.writers import (
-        append_table,
-        compact_table,
-    )
-
-    path = str(tmp_path / "accreted")
-    orders = load_table(spark, sf_dir, "orders")
-    # Simulate 8 micro-batch appends (8+ files).
-    for i in range(8):
-        append_table(orders.filter(F.col("o_orderkey") % 8 == i), path)
-    before_rows = spark.read.parquet(path).count()
-    assert len(spark.read.parquet(path).inputFiles()) >= 8
-
-    n_before, n_after = compact_table(
-        spark, path, target_rows_per_file=10_000_000, sort_cols=("o_orderdate",)
-    )
-    assert n_before >= 8 and n_after == 1
-    after = spark.read.parquet(path)
-    assert after.count() == before_rows
-    assert after.schema == orders.schema
-
-
-def test_zorder_write_clusters_both_dims(spark, sf_dir, tmp_path):
-    """Z-order layout: per-file min/max envelopes must be narrow on BOTH
-    cluster columns (vs ~full-range coverage for an unclustered write)."""
-    from music_recommendation_service_spark.sources.writers import zorder_write
-
-    orders = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    path = str(tmp_path / "zorders")
-    zorder_write(orders, path, ("o_custkey", "o_totalprice"), n_files=16)
-
-    back = spark.read.parquet(path)
-    assert back.count() == orders.count()
-    files = [f.removeprefix("file://") for f in back.inputFiles()]
-    assert len(files) >= 4
-
-    import duckdb
-
-    con = duckdb.connect()
-
-    def coverage(col):
-        glo = con.execute(
-            f"SELECT max({col}) - min({col}) FROM read_parquet('{path}/*.parquet')"
-        ).fetchone()[0]
-        spans = [
-            con.execute(
-                f"SELECT max({col}) - min({col}) FROM read_parquet('{f}')"
-            ).fetchone()[0]
-            for f in files
-        ]
-        return sum(spans) / len(spans) / glo
-
-    # Average per-file span well under the full range on BOTH dimensions —
-    # the property that makes min/max pruning fire for either predicate.
-    assert coverage("o_custkey") < 0.45
-    assert coverage("o_totalprice") < 0.45
-
-
 def test_scratch_materialize_reuses_within_session(spark, sf_dir):
     """Same analyzed plan => second materialization reads the FIRST copy
     (identical backing files, no second write); a different plan gets its

@@ -352,8 +352,11 @@ def test_foreach_batch_upsert_last_writer_wins(spark, event_batches, tmp_path):
     """Keyed stream materialization: per-user latest event wins, across two
     incremental availableNow runs (new arrivals overwrite matched keys,
     unmatched keys survive)."""
+    from music_recommendation_service_spark.sources.snapshots import (
+        snapshot_read,
+    )
     from music_recommendation_service_spark.streaming.pipeline import (
-        foreach_batch_upsert,
+        foreach_batch_merge,
     )
 
     in_dir, batches, _total = event_batches
@@ -361,19 +364,19 @@ def test_foreach_batch_upsert_last_writer_wins(spark, event_batches, tmp_path):
 
     _land(*batches[0])
     stream = stream_from_directory(spark, str(in_dir), EVENT_SCHEMA)
-    foreach_batch_upsert(
+    foreach_batch_merge(
         stream, out, cp, key_cols=("user_id",), seq_col="event_id"
     ).awaitTermination(120)
 
     _land(*batches[1])
     stream = stream_from_directory(spark, str(in_dir), EVENT_SCHEMA)
-    foreach_batch_upsert(
+    foreach_batch_merge(
         stream, out, cp, key_cols=("user_id",), seq_col="event_id"
     ).awaitTermination(120)
 
     got = {
         (r["user_id"], r["event_id"])
-        for r in spark.read.parquet(out).select("user_id", "event_id").collect()
+        for r in snapshot_read(spark, out).select("user_id", "event_id").collect()
     }
     # Batch oracle: highest event_id per user over ALL events.
     all_rows = [r for _, chunk in batches for r in chunk]
@@ -563,8 +566,11 @@ def test_foreach_batch_upsert_out_of_order_seq(spark, tmp_path):
     normal in streaming)."""
     import json as _json
 
+    from music_recommendation_service_spark.sources.snapshots import (
+        snapshot_read,
+    )
     from music_recommendation_service_spark.streaming.pipeline import (
-        foreach_batch_upsert,
+        foreach_batch_merge,
     )
 
     in_dir = tmp_path / "ooo_in"
@@ -584,7 +590,7 @@ def test_foreach_batch_upsert_out_of_order_seq(spark, tmp_path):
          "event_type": "like", "value": 1.0, "props": "{}"},
     ])
     stream = stream_from_directory(spark, str(in_dir), EVENT_SCHEMA)
-    foreach_batch_upsert(
+    foreach_batch_merge(
         stream, out, cp, key_cols=("user_id",), seq_col="event_id"
     ).awaitTermination(120)
 
@@ -596,13 +602,13 @@ def test_foreach_batch_upsert_out_of_order_seq(spark, tmp_path):
          "event_type": "skip", "value": 0.0, "props": "{}"},
     ])
     stream = stream_from_directory(spark, str(in_dir), EVENT_SCHEMA)
-    foreach_batch_upsert(
+    foreach_batch_merge(
         stream, out, cp, key_cols=("user_id",), seq_col="event_id"
     ).awaitTermination(120)
 
     got = {
         r["user_id"]: r["event_id"]
-        for r in spark.read.parquet(out).select("user_id", "event_id").collect()
+        for r in snapshot_read(spark, out).select("user_id", "event_id").collect()
     }
     assert got == {1: 100, 2: 60}
 

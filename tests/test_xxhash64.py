@@ -56,13 +56,13 @@ def test_long_parity(spark):
 
 
 def test_bloom_positions_match_jvm_path(spark):
-    """The native positions equal the 1-row-Spark-job positions the write
-    path uses (``snapshots._bloom_literal_positions``), for the value
-    types the bloom index actually sees."""
+    """The native positions equal what the write path's JVM expression
+    (``snapshots._bloom_pos_expr``) computes for the same value in a
+    1-row frame, for the value types the bloom index actually sees."""
     from music_recommendation_service_spark.sources.snapshots import (
         _BLOOM_K,
         _BLOOM_M_MAX,
-        _bloom_literal_positions,
+        _bloom_pos_expr,
     )
 
     import datetime as dt
@@ -79,7 +79,13 @@ def test_bloom_positions_match_jvm_path(spark):
         dt.date(2024, 3, 5),
     ]
     for v in vals:
-        jvm = _bloom_literal_positions(spark, v)
+        row = (
+            spark.range(1)
+            .select(F.lit(v).alias("_v"))
+            .select(*[_bloom_pos_expr("_v", i).alias(f"_p{i}") for i in range(_BLOOM_K)])
+            .first()
+        )
+        jvm = [row[f"_p{i}"] for i in range(_BLOOM_K)]
         nat = bloom_positions(v, _BLOOM_M_MAX, _BLOOM_K)
         assert nat == jvm, v
 
