@@ -1418,9 +1418,12 @@ def _entry_bloom(table_path: str, entry: dict, phys_col: str) -> dict | None:
 # Column types whose CAST(... AS STRING) a lookup literal reproduces when it
 # has the matching Python type. Any other pairing reads every file: an int
 # probing a DOUBLE column would hash "5" against files that hashed "5.0".
+# TIMESTAMP (with local time zone) is absent: its files hash the value in
+# the session zone, but PySpark reads a naive datetime in the process's
+# zone, so on a host whose zone differs the wall-clock string would miss.
 _BLOOM_LIT_TYPES = {
     "byte": int, "short": int, "integer": int, "long": int, "string": str,
-    "date": _dt.date, "timestamp": _dt.datetime, "timestamp_ntz": _dt.datetime,
+    "date": _dt.date, "timestamp_ntz": _dt.datetime,
 }
 
 
@@ -1454,7 +1457,7 @@ _MERGE_KEY_PRUNE_MAX = 200
 
 
 def _prune_candidates_by_keys(
-    spark: SparkSession,
+    m: dict,
     path: str,
     candidates: list,
     key_cols: list,
@@ -1470,11 +1473,12 @@ def _prune_candidates_by_keys(
     clustered or bloom-indexed table touch O(keys) files, not O(table).
     Sound over-approximation: a kept file may still hold no key (stage 2
     settles it); a dropped file provably holds none. Null key components
-    skip their column's test (stats/bloom say nothing about nulls)."""
+    skip their column's test (stats/bloom say nothing about nulls).
+    ``m`` is the manifest whose schema types the key columns."""
     phys = {c: _phys(mapping or {}, c) for c in key_cols}
     # bloom positions per key row and column, aligned with key_rows
     if any(e.get("bloom_ref") for e in candidates):
-        positions = _lookup_positions_fn(_latest_manifest(path))
+        positions = _lookup_positions_fn(m)
         row_pos = [{c: positions(c, r[c]) for c in key_cols} for r in key_rows]
     else:
         row_pos = [{}] * len(key_rows)
@@ -3435,7 +3439,7 @@ def _rebase_concurrent(
                     )
                 if rows is not None and len(rows) <= _MERGE_KEY_PRUNE_MAX:
                     overlapping = _prune_candidates_by_keys(
-                        spark, path, overlapping, key_cols, rows, mapping
+                        latest, path, overlapping, key_cols, rows, mapping
                     )
                 if overlapping:
                     conflict(
@@ -3817,7 +3821,7 @@ def snapshot_merge(
         if len(probe) <= _MERGE_KEY_PRUNE_MAX:
             key_rows = probe
             candidates = _prune_candidates_by_keys(
-                spark, path, candidates, key_cols, key_rows, mapping
+                cur, path, candidates, key_cols, key_rows, mapping
             )
     if mode == "dv":
         return _merge_dv(

@@ -159,8 +159,10 @@ def spark_string_form(value) -> str | None:
     if isinstance(value, str):
         return value
     if isinstance(value, _dt.datetime):
-        # Spark renders timestamps as 'YYYY-MM-DD HH:MM:SS[.ffffff]' in the
-        # session zone; only naive/UTC values round-trip deterministically.
+        # A naive datetime hashes as its wall clock, which is what Spark
+        # renders for a TIMESTAMP_NTZ value. A TIMESTAMP (local time zone)
+        # renders in the session zone, so callers must not probe its
+        # blooms with a naive datetime read in the process's zone.
         if value.tzinfo is not None:
             return None
         s = value.isoformat(sep=" ")

@@ -3134,6 +3134,49 @@ def test_bloom_lookup_literal_of_other_type_reads_every_file(spark, tmp_path):
     assert len(got.inputFiles()) < n_files and got.count() == 1
 
 
+def test_bloom_lookup_on_timestamp_column_off_utc_host(spark, tmp_path, monkeypatch):
+    """A TIMESTAMP column's bloom holds CAST(ts AS STRING) in the session
+    zone, while PySpark reads a naive datetime as process-local time. On a
+    host whose zone is not the session's, point lookups and a keyed MERGE
+    on a bloom-indexed TIMESTAMP column must still match read + filter."""
+    import time
+
+    from music_recommendation_service_spark.sources import snapshots as S
+
+    path = str(tmp_path / "t")
+    df = spark.range(400).select(
+        F.timestamp_seconds(F.col("id") * 3600).alias("ts"),
+        F.col("id").alias("v"),
+        F.lit(1).cast("long").alias("_seq"),
+    ).repartition(4)
+    S.snapshot_write(df, path, stats_cols=[], bloom_cols=["ts"])
+    monkeypatch.setenv("TZ", "Asia/Kolkata")
+    time.tzset()
+    try:
+        rows = S.snapshot_read(spark, path).orderBy("v").collect()
+        t, t2 = rows[5]["ts"], rows[7]["ts"]
+
+        def ref(*ts):
+            return S.snapshot_read(spark, path).filter(
+                F.col("ts").isin(list(ts))
+            ).count()
+
+        assert ref(t) == 1
+        assert S.snapshot_scan(spark, path, {"ts": (t, t)}).count() == ref(t)
+        assert S.snapshot_scan_in(spark, path, "ts", [t, t2]).count() == ref(t, t2)
+
+        S.snapshot_merge(
+            spark.createDataFrame([(t, -5, 2)], "ts timestamp, v long, _seq long"),
+            path, key_cols=["ts"], seq_col="_seq",
+        )
+        got = S.snapshot_read(spark, path)
+        assert got.count() == 400
+        assert [r["v"] for r in got.filter(F.col("ts") == F.lit(t)).collect()] == [-5]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
 def test_snapshot_history_describes_commits(spark, tmp_path):
     """DESCRIBE HISTORY parity: every commit type stamps its operation;
     history reads manifests only, newest first; metadata-only commits
@@ -3208,7 +3251,7 @@ def test_merge_per_key_candidate_pruning(spark, tmp_path):
     # two scattered keys: batch bounds [5, 3777] bracket ALL files, but the
     # point tests keep exactly the two files that hold them
     kept = _prune_candidates_by_keys(
-        spark, path, files, ["k"], [R(k=5), R(k=3777)], None
+        m, path, files, ["k"], [R(k=5), R(k=3777)], None
     )
     assert len(kept) == 2, [e["stats"] for e in kept]
 
@@ -3228,11 +3271,11 @@ def test_merge_per_key_candidate_pruning(spark, tmp_path):
     m2 = _read_manifest(path2, snapshot_versions(path2)[-1])
     files2 = _manifest_files(path2, m2)
     present = _prune_candidates_by_keys(
-        spark, path2, files2, ["k"], [R(k=1000)], None
+        m2, path2, files2, ["k"], [R(k=1000)], None
     )
     assert len(present) >= 1  # the true holder always survives
     absent = _prune_candidates_by_keys(
-        spark, path2, files2, ["k"], [R(k=1001)], None  # odd: in-range, absent
+        m2, path2, files2, ["k"], [R(k=1001)], None  # odd: in-range, absent
     )
     assert len(absent) < len(files2), "bloom pruned nothing"
 

@@ -69,9 +69,11 @@ def test_bloom_positions_match_jvm_path(spark):
 
     vals = [
         7, -7, 0, 123456789012345, "alpha", "", "日本語", "O",
-        # timestamps: Spark's CAST(ts AS STRING) trims trailing fractional
-        # zeros ('.500000' -> '.5'); the native form must match or a
-        # JVM-built bloom probed natively reports a false "absent"
+        # naive datetimes index TIMESTAMP_NTZ columns (wall clock, so the
+        # host's zone does not matter). Spark's CAST(ts AS STRING) trims
+        # trailing fractional zeros ('.500000' -> '.5'); the native form
+        # must match or a JVM-built bloom probed natively reports a false
+        # "absent"
         dt.datetime(2024, 1, 1, 0, 0, 0),
         dt.datetime(2024, 1, 1, 0, 0, 0, 500000),
         dt.datetime(2024, 1, 1, 12, 34, 56, 123000),
@@ -79,12 +81,13 @@ def test_bloom_positions_match_jvm_path(spark):
         dt.date(2024, 3, 5),
     ]
     for v in vals:
-        row = (
-            spark.range(1)
-            .select(F.lit(v).alias("_v"))
-            .select(*[_bloom_pos_expr("_v", i).alias(f"_p{i}") for i in range(_BLOOM_K)])
-            .first()
-        )
+        if isinstance(v, dt.datetime):
+            frame = spark.createDataFrame([(v,)], "_v timestamp_ntz")
+        else:
+            frame = spark.range(1).select(F.lit(v).alias("_v"))
+        row = frame.select(
+            *[_bloom_pos_expr("_v", i).alias(f"_p{i}") for i in range(_BLOOM_K)]
+        ).first()
         jvm = [row[f"_p{i}"] for i in range(_BLOOM_K)]
         nat = bloom_positions(v, _BLOOM_M_MAX, _BLOOM_K)
         assert nat == jvm, v
