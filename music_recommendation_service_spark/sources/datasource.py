@@ -18,11 +18,13 @@ Python DataSource API so it works with no JVM extension on the classpath.
 Design notes (and the 100 TB story):
 
 - **Planning is manifest-only.** ``partitions()`` reads the version's
-  manifest (O(files) JSON) and prunes with the SAME per-file min/max stats
-  and Bloom sidecars the native ``snapshot_scan`` path uses. Pushed filters
-  (``pushFilters``) drive the skipping but are ALL returned to Spark as
-  unsupported, so Spark re-applies them exactly — file skipping here is an
-  I/O optimization, never a correctness dependency. Bloom lookups hash with
+  manifest (O(files) JSON) and prunes through the SAME code as the native
+  ``snapshot_scan`` path: pushed filters become conjuncts of the one
+  file-skipping rule (``snapshots._file_skip``) over per-file min/max stats
+  and Bloom sidecars. The filters (``pushFilters``) drive the skipping but
+  are ALL returned to Spark as unsupported, so Spark re-applies them
+  exactly — file skipping here is an I/O optimization, never a
+  correctness dependency. Bloom lookups hash with
   the pure-Python XXH64 twin (``sources/xxhash64.py``, bit-parity pinned in
   tests) because the planner runs in a Python worker with no SparkSession.
 - **Input partitions are SIZE-BINNED groups of live files** — Spark's own
@@ -198,118 +200,33 @@ def _filter_col(f: Filter) -> str | None:
     return attr[0]
 
 
-def _cmp_stats(bound, value) -> int | None:
-    """Compare a manifest stat bound with a canonicalized literal; None when
-    the pair is not comparably typed (mixed str/number) — conservative."""
-    value = sn._stats_repr(value)
-    if bound is None or value is None:
-        return None
-    num = (int, float)
-    if isinstance(bound, str) != isinstance(value, str):
-        return None
-    if isinstance(bound, bool) or isinstance(value, bool):
-        return None
-    if not isinstance(bound, (str, *num)) or not isinstance(value, (str, *num)):
-        return None
-    return -1 if bound < value else (1 if bound > value else 0)
-
-
-def _entry_may_satisfy(table_path: str, entry: dict, phys: str, f: Filter) -> bool:
-    """Can this file possibly hold a row satisfying the filter? min/max
-    stats answer range predicates; Bloom sidecars answer point lookups.
-    Anything unknowable returns True (scan it)."""
-    stats = (entry.get("stats") or {}).get(phys)
-    mn, mx = (stats if stats else (None, None))
-
-    def bloom_hit(value) -> bool:
-        pos = bloom_positions(value, sn._BLOOM_M_MAX, sn._BLOOM_K)
-        if pos is None:
-            return True
-        return sn._bloom_may_contain(sn._entry_bloom(table_path, entry, phys), pos)
-
-    if isinstance(f, (EqualTo, EqualNullSafe)):
-        lo = _cmp_stats(mn, f.value)
-        hi = _cmp_stats(mx, f.value)
-        if (lo is not None and lo > 0) or (hi is not None and hi < 0):
-            return False
-        return bloom_hit(f.value)
-    if isinstance(f, In):
-        return any(
-            not ((_cmp_stats(mn, v) or 0) > 0 or (_cmp_stats(mx, v) or 0) < 0)
-            and bloom_hit(v)
-            for v in f.value
-        )
-    if isinstance(f, GreaterThan):
-        c = _cmp_stats(mx, f.value)
-        return c is None or c > 0
-    if isinstance(f, GreaterThanOrEqual):
-        c = _cmp_stats(mx, f.value)
-        return c is None or c >= 0
-    if isinstance(f, LessThan):
-        c = _cmp_stats(mn, f.value)
-        return c is None or c < 0
-    if isinstance(f, LessThanOrEqual):
-        c = _cmp_stats(mn, f.value)
-        return c is None or c <= 0
-    if isinstance(f, IsNotNull):
-        # A bloom built over an all-null file stores the empty bitset; that
-        # is the one case where "no non-null value exists" is provable.
-        b = sn._entry_bloom(table_path, entry, phys)
-        return not (b and b.get("b64") == "" and b.get("k") == sn._BLOOM_K)
-    return True
-
-
-def _derived_generated_filters(manifest: dict, filters: Sequence[Filter]) -> list:
-    """Synthetic filters on generated partition columns implied by pushed
-    filters on their base column (``ts > lo`` implies
-    ``year_col >= year(lo)`` for a monotone rule) — the DataSource twin of
-    ``snapshots._derive_generated_conjuncts``, so format('snapshot') reads
-    partition-prune on base-column predicates too."""
-    out: list = []
-    for g, base, fn in sn._gen_partition_derivations(manifest):
-        for f in filters:
-            if _filter_col(f) != base:
-                continue
-            if isinstance(f, (EqualTo, EqualNullSafe)):
-                d = fn(f.value)
-                if d is not None:
-                    out.append(EqualTo((g,), d))
-            elif isinstance(f, In):
-                dvals = [fn(v) for v in f.value]
-                if dvals and all(d is not None for d in dvals):
-                    out.append(In((g,), tuple(dvals)))
-            elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-                d = fn(f.value)
-                if d is not None:
-                    out.append(GreaterThanOrEqual((g,), d))
-            elif isinstance(f, (LessThan, LessThanOrEqual)):
-                d = fn(f.value)
-                if d is not None:
-                    out.append(LessThanOrEqual((g,), d))
-    return out
+# pushed filter class -> op of a skip-rule conjunct (``snapshots._file_skip``)
+_FILTER_OPS = {
+    EqualTo: "=", EqualNullSafe: "=", In: "=",
+    GreaterThan: ">", GreaterThanOrEqual: ">=",
+    LessThan: "<", LessThanOrEqual: "<=", IsNotNull: "notnull",
+}
 
 
 def prune_entries(
     table_path: str, manifest: dict, filters: Sequence[Filter]
 ) -> list[dict]:
-    """File-skipping over a manifest's live entries: a file survives only
-    if every pushed conjunct is possibly satisfiable in it."""
-    filters = list(filters) + _derived_generated_filters(manifest, filters)
-    mapping = sn._mapping(manifest)
-    entries = sn._manifest_files(table_path, manifest)
-    out = []
-    for e in entries:
-        keep = True
-        for f in filters:
-            col = _filter_col(f)
-            if col is None:
-                continue
-            if not _entry_may_satisfy(table_path, e, sn._phys(mapping, col), f):
-                keep = False
-                break
-        if keep:
-            out.append(e)
-    return out
+    """File-skipping over a manifest's live entries: pushed filters become
+    conjuncts of the snapshot protocol's one skip rule (plus those derived
+    onto generated partition columns), and a file survives only if every
+    conjunct may hold in it."""
+    conjuncts = []
+    for f in filters:
+        op, col = _FILTER_OPS.get(type(f)), _filter_col(f)
+        if op is None or col is None:
+            continue
+        vals = (
+            [] if op == "notnull"
+            else list(f.value) if isinstance(f, In) else [f.value]
+        )
+        conjuncts.append((col, op, vals))
+    conjuncts += sn._derive_generated_conjuncts(manifest, conjuncts)
+    return sn._files_may_match(table_path, manifest, conjuncts)
 
 
 # --------------------------------------------------------------------------

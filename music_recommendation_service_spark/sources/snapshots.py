@@ -46,6 +46,7 @@ from __future__ import annotations
 import datetime as _dt
 import functools
 import json
+import operator
 import os
 import threading
 import time
@@ -1062,151 +1063,83 @@ def _ckpt_entry_keys(path: str, m: dict) -> set:
     }
 
 
-def _ckpt_cmp_scalar(col_type, v):
-    """Exact-compare literal for a typed sidecar column, or None to bail:
-    int col + int lit in int64; float col + numeric lit in float64 (float
-    stats are float64-born); str+str. A float literal against an INTEGER
-    column falls back (float64 rounding above 2^53 could wrongly skip a
-    file)."""
+def _ckpt_cmp_scalar(col_type, k):
+    """A ``_skip_key`` bound as a scalar of a typed sidecar's min/max
+    column type, or None when the sidecar cannot compare it exactly: an
+    int in int64, a number in float64, text in string — DATE and
+    TIMESTAMP_NTZ bounds as their isoformat, the stats' own text, whose
+    order is chronological. A float against an integer column is refused
+    (float64 rounding above 2^53 could wrongly skip a file), and so are
+    instants: TIMESTAMP stats text mixes local wall clocks and offsets."""
     import pyarrow as pa
 
-    if isinstance(v, bool) or v is None:
+    if isinstance(k, _dt.date) and not getattr(k, "tzinfo", None):
+        k = k.isoformat()
+    if isinstance(k, bool):
         return None
-    if pa.types.is_integer(col_type) and isinstance(v, int):
+    if pa.types.is_integer(col_type) and isinstance(k, int):
         try:
-            return pa.scalar(v, col_type)
+            return pa.scalar(k, col_type)
         except (OverflowError, pa.lib.ArrowInvalid):
             return None
-    if pa.types.is_floating(col_type) and isinstance(v, (int, float)):
-        return pa.scalar(float(v), col_type)
-    if pa.types.is_string(col_type) and isinstance(v, str):
-        return pa.scalar(v, col_type)
+    if pa.types.is_floating(col_type) and isinstance(k, (int, float)):
+        return pa.scalar(float(k), col_type)
+    if pa.types.is_string(col_type) and isinstance(k, str):
+        return pa.scalar(k, col_type)
     return None
 
 
-def _manifest_files_pruned_in(
-    path: str, m: dict, phys_col: str, vals: Sequence
-) -> list[dict] | None:
-    """IN-list twin of ``_manifest_files_pruned``: keep a file when ANY
-    value may sit in its [min, max] (union over values — vs the range
-    form's intersection over predicates). Large value lists collapse to
-    one conservative [min(vals), max(vals)] range pass (the exact
-    per-value check runs on the survivors anyway). Returns a conservative
-    superset or None when not applicable."""
-    ck = m.get("files_ckpt")
-    if not ck or not vals:
-        return None
-    stats_cols = ck.get("stats_cols") or []
-    if phys_col not in stats_cols:
-        return None
-    if len(vals) > 64:
-        try:
-            return _manifest_files_pruned(
-                path, m, {phys_col: (min(vals), max(vals))}
-            )
-        except TypeError:  # mixed-type values: full resolve decides
-            return None
-    i = stats_cols.index(phys_col)
-    import io
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    table = _ckpt_table(path, m)
-    has = table[f"s{i}_has"]
-    mn, mx = table[f"s{i}_min"], table[f"s{i}_max"]
-    any_hit = None
-    try:
-        unknown = pc.or_(
-            pc.invert(pc.fill_null(has, False)),
-            pc.or_(pc.is_null(mn), pc.is_null(mx)),
-        )
-        for v in vals:
-            r = _stats_repr(v)
-            if r is None:
-                return None  # unprunable literal: every file may hold it
-            v_hi = _ckpt_cmp_scalar(mn.type, r)
-            v_lo = _ckpt_cmp_scalar(mx.type, r)
-            if v_hi is None or v_lo is None:
-                return None
-            rng = pc.fill_null(
-                pc.and_(pc.less_equal(mn, v_hi), pc.greater_equal(mx, v_lo)),
-                False,
-            )
-            any_hit = rng if any_hit is None else pc.or_(any_hit, rng)
-        keep = pc.or_(unknown, any_hit)
-    except (pa.lib.ArrowInvalid, pa.lib.ArrowNotImplementedError, TypeError,
-            OverflowError):
-        return None
-    filtered = table.filter(pc.fill_null(keep, True))
-    return _decode_typed_ckpt(filtered.to_pydict(), ck)
-
-
 def _manifest_files_pruned(
-    path: str, m: dict, phys_predicates: dict
+    path: str, m: dict, conjuncts: list
 ) -> list[dict] | None:
-    """Vectorized stats pruning INSIDE the checkpoint resolve: evaluate
-    ``{physical_col: (lo, hi)}`` range predicates over a TYPED sidecar's
-    native min/max columns with Arrow compute, then materialize ONLY the
-    surviving entries as Python dicts. At 100k+ files this is the
-    difference between reconstructing the whole file list (O(files) Python
-    object churn) and reconstructing the handful a pruned scan opens —
-    the log-replay data skipping Delta performs on its checkpoint.
+    """The file-skipping rule vectorized INSIDE the checkpoint resolve:
+    ``_file_skip``'s stats test over a TYPED sidecar's native min/max
+    columns with Arrow compute, then ONLY the surviving entries
+    materialize as Python dicts. At 100k+ files this is the difference
+    between reconstructing the whole file list and reconstructing the
+    handful a pruned scan opens — the log-replay data skipping Delta
+    performs on its checkpoint. A ``=`` conjunct over more than 64 values
+    collapses to one [min, max] range pass.
 
-    Returns a conservative SUPERSET of the exact prune (semantics
-    identical: callers re-apply ``_stats_may_contain`` on the survivors),
-    or None when not applicable — no checkpoint, no predicate on a
-    stats column, or a type pairing the vectorized compare can't do
-    exactly (caller falls back to the full resolve)."""
+    Returns a SUPERSET of what ``_file_skip`` keeps (callers re-apply it
+    to the survivors, Bloom filters included), or None when no conjunct
+    applies — no checkpoint, or no conjunct on a stats column whose
+    literals place as exact sidecar scalars — and the caller resolves
+    every entry."""
     ck = m.get("files_ckpt")
-    if not ck or not phys_predicates:
+    if not ck or not conjuncts:
         return None
-    stats_cols = ck.get("stats_cols") or []
-    idx = {c: i for i, c in enumerate(stats_cols)}
-    usable = {
-        c: rng for c, rng in phys_predicates.items() if c in idx
-    }
-    if not usable:
-        return None
-    import io
-
-    import pyarrow as pa
     import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
+    idx = {c: i for i, c in enumerate(ck.get("stats_cols") or [])}
+    types, mapping = _schema_types(m), _mapping(m)
     table = _ckpt_table(path, m)
-    lit_for = _ckpt_cmp_scalar
     keep = None
-    try:
-        for c, (lo, hi) in usable.items():
-            i = idx[c]
-            has = table[f"s{i}_has"]
-            mn, mx = table[f"s{i}_min"], table[f"s{i}_max"]
-            lo_r, hi_r = _stats_repr(lo), _stats_repr(hi)
-            if lo_r is None or hi_r is None:
-                continue  # unprunable literal: this predicate keeps all
-            hi_s = lit_for(mn.type, hi_r)
-            lo_s = lit_for(mx.type, lo_r)
-            if hi_s is None or lo_s is None:
-                return None  # inexact pairing: full resolve decides
-            unknown = pc.or_(
-                pc.invert(pc.fill_null(has, False)),
-                pc.or_(pc.is_null(mn), pc.is_null(mx)),
-            )
-            rng = pc.and_(
-                pc.less_equal(mn, hi_s), pc.greater_equal(mx, lo_s)
-            )
-            cond = pc.or_(unknown, pc.fill_null(rng, False))
-            keep = cond if keep is None else pc.and_(keep, cond)
-    except (pa.lib.ArrowInvalid, pa.lib.ArrowNotImplementedError, TypeError,
-            OverflowError):
-        return None
+    for col, op, vals in conjuncts:
+        i = idx.get(_phys(mapping, col))
+        if i is None or op not in _SKIP_DISPROOF or not vals:
+            continue
+        keys = [_skip_key(types.get(col), v, True) for v in vals]
+        if None in keys:
+            continue
+        if len(keys) > 64:
+            keys = [(min(k[0] for k in keys), max(k[1] for k in keys))]
+        bounds = (table[f"s{i}_min"], table[f"s{i}_max"])
+        lits = [[_ckpt_cmp_scalar(bounds[0].type, b) for b in k] for k in keys]
+        if any(None in s for s in lits):
+            continue
+        may = None
+        for s in lits:
+            no = None
+            for f, cmp, l_ in _SKIP_DISPROOF[op]:
+                d = getattr(pc, _ARROW_CMP[cmp])(bounds[f], s[l_])
+                no = d if no is None else pc.or_(no, d)
+            hit = pc.invert(pc.fill_null(no, False))
+            may = hit if may is None else pc.or_(may, hit)
+        keep = may if keep is None else pc.and_(keep, may)
     if keep is None:
         return None
-    filtered = table.filter(pc.fill_null(keep, True))
-    d = filtered.to_pydict()
-    return _decode_typed_ckpt(d, ck)
+    return _decode_typed_ckpt(table.filter(keep).to_pydict(), ck)
 
 
 def _maybe_parquet_checkpoint(path: str, manifest: dict, version: int) -> dict:
@@ -1425,28 +1358,180 @@ _BLOOM_LIT_TYPES = {
     "byte": int, "short": int, "integer": int, "long": int, "string": str,
     "date": _dt.date, "timestamp_ntz": _dt.datetime,
 }
+_INTEGRAL_TYPES = ("byte", "short", "integer", "long")
+# op -> the tests that DISPROVE ``col op literal`` for a file: (file bound,
+# comparison, literal bound), with 0/1 picking the file's min/max and the
+# literal key's lo/hi. Disproofs, so an incomparable NaN bound (every
+# comparison False) keeps the file.
+_SKIP_DISPROOF = {
+    "=": ((1, operator.lt, 0), (0, operator.gt, 1)),
+    "<": ((0, operator.ge, 1),),
+    "<=": ((0, operator.gt, 1),),
+    ">": ((1, operator.le, 0),),
+    ">=": ((1, operator.lt, 0),),
+}
+_ARROW_CMP = {
+    operator.lt: "less", operator.le: "less_equal",
+    operator.gt: "greater", operator.ge: "greater_equal",
+}
 
 
-def _lookup_positions_fn(m: dict | None):
-    """``positions(col, value)`` for lookups against manifest ``m``: the
-    bloom positions of literal ``value`` on logical column ``col``, or None
-    (read every file) when the literal's type does not match the column's
-    Spark type."""
-    fields = {
-        f["name"]: f["type"]
-        for f in json.loads((m or {}).get("schema") or "{}").get("fields", [])
-    }
+def _schema_types(m: dict | None) -> dict:
+    """Logical column -> Spark type name of a manifest's schema (simple
+    types only)."""
+    fields = json.loads((m or {}).get("schema") or "{}").get("fields", [])
+    return {f["name"]: f["type"] for f in fields if isinstance(f["type"], str)}
 
-    def positions(col: str, value) -> list[int] | None:
-        t = fields.get(col)
-        want = _BLOOM_LIT_TYPES.get(t) if isinstance(t, str) else None
-        if want is None or not isinstance(value, want) or (
-            want is _dt.date and isinstance(value, _dt.datetime)
-        ):
+
+def _session_zone():
+    """The zone a SQL timestamp literal is read in: the active session's
+    ``spark.sql.session.timeZone`` (UTC, the engine's pin in ``session.py``,
+    where no session is active), or None when it is no IANA zone id."""
+    from zoneinfo import ZoneInfo
+
+    s = SparkSession.getActiveSession()
+    try:
+        return ZoneInfo(s.conf.get("spark.sql.session.timeZone") if s else "UTC")
+    except Exception:
+        return None
+
+
+def _skip_key(t, v, literal: bool):
+    """``(lo, hi)``: where ``v`` — a min/max stat, or with ``literal`` a
+    predicate literal — lies in one ordered domain for a column of Spark
+    type ``t``; None when it cannot be placed (the file may match).
+    Numbers compare as numbers, STRING in text order, DATE and
+    TIMESTAMP_NTZ chronologically. TIMESTAMP compares as instants: its
+    stats are the writing process's local wall clock (what ``collect()``
+    returns in ``_scan_file_entries``) or carry an offset (the data
+    source's writer); a naive datetime literal is local time too, and a
+    string literal is read in the session zone. A local wall clock that a
+    DST fold makes ambiguous spans both of its instants."""
+    if v is None or isinstance(v, bool) != (t == "boolean"):
+        return None
+    if t == "boolean" or (t == "string" and isinstance(v, str)):
+        return v, v
+    if t in _INTEGRAL_TYPES or t in ("float", "double"):
+        if not isinstance(v, (int, float)):
             return None
-        return bloom_positions(value, _BLOOM_M_MAX, _BLOOM_K)
+        # Spark compares an integral column with a floating literal, and a
+        # FLOAT/DOUBLE column with an integral one, in floating point:
+        # exact below the mantissa limit, where Python's comparison agrees
+        lim = 2**24 if t == "float" else 2**53
+        if isinstance(v, float) != (t in ("float", "double")) and not abs(v) < lim:
+            return None
+        return v, v
+    if t == "date":
+        if isinstance(v, str) and len(v) == 10:
+            try:
+                v = _dt.date.fromisoformat(v)
+            except ValueError:
+                return None
+        ok = isinstance(v, _dt.date) and not isinstance(v, _dt.datetime)
+        return (v, v) if ok else None
+    if t not in ("timestamp", "timestamp_ntz"):
+        return None
+    if isinstance(v, str):
+        v = _try_iso_dt(v)
+        if v is not None and v.tzinfo is None and literal and t == "timestamp":
+            zone = _session_zone()
+            v = v.replace(tzinfo=zone) if zone is not None else None
+    if not isinstance(v, _dt.datetime):
+        return None
+    if t == "timestamp_ntz":
+        return (v, v) if v.tzinfo is None else None
+    if v.tzinfo is not None:
+        return v, v
+    try:
+        lo, hi = sorted(v.replace(fold=f).astimezone() for f in (0, 1))
+    except (OverflowError, OSError, ValueError):
+        return None
+    return lo, hi
 
-    return positions
+
+def _file_skip(m: dict | None, path: str):
+    """THE file-skipping rule of the snapshot protocol: returns
+    ``may_match(entry, conjuncts)``, whether a file of manifest ``m``
+    (table at ``path``) may hold a row satisfying every ``(col, op,
+    values)`` conjunct, in ``_predicate_conjuncts``' form: ``=`` holds for
+    any of the values, ``<``/``<=``/``>``/``>=`` compare with one, and
+    ``notnull`` (no values) asks for a non-null value.
+
+    Min/max stats disprove a conjunct when every value lies outside the
+    file's range, both sides placed by ``_skip_key`` in the convention of
+    the column's type. A ``=`` value is also disproved by the file's Bloom
+    filter when its Python type is one the column hashes
+    (``_BLOOM_LIT_TYPES``); ``notnull`` only by a Bloom built over an
+    all-null file. Whatever cannot be placed may match: a wrong skip loses
+    rows, an extra file costs only I/O. Every scan, DML, MERGE, conflict
+    check, maintenance scope and data-source read skips files through
+    this test; ``_manifest_files_pruned`` is its vectorized stats form."""
+    types, mapping = _schema_types(m), _mapping(m or {})
+    keys: dict = {}
+    positions: dict = {}
+
+    def key(col, v, literal: bool):
+        try:
+            return keys[col, literal, type(v), v]
+        except KeyError:
+            out = keys[col, literal, type(v), v] = _skip_key(
+                types.get(col), v, literal
+            )
+            return out
+        except TypeError:  # unhashable value: cannot be placed
+            return None
+
+    def bloom_says_no(e: dict, col: str, phys: str, v) -> bool:
+        want = _BLOOM_LIT_TYPES.get(types.get(col))
+        if want is None or not isinstance(v, want) or (
+            want is _dt.date and isinstance(v, _dt.datetime)
+        ):
+            return False
+        if (type(v), v) not in positions:
+            positions[type(v), v] = bloom_positions(v, _BLOOM_M_MAX, _BLOOM_K)
+        pos = positions[type(v), v]
+        return pos is not None and not _bloom_may_contain(
+            _entry_bloom(path, e, phys), pos
+        )
+
+    def may_match(e: dict, conjuncts) -> bool:
+        stats = e.get("stats") or {}
+        for col, op, vals in conjuncts:
+            phys = _phys(mapping, col)
+            if op == "notnull":
+                if not _bloom_may_contain(_entry_bloom(path, e, phys), []):
+                    return False
+                continue
+            tests = _SKIP_DISPROOF.get(op)
+            s = stats.get(phys)
+            rng = None
+            if s and tests:
+                lo, hi = key(col, s[0], False), key(col, s[1], False)
+                rng = (lo[0], hi[1]) if lo and hi else None
+            bloom = op == "=" and e.get("bloom_ref")
+            for v in vals:
+                k = key(col, v, True) if rng else None
+                if k and any(cmp(rng[f], k[l_]) for f, cmp, l_ in tests):
+                    continue
+                if bloom and bloom_says_no(e, col, phys, v):
+                    continue
+                break  # this value may match
+            else:
+                if vals:
+                    return False  # every value disproved
+        return True
+
+    return may_match
+
+
+def _files_may_match(path: str, m: dict, conjuncts: list) -> list[dict]:
+    """The live entries of manifest ``m`` that ``_file_skip`` keeps for
+    ``conjuncts``; a typed checkpoint prunes vectorized first."""
+    files = _manifest_files_pruned(path, m, conjuncts)
+    if files is None:
+        files = _manifest_files(path, m)
+    may = _file_skip(m, path)
+    return [e for e in files if may(e, conjuncts)]
 
 
 # Merge batches with at most this many DISTINCT keys get per-key candidate
@@ -1457,49 +1542,24 @@ _MERGE_KEY_PRUNE_MAX = 200
 
 
 def _prune_candidates_by_keys(
-    m: dict,
-    path: str,
-    candidates: list,
-    key_cols: list,
-    key_rows: list,
-    mapping: dict | None,
+    m: dict, path: str, candidates: list, key_cols: list, key_rows: list
 ) -> list:
     """Keep only candidate files that MAY hold at least one incoming key
-    tuple, testing each (file, key) pair against per-file min/max stats
-    AND (where the table was written with ``bloom_cols``) per-file Bloom
-    bitsets. Batch-wide bounds cannot prune a scattered micro-batch — a
-    handful of keys spanning the key range brackets every file — but
-    point tests can: that is what makes a small keyed MERGE against a big
-    clustered or bloom-indexed table touch O(keys) files, not O(table).
-    Sound over-approximation: a kept file may still hold no key (stage 2
-    settles it); a dropped file provably holds none. Null key components
-    skip their column's test (stats/bloom say nothing about nulls).
-    ``m`` is the manifest whose schema types the key columns."""
-    phys = {c: _phys(mapping or {}, c) for c in key_cols}
-    # bloom positions per key row and column, aligned with key_rows
-    if any(e.get("bloom_ref") for e in candidates):
-        positions = _lookup_positions_fn(m)
-        row_pos = [{c: positions(c, r[c]) for c in key_cols} for r in key_rows]
-    else:
-        row_pos = [{}] * len(key_rows)
-
-    def col_may_hold(e: dict, c: str, v, pos) -> bool:
-        if v is None:
-            return True
-        if not _stats_may_contain(e.get("stats"), phys[c], v, v):
-            return False
-        return pos is None or _bloom_may_contain(
-            _entry_bloom(path, e, phys[c]), pos
-        )
-
-    return [
-        e
-        for e in candidates
-        if any(
-            all(col_may_hold(e, c, r[c], rp.get(c)) for c in key_cols)
-            for r, rp in zip(key_rows, row_pos)
-        )
+    tuple: one ``=`` conjunct per key column and row through
+    ``_file_skip`` (min/max stats, and Bloom bitsets where the table was
+    written with ``bloom_cols``). Batch-wide bounds cannot prune a
+    scattered micro-batch — a handful of keys spanning the key range
+    brackets every file — but point tests can: that is what makes a small
+    keyed MERGE against a big clustered or bloom-indexed table touch
+    O(keys) files, not O(table). A kept file may still hold no key (stage
+    2 settles it). Null key components skip their column's test. ``m`` is
+    the manifest whose schema types the key columns."""
+    may = _file_skip(m, path)
+    rows = [
+        [(c, "=", [r[c]]) for c in key_cols if r[c] is not None]
+        for r in key_rows
     ]
+    return [e for e in candidates if any(may(e, cj) for cj in rows)]
 
 
 def _scan_file_entries(
@@ -1513,19 +1573,22 @@ def _scan_file_entries(
 ) -> tuple[list[dict], int]:
     """List the parquet files of a freshly-written data dir and (in ONE
     column-pruned scan) compute per-file row counts, min/max stats for
-    ``stats_cols``, and Bloom bitsets for ``bloom_cols`` — the metadata
-    ``snapshot_merge`` / ``snapshot_scan`` prune by. Min/max skips range
+    ``stats_cols``, and Bloom bitsets for ``bloom_cols`` — the metadata the
+    one skip rule, ``_file_skip``, prunes by. Min/max skips range
     predicates on clustered columns; the bloom skips POINT lookups on
     high-cardinality unsorted columns, where every file's [min, max]
-    brackets everything and range stats are useless.
+    brackets everything and range stats are useless. TIMESTAMP stats are
+    what ``collect()`` returns: this process's local wall clock.
 
     With ``partition_cols`` the dir holds a HIVE layout (``key=value``
     subdirectories from a ``partitionBy`` write or an in-place CONVERT):
     entries carry their partition values (string form, per ``partition``)
     AND those values folded into ``stats`` as degenerate ``[v, v]``
-    ranges — every existing pruning path (scan skipping, merge candidate
-    selection, OCC disjointness proofs, OPTIMIZE WHERE scoping) then
-    prunes on partition predicates with zero new machinery.
+    ranges — so every path that skips through ``_file_skip`` (snapshot_scan
+    and snapshot_scan_in, MERGE bound and per-key prunes, predicate DML
+    discovery and DROP-PARTITION, OCC disjointness proofs, OPTIMIZE and
+    ZORDER WHERE scoping, format("snapshot") reads) prunes on partition
+    predicates with zero new machinery.
     ``read_schema`` types the partition values (Spark's path inference
     alone would re-type "03" as 3)."""
     if partition_cols:
@@ -2416,36 +2479,17 @@ def _widens(narrow, wide) -> bool:
 
 
 def _stats_repr(v):
-    """JSON-safe, ORDER-PRESERVING representation of a min/max stat value.
-    datetime/date -> ISO-8601 strings (fixed-width date+time prefix, so
-    lexicographic order == chronological order); int/float/str/bool pass
-    through. Anything else (Decimal, bytes, ...) -> None, which
-    ``_stats_may_contain`` treats as "must assume the file matches" —
-    pruning stays conservative rather than risking a wrongly skipped
-    file."""
-    import datetime as _dt
-
+    """JSON-safe representation of a min/max stat value: datetime/date ->
+    ISO-8601 strings (``_skip_key`` parses them back by the column's
+    type); int/float/str/bool pass through. Anything else (Decimal,
+    bytes, ...) -> None, which the skip rule treats as "must assume the
+    file matches" — pruning stays conservative rather than risking a
+    wrongly skipped file."""
     if isinstance(v, (_dt.datetime, _dt.date)):
         return v.isoformat()
     if v is None or isinstance(v, (int, float, str)):
         return v
     return None
-
-
-def _stats_may_contain(stats: dict | None, col: str, lo, hi) -> bool:
-    """Can a file with these stats contain any key in [lo, hi]? Missing
-    stats => must assume yes (legacy manifests). ``lo``/``hi`` come from a
-    live DataFrame (e.g. datetimes) and are canonicalized through
-    ``_stats_repr`` to match the manifest encoding."""
-    if not stats or col not in stats:
-        return True
-    mn, mx = stats[col]
-    if mn is None or mx is None:
-        return True
-    lo, hi = _stats_repr(lo), _stats_repr(hi)
-    if lo is None or hi is None:
-        return True
-    return not (mx < lo or mn > hi)
 
 
 def _expr_references(expr: str, col: str) -> bool:
@@ -2951,8 +2995,7 @@ def _split_top_level_and(s: str) -> list[str] | None:
 
 def _try_iso_dt(v):
     """datetime for an ISO-ish literal/stat string (space or 'T'
-    separator), else None — temporal stats compare chronologically, never
-    textually (isoformat 'T' vs SQL ' ' would corrupt string order)."""
+    separator), else None."""
     import datetime as _dt
     import re
 
@@ -3016,25 +3059,6 @@ def _predicate_conjuncts(predicate: str) -> list[tuple[str, str, list]]:
             continue
         # unparseable conjunct: dropped (sound — see docstring)
     return out
-
-
-def _pred_cmp(a, b):
-    """(a', b') coerced to a comparable pair, or None when comparing would
-    be unsafe (mixed types, one temporal-looking string)."""
-    ta, tb = _try_iso_dt(a), _try_iso_dt(b)
-    if ta is not None and tb is not None:
-        if (ta.tzinfo is None) != (tb.tzinfo is None):
-            return None
-        return ta, tb
-    if (ta is None) != (tb is None):
-        return None
-    if isinstance(a, bool) or isinstance(b, bool):
-        return (a, b) if isinstance(a, bool) and isinstance(b, bool) else None
-    if isinstance(a, str) and isinstance(b, str):
-        return a, b
-    if isinstance(a, (int, float)) and isinstance(b, (int, float)):
-        return a, b
-    return None
 
 
 def _monotone_expr(expr: str):
@@ -3168,34 +3192,25 @@ def _monotone_expr(expr: str):
     return None
 
 
-def _gen_partition_derivations(m: dict) -> list[tuple]:
-    """[(partition_col, base_col, py_fn)] for partition columns whose
-    generated rule is a supported monotone expression."""
-    out = []
-    gen = _generated(m)
-    for g in m.get("partition_cols") or []:
-        rule = gen.get(g)
-        if not rule:
-            continue
-        parsed = _monotone_expr(rule)
-        if parsed:
-            out.append((g, parsed[0], parsed[1]))
-    return out
-
-
 def _derive_generated_conjuncts(m: dict, conjuncts: list) -> list:
     """Extra REQUIRED conjuncts on generated partition columns implied by
     conjuncts on their base column: ``ts >= lo`` implies
-    ``year_col >= year(lo)`` for a monotone rule — sound to add, and it
-    makes partition [v, v] stats prune DML discovery and OCC adds checks
-    even when the user's predicate never names the partition column."""
+    ``year_col >= year(lo)`` for a monotone rule (``_monotone_expr``) —
+    sound to add, and it makes partition [v, v] stats prune scans, DML
+    discovery and OCC adds checks even when the predicate never names the
+    partition column. The one derivation every skipping caller uses."""
     out = []
-    for g, base, fn in _gen_partition_derivations(m):
+    gen = _generated(m)
+    for g in m.get("partition_cols") or []:
+        parsed = _monotone_expr(gen[g]) if gen.get(g) else None
+        if not parsed:
+            continue
+        base, fn = parsed
         for col, op, vals in conjuncts:
             if col != base:
                 continue
             dvals = [_stats_repr(fn(v)) for v in vals]
-            if any(d is None for d in dvals):
+            if not dvals or any(d is None for d in dvals):
                 continue
             if op == "=":
                 out.append((g, "=", dvals))
@@ -3208,109 +3223,39 @@ def _derive_generated_conjuncts(m: dict, conjuncts: list) -> list:
 
 
 def _partition_drop_split(
-    files: list[dict], predicate: str, pcols: set, mapping: dict
+    files: list[dict], predicate: str, pcols: set, may_match
 ) -> tuple[list[dict], list[dict]] | None:
     """(dropped, kept) when the predicate is EXACTLY a conjunction of
-    ``=``/``IN`` tests on partition columns and every live file decides
-    WHOLLY from its exact per-file partition value ([v, v] stats) — the
-    Delta DROP-PARTITION shape: a metadata-only commit, zero rows read.
-    Returns None whenever anything is inexact (unparsed conjunct, a
-    non-partition column, a file spanning values, missing stats/rows) —
-    the caller falls back to the row-level scan path."""
-    import re
+    ``=``/``IN`` tests on partition columns and the skip rule ``may_match``
+    decides every live file WHOLLY — no row can match (kept), or no row
+    can lie below or above a value on each column (dropped) — the Delta
+    DROP-PARTITION shape: a metadata-only commit, zero rows read. Returns
+    None whenever anything is inexact (unparsed conjunct, a non-partition
+    column, a file spanning values, missing stats/rows) — the caller
+    falls back to the row-level scan path."""
+    parsed = [_predicate_conjuncts(p) for p in _split_top_level_and(predicate) or []]
+    if not parsed or any(
+        len(c) != 1 or c[0][1] != "=" or c[0][0] not in pcols for c in parsed
+    ):
+        return None
+    conj = [c[0] for c in parsed]
 
-    pieces = _split_top_level_and(predicate)
-    if not pieces:
-        return None
-    cmp_re = re.compile(
-        rf"^\s*\(?\s*`?(?P<col>[A-Za-z_][A-Za-z0-9_]*)`?\s*"
-        rf"(?P<op>=|==)\s*{_PRED_LIT}\s*\)?\s*$"
-    )
-    in_re = re.compile(
-        r"^\s*\(?\s*`?(?P<col>[A-Za-z_][A-Za-z0-9_]*)`?\s+(?i:IN)\s*"
-        r"\((?P<body>[^()]*)\)\s*\)?\s*$"
-    )
-    lit_re = re.compile(rf"^\s*{_PRED_LIT}\s*$")
-    conj: list[tuple[str, list]] = []
-    for p in pieces:
-        m = cmp_re.match(p)
-        if m:
-            conj.append((m.group("col"), [_pred_parse_lit(m)]))
-            continue
-        m = in_re.match(p)
-        if not m:
-            return None
-        vals = []
-        for item in m.group("body").split(","):
-            lm = lit_re.match(item)
-            if not lm:
-                return None
-            vals.append(_pred_parse_lit(lm))
-        if not vals:
-            return None
-        conj.append((m.group("col"), vals))
-    if not conj or any(col not in pcols for col, _ in conj):
-        return None
+    def only(e: dict, col: str, v) -> bool:
+        return not (
+            may_match(e, [(col, "<", [v])]) or may_match(e, [(col, ">", [v])])
+        )
+
     dropped, kept = [], []
     for e in files:
         if e.get("rows") is None:
             return None
-        stats = e.get("stats") or {}
-        match_all = True
-        for col, vals in conj:
-            s = stats.get(_phys(mapping, col))
-            if not s or s[0] is None or s[0] != s[1]:
-                return None  # not an exact single-value file: fall back
-            hit = False
-            for v in vals:
-                cp = _pred_cmp(s[0], v)
-                if cp is None:
-                    return None
-                if cp[0] == cp[1]:
-                    hit = True
-                    break
-            if not hit:
-                match_all = False
-                break
-        (dropped if match_all else kept).append(e)
+        if not may_match(e, conj):
+            kept.append(e)
+        elif all(any(only(e, col, v) for v in vals) for col, _, vals in conj):
+            dropped.append(e)
+        else:
+            return None
     return dropped, kept
-
-
-def _pred_may_match_entry(e: dict, conjuncts, mapping: dict | None) -> bool:
-    """Can any row of this manifest entry satisfy every conjunct, judged
-    by its min/max stats? True (may match) whenever stats are missing or
-    incomparable — sound over-approximation."""
-    stats = e.get("stats") or {}
-    for col, op, vals in conjuncts:
-        s = stats.get(_phys(mapping or {}, col))
-        if not s or s[0] is None or s[1] is None:
-            continue  # no stats: this conjunct can't disprove
-        mn, mx = s
-        may = False
-        for v in vals:
-            lo = _pred_cmp(mn, v)
-            hi = _pred_cmp(mx, v)
-            if lo is None or hi is None:
-                may = True
-                break
-            if op == "=":
-                ok = lo[0] <= lo[1] and hi[1] <= hi[0]
-            elif op == "<":
-                ok = lo[0] < lo[1]
-            elif op == "<=":
-                ok = lo[0] <= lo[1]
-            elif op == ">":
-                ok = hi[0] > hi[1]
-            elif op == ">=":
-                ok = hi[0] >= hi[1]
-            else:  # pragma: no cover - parser emits only the ops above
-                ok = True
-            if ok:
-                may = True
-                break
-        if not may:
-            return False  # one required conjunct provably never holds
-    return True
 
 
 def _rebase_concurrent(
@@ -3323,7 +3268,6 @@ def _rebase_concurrent(
     produced: list[dict],
     op: str,
     key_cols: list | None = None,
-    mapping: dict | None = None,
     bounds=None,
     key_rows: list | None = None,
     incoming: DataFrame | None = None,
@@ -3416,6 +3360,7 @@ def _rebase_concurrent(
         if e["path"] not in base_paths and e.get("rows") != 0
     ]
     if adds and not allow_any_adds:
+        may = _file_skip(latest, path)
         if forbid_adds:
             conflict(
                 "a concurrent commit added rows and this merge classifies "
@@ -3424,10 +3369,8 @@ def _rebase_concurrent(
         elif key_cols is not None and bounds is not None:
             # keyed MERGE: adds conflict only when a concurrently added
             # file MAY hold one of this batch's keys
-            overlapping = [
-                e for e in adds
-                if _entry_may_hold_keys(e, key_cols, bounds, mapping or {})
-            ]
+            bound_conj = _key_bound_conjuncts(key_cols, bounds)
+            overlapping = [e for e in adds if may(e, bound_conj)]
             if overlapping:
                 rows = key_rows
                 if rows is None and incoming is not None:
@@ -3439,7 +3382,7 @@ def _rebase_concurrent(
                     )
                 if rows is not None and len(rows) <= _MERGE_KEY_PRUNE_MAX:
                     overlapping = _prune_candidates_by_keys(
-                        latest, path, overlapping, key_cols, rows, mapping
+                        latest, path, overlapping, key_cols, rows
                     )
                 if overlapping:
                     conflict(
@@ -3450,18 +3393,14 @@ def _rebase_concurrent(
         elif predicate is not None:
             # predicate DML (UPDATE/DELETE WHERE): adds conflict only when
             # a concurrently added file MAY hold a predicate-matching row
-            # (Delta's ConcurrentAppendException rule) — judged by min/max
-            # stats against the predicate's required conjuncts, plus
+            # (Delta's ConcurrentAppendException rule) — judged by the skip
+            # rule against the predicate's required conjuncts, plus
             # conjuncts derived onto generated partition columns (an
             # append into another partition proves disjoint even when the
             # predicate only names the base timestamp column).
             conjuncts = _predicate_conjuncts(predicate)
             conjuncts = conjuncts + _derive_generated_conjuncts(cur, conjuncts)
-            overlapping = (
-                [e for e in adds if _pred_may_match_entry(e, conjuncts, mapping)]
-                if conjuncts
-                else adds
-            )
+            overlapping = [e for e in adds if may(e, conjuncts)]
             if overlapping:
                 conflict(
                     "concurrently added file(s) "
@@ -3534,7 +3473,7 @@ def _commit_swap(
         if latest["version"] != base_version:
             files_out, n_out = _rebase_concurrent(
                 spark, path, cur, latest, replaced=replaced, produced=produced,
-                op=op, mapping=mapping, **rebase,
+                op=op, **rebase,
             )
         out = {
             "data_dirs": _dirs_of(files_out),
@@ -3561,20 +3500,18 @@ def _carried_rows(
     return sum(_live_rows(e) for e in entries)
 
 
-def _entry_may_hold_keys(e: dict, key_cols: list, bounds, mapping: dict) -> bool:
-    """Whether an entry's min/max stats overlap the batch's key bounds
-    (``_lo_<col>``/``_hi_<col>``) on every key column."""
-    return all(
-        _stats_may_contain(
-            e.get("stats"), _phys(mapping, c),
-            bounds[f"_lo_{c}"], bounds[f"_hi_{c}"],
-        )
+def _key_bound_conjuncts(key_cols: list, bounds) -> list:
+    """The batch's key bounds (``_lo_<col>``/``_hi_<col>``) as skip-rule
+    range conjuncts on every key column."""
+    return [
+        (c, op, [bounds[f"_{side}_{c}"]])
         for c in key_cols
-    )
+        for op, side in ((">=", "lo"), ("<=", "hi"))
+    ]
 
 
 def _key_bounds_prune(
-    files: list[dict], keyed: DataFrame, key_cols: list, mapping: dict
+    cur: dict, path: str, files: list[dict], keyed: DataFrame, key_cols: list
 ) -> tuple:
     """MERGE prune stage 1, in metadata only: the batch's key bounds (one
     aggregate job) and the files whose stats may hold a key in them."""
@@ -3582,9 +3519,8 @@ def _key_bounds_prune(
         *[F.min(c).alias(f"_lo_{c}") for c in key_cols],
         *[F.max(c).alias(f"_hi_{c}") for c in key_cols],
     ).collect()[0]
-    return bounds, [
-        e for e in files if _entry_may_hold_keys(e, key_cols, bounds, mapping)
-    ]
+    may, conj = _file_skip(cur, path), _key_bound_conjuncts(key_cols, bounds)
+    return bounds, [e for e in files if may(e, conj)]
 
 
 def _split_touched(
@@ -3804,7 +3740,7 @@ def snapshot_merge(
         _enforce_constraints(incoming, path, "merge")
 
     files = _manifest_files(path, cur)
-    bounds, candidates = _key_bounds_prune(files, incoming, key_cols, mapping)
+    bounds, candidates = _key_bounds_prune(cur, path, files, incoming, key_cols)
     # --- prune stage 1.5: per-key refinement for SMALL batches -----------
     # Batch-wide bounds cannot prune a scattered micro-batch; point tests
     # per incoming key (stats + blooms) can — the maintenance-wave shape.
@@ -3821,7 +3757,7 @@ def snapshot_merge(
         if len(probe) <= _MERGE_KEY_PRUNE_MAX:
             key_rows = probe
             candidates = _prune_candidates_by_keys(
-                cur, path, candidates, key_cols, key_rows, mapping
+                cur, path, candidates, key_cols, key_rows
             )
     if mode == "dv":
         return _merge_dv(
@@ -4067,7 +4003,7 @@ def snapshot_merge_when(
     mapping = _mapping(cur)
     files = _manifest_files(path, cur)
 
-    bounds, candidates = _key_bounds_prune(files, source, key_cols, mapping)
+    bounds, candidates = _key_bounds_prune(cur, path, files, source, key_cols)
 
     # Delta guard: a target row matched by >1 source row is an error.
     dup_keys = (
@@ -4271,8 +4207,8 @@ def _stats_cols_in_use(cur: dict, path: str | None = None) -> list[str]:
 def _predicate_file_split(
     spark: SparkSession, path: str, cur: dict, predicate: str
 ) -> tuple[list[dict], list[dict]]:
-    """(touched, untouched) manifest file entries for a row predicate: a
-    stats pre-prune (the predicate's required conjuncts, plus conjuncts
+    """(touched, untouched) manifest file entries for a row predicate: the
+    skip rule over the predicate's required conjuncts (plus conjuncts
     DERIVED onto generated partition columns) bounds the candidate set in
     metadata, then ONE scan projecting only the predicate's input columns
     + input_file_name finds the files that truly hold a matching row.
@@ -4284,12 +4220,8 @@ def _predicate_file_split(
         return [], []
     conjuncts = _predicate_conjuncts(predicate)
     conjuncts = conjuncts + _derive_generated_conjuncts(cur, conjuncts)
-    mapping = _mapping(cur)
-    candidates = (
-        [e for e in files if _pred_may_match_entry(e, conjuncts, mapping)]
-        if conjuncts
-        else list(files)
-    )
+    may = _file_skip(cur, path)
+    candidates = [e for e in files if may(e, conjuncts)]
     if not candidates:
         return [], list(files)
     return _split_touched(
@@ -4378,7 +4310,8 @@ def snapshot_delete_where(
         # At 100 TB this turns "delete a year" from a rewrite into a
         # manifest diff. Falls through whenever anything is inexact.
         split = _partition_drop_split(
-            _manifest_files(path, cur), predicate, set(pcols), _mapping(cur)
+            _manifest_files(path, cur), predicate, set(pcols),
+            _file_skip(cur, path),
         )
         if split is not None:
             dropped, kept = split
@@ -4531,7 +4464,9 @@ def snapshot_replace_where(
     pcols = list(cur.get("partition_cols") or [])
     files = _manifest_files(path, cur)
     split = (
-        _partition_drop_split(files, predicate, set(pcols), mapping)
+        _partition_drop_split(
+            files, predicate, set(pcols), _file_skip(cur, path)
+        )
         if pcols
         else None
     )
@@ -4990,7 +4925,7 @@ def snapshot_compact(
     ]
     if where is not None:
         # OPTIMIZE ... WHERE (Delta parity): fold only files the predicate
-        # MAY touch, judged by their min/max stats — compaction preserves
+        # MAY touch, judged by the skip rule — compaction preserves
         # content, so the conservative "may match" scoping is always safe;
         # it just bounds the rewrite to the hot region (e.g. the current
         # ingest day) instead of the whole table. An unprovable predicate
@@ -5002,10 +4937,8 @@ def snapshot_compact(
                 "conjunct (supported: top-level AND of column-vs-literal "
                 "comparisons / IN lists); run without WHERE to compact all"
             )
-        mapping0 = _mapping(cur)
-        small = [
-            e for e in small if _pred_may_match_entry(e, conjuncts, mapping0)
-        ]
+        may = _file_skip(cur, path)
+        small = [e for e in small if may(e, conjuncts)]
     if purge_dvs:
         # REORG PURGE parity: files carrying a deletion vector join the
         # rewrite set regardless of size, materializing their deletes into
@@ -5018,10 +4951,7 @@ def snapshot_compact(
             if e.get("dv")
             and e["rows"] is not None
             and e["path"] not in seen
-            and (
-                where is None
-                or _pred_may_match_entry(e, conjuncts, mapping0)
-            )
+            and (where is None or may(e, conjuncts))
         ]
     small_paths = {e["path"] for e in small}
     big = [e for e in files if e["path"] not in small_paths]
@@ -5195,7 +5125,8 @@ def snapshot_zorder(
                 "conjunct (supported: top-level AND of column-vs-literal "
                 "comparisons / IN lists); run without WHERE to cluster all"
             )
-        folded = [e for e in files if _pred_may_match_entry(e, conjuncts, mapping)]
+        may = _file_skip(cur, path)
+        folded = [e for e in files if may(e, conjuncts)]
     else:
         folded = list(files)
     if not folded:
@@ -5290,52 +5221,21 @@ def snapshot_scan(
     v = versions[-1] if version is None else version
     m = _read_manifest(path, v)
     predicates = predicates or {}
-    # generated-column partition pruning: a range on the BASE column of a
-    # monotone generated partition column implies a range on the partition
-    # value (year(ts) etc.) — injected here so the [v, v] partition stats
-    # fire even though the caller's predicate never names the partition
-    # column. The derived range is implied, so the exact re-filter below
-    # stays a no-op on rows.
-    for g, base, fn in _gen_partition_derivations(m):
-        if g in predicates or base not in predicates:
-            continue
-        lo, hi = predicates[base]
-        dlo, dhi = fn(lo), fn(hi)
-        if dlo is not None and dhi is not None:
-            predicates = {**predicates, g: (dlo, dhi)}
-    mapping = _mapping(m)
-    # typed parquet checkpoint: push the range predicates INTO the resolve
-    # (vectorized over the sidecar's native min/max columns) so only a
-    # pruned superset of entries ever materializes driver-side; the exact
-    # _stats_may_contain pass below re-checks the survivors, so semantics
-    # are unchanged.
-    files = _manifest_files_pruned(
-        path, m, {_phys(mapping, c): rng for c, rng in predicates.items()}
-    )
-    if files is None:
-        files = _manifest_files(path, m)
-    bloom_pos: dict[str, list[int] | None] = {}
-    if any(e.get("bloom_ref") for e in files):
-        positions = _lookup_positions_fn(m)
-        for c, (lo, hi) in predicates.items():
-            if lo == hi:
-                bloom_pos[c] = positions(c, lo)
-    kept = [
-        e
-        for e in files
-        if all(
-            _stats_may_contain(e.get("stats"), _phys(mapping, c), lo, hi)
-            and (
-                c not in bloom_pos
-                or bloom_pos[c] is None
-                or _bloom_may_contain(
-                    _entry_bloom(path, e, _phys(mapping, c)), bloom_pos[c]
-                )
-            )
-            for c, (lo, hi) in predicates.items()
+    conjuncts = [
+        cj
+        for c, (lo, hi) in predicates.items()
+        for cj in (
+            [(c, "=", [lo])] if lo == hi
+            else [(c, ">=", [lo]), (c, "<=", [hi])]
         )
     ]
-    if not files or not kept:
+    # generated-column partition pruning: a range on the BASE column of a
+    # monotone generated partition column implies one on the partition
+    # value, so its [v, v] stats fire though the caller never names it
+    kept = _files_may_match(
+        path, m, conjuncts + _derive_generated_conjuncts(m, conjuncts)
+    )
+    if not kept:
         base = snapshot_read(spark, path, v).limit(0)
     else:
         base = _read_entries(spark, path, m, kept)
@@ -5364,28 +5264,8 @@ def snapshot_scan_in(
         raise FileNotFoundError(f"no snapshots at {path}")
     v = versions[-1] if version is None else version
     m = _read_manifest(path, v)
-    phys = _phys(_mapping(m), col)
-    # typed checkpoint: the IN-list pushes into the resolve (Arrow union
-    # over per-value range masks) — only a pruned superset materializes;
-    # the exact per-file check below re-runs on the survivors
-    files = _manifest_files_pruned_in(path, m, phys, vals)
-    if files is None:
-        files = _manifest_files(path, m)
-    if any(e.get("bloom_ref") for e in files):
-        positions = _lookup_positions_fn(m)
-        pos = [positions(col, val) for val in vals]
-    else:
-        pos = [None] * len(vals)
-
-    def may_hold(e: dict, val, p) -> bool:
-        if not _stats_may_contain(e.get("stats"), phys, val, val):
-            return False
-        return p is None or _bloom_may_contain(_entry_bloom(path, e, phys), p)
-
-    kept = [
-        e for e in files if any(may_hold(e, val, p) for val, p in zip(vals, pos))
-    ]
-    if not vals or not kept:
+    kept = _files_may_match(path, m, [(col, "=", vals)]) if vals else []
+    if not kept:
         return snapshot_read(spark, path, v).limit(0)
     base = _read_entries(spark, path, m, kept)
     return base.filter(F.col(col).isin(list(vals)))

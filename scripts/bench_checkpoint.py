@@ -59,7 +59,10 @@ def _commit_with(entries, path, force_json: bool):
             "data_dirs": ["v=1-bench"],
             "files": list(entries),
             "n_rows": sum(e["rows"] for e in entries),
-            "schema": json.dumps({"type": "struct", "fields": []}),
+            "schema": json.dumps({"type": "struct", "fields": [
+                {"name": c, "type": t, "nullable": True, "metadata": {}}
+                for c, t in (("k", "long"), ("ts", "date"), ("year", "integer"))
+            ]}),
             "partition_cols": ["year"],
         }
 
@@ -171,7 +174,7 @@ def main() -> None:
                 t0 = time.perf_counter()
                 m = S._read_manifest(pp, vp)
                 kept = S._manifest_files_pruned(
-                    pp, m, {"year": (1995, 1995)}
+                    pp, m, [("year", "=", [1995])]
                 )
                 times.append(time.perf_counter() - t0)
                 n_kept = len(kept)

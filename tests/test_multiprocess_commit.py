@@ -192,8 +192,7 @@ def _merge_worker(args) -> tuple:
                 files, n_rows = s._rebase_concurrent(
                     None, table, cur, latest,
                     replaced=replaced, produced=[new_entry],
-                    op="merge", key_cols=["writer"], mapping={},
-                    bounds=bounds,
+                    op="merge", key_cols=["writer"], bounds=bounds,
                 )
             else:
                 keep = [

@@ -22,6 +22,12 @@ import pytest
 
 from music_recommendation_service_spark.sources import snapshots as S
 
+# schema of the hand-built checkpoint manifests: the skip rule is typed
+_K_LONG = json.dumps(
+    {"type": "struct", "fields": [
+        {"name": "k", "type": "long", "nullable": True, "metadata": {}},
+    ]}
+)
 
 @pytest.fixture(params=["local", "objectstore"])
 def snapshot_fs(request):
@@ -374,7 +380,7 @@ def test_json_layout_pointer_refused(spark, tmp_path, monkeypatch, layout):
 
 def test_pruned_resolve_superset_and_scan_equivalence(spark, tmp_path, monkeypatch):
     """_manifest_files_pruned returns a conservative superset of the exact
-    stats prune (never drops a matching file), and snapshot_scan through
+    skip rule (never drops a matching file), and snapshot_scan through
     the pruned path returns exactly the same rows as read+filter."""
     _low_thresholds(monkeypatch)
     p = str(tmp_path / "pruned")
@@ -387,14 +393,12 @@ def test_pruned_resolve_superset_and_scan_equivalence(spark, tmp_path, monkeypat
     assert "files_ckpt" in m
 
     full = S._manifest_files(p, m)
-    kept = S._manifest_files_pruned(p, m, {"year": (1995, 1995)})
+    year_1995 = [("year", ">=", [1995]), ("year", "<=", [1995])]
+    kept = S._manifest_files_pruned(p, m, year_1995)
     assert kept is not None and len(kept) < len(full)
-    # superset check vs the exact Python prune
-    exact = {
-        e["path"]
-        for e in full
-        if S._stats_may_contain(e.get("stats"), "year", 1995, 1995)
-    }
+    # superset check vs the exact per-entry rule
+    may = S._file_skip(m, p)
+    exact = {e["path"] for e in full if may(e, year_1995)}
     assert exact <= {e["path"] for e in kept}
 
     got = S.snapshot_scan(spark, p, {"year": (1995, 1995)})
@@ -404,7 +408,9 @@ def test_pruned_resolve_superset_and_scan_equivalence(spark, tmp_path, monkeypat
     )
 
     # inexact type pairing (float literal on an int column) falls back
-    assert S._manifest_files_pruned(p, m, {"year": (1995.5, 1996.5)}) is None
+    assert S._manifest_files_pruned(
+        p, m, [("year", ">=", [1995.5]), ("year", "<=", [1996.5])]
+    ) is None
     got2 = S.snapshot_scan(spark, p, {"year": (1995.0, 1996.0)})
     assert got2.count() == want.count() + 10
 
@@ -412,7 +418,7 @@ def test_pruned_resolve_superset_and_scan_equivalence(spark, tmp_path, monkeypat
 def test_pruned_resolve_keeps_statless_and_null_stat_files(spark, tmp_path):
     """Files with no stats for the predicate column (or None bounds) are
     always kept — the vectorized prune is exactly as conservative as
-    _stats_may_contain."""
+    the per-entry rule."""
     import tempfile
 
     files = [
@@ -426,8 +432,10 @@ def test_pruned_resolve_keeps_statless_and_null_stat_files(spark, tmp_path):
         S._fs().mkdirs(S._manifest_dir(d))
         ptr = S._write_parquet_checkpoint(d, files, 1)
         assert ptr["layout"] == "typed"
-        m = {"files_ckpt": ptr, "version": 1}
-        kept = S._manifest_files_pruned(d, m, {"k": (2, 3)})
+        m = {"files_ckpt": ptr, "version": 1, "schema": _K_LONG}
+        kept = S._manifest_files_pruned(
+            d, m, [("k", ">=", [2]), ("k", "<=", [3])]
+        )
     assert {e["path"].rsplit("/", 1)[-1] for e in kept} == {
         "a.parquet", "b.parquet", "c.parquet", "d.parquet",
     }
@@ -449,24 +457,26 @@ def test_pruned_resolve_in_list(spark, tmp_path):
     with tempfile.TemporaryDirectory() as d:
         S._fs().mkdirs(S._manifest_dir(d))
         ptr = S._write_parquet_checkpoint(d, files, 1)
-        m = {"files_ckpt": ptr, "version": 1}
-        kept = S._manifest_files_pruned_in(d, m, "k", [3, 15])
+        m = {"files_ckpt": ptr, "version": 1, "schema": _K_LONG}
+        kept = S._manifest_files_pruned(d, m, [("k", "=", [3, 15])])
         assert {e["path"].rsplit("/", 1)[-1] for e in kept} == {
             "a.parquet", "b.parquet", "c.parquet",
         }
         # >64 values: one conservative [min, max] range pass — [0, 65]
         # brackets d's [50, 60] too, so the superset keeps all four
         big = list(range(0, 66))
-        kept2 = S._manifest_files_pruned_in(d, m, "k", big)
+        kept2 = S._manifest_files_pruned(d, m, [("k", "=", big)])
         assert {e["path"].rsplit("/", 1)[-1] for e in kept2} == {
             "a.parquet", "b.parquet", "c.parquet", "d.parquet",
         }
         # a tight large list still prunes: [100..170] misses every file
         # except the stats-unknown one
-        kept3 = S._manifest_files_pruned_in(d, m, "k", list(range(100, 170)))
+        kept3 = S._manifest_files_pruned(
+            d, m, [("k", "=", list(range(100, 170)))]
+        )
         assert {e["path"].rsplit("/", 1)[-1] for e in kept3} == {"c.parquet"}
         # unprunable pairing falls back to the full resolve
-        assert S._manifest_files_pruned_in(d, m, "k", ["x"]) is None
+        assert S._manifest_files_pruned(d, m, [("k", "=", ["x"])]) is None
 
 
 def test_scan_in_through_checkpoint(spark, tmp_path, monkeypatch):

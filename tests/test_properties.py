@@ -519,3 +519,134 @@ def test_q139_km_invariants(spark, sf_dir):
     # the cutoff bucket exists and carries censored (event-free) subjects
     t_max = rows[-1]
     assert t_max[0] == 96 and t_max[1] > t_max[2]
+
+
+# --- file skipping: the one rule never drops a file holding a matching row
+
+_SKIP_TYPES = ("long", "double", "string", "date", "timestamp_ntz")
+
+
+def _skip_value(rng, t):
+    """A random column value of Spark type ``t`` (None for a null)."""
+    if rng.random() < 0.1:
+        return None
+    if t == "long":
+        return rng.randint(-20, 20)
+    if t == "double":
+        return rng.choice([rng.uniform(-20, 20), float(rng.randint(-20, 20))])
+    day, hour = rng.randint(1, 4), rng.randint(0, 23)
+    if t == "string":
+        # ISO-looking text with either separator, and plain words
+        sep = rng.choice(" T")
+        return rng.choice(
+            [f"2024-01-0{day}{sep}{hour:02d}:00:00", rng.choice("abcxyz") * 3]
+        )
+    if t == "date":
+        return dt.date(2024, 1, day)
+    return dt.datetime(2024, 1, day, hour, rng.choice([0, 30]))
+
+
+def _skip_literal(rng, t):
+    """A random literal for a column of type ``t``: usually one its type
+    places, sometimes one it cannot (another type, an odd string)."""
+    roll = rng.random()
+    if roll < 0.15:
+        return rng.choice([True, "nope", 7, 2.5, dt.date(2024, 1, 2), None])
+    if roll < 0.4 and t in ("date", "timestamp_ntz"):
+        v = _skip_value(rng, t) or dt.date(2024, 1, 2)
+        return v.isoformat().replace("T", rng.choice(" T"))
+    if roll < 0.4 and t in ("long", "double"):
+        return rng.choice([rng.randint(-20, 20) + 0.5, rng.randint(-20, 20)])
+    return _skip_value(rng, t)
+
+
+def _spark_holds(t, x, op, lit):
+    """Brute force: does a row value ``x`` satisfy ``x op lit`` with Spark's
+    coercion? None when the pairing is not modelled here (the property
+    then counts the row as possibly matching)."""
+    import operator
+
+    if x is None or lit is None:
+        return False
+    cmp = {"=": operator.eq, "<": operator.lt, "<=": operator.le,
+           ">": operator.gt, ">=": operator.ge}[op]
+    if isinstance(lit, bool):
+        return None
+    if t in ("long", "double") and isinstance(lit, (int, float)):
+        return cmp(float(x) if isinstance(lit, float) or t == "double" else x,
+                   float(lit) if t == "double" else lit)
+    if t == "string" and isinstance(lit, str):
+        return cmp(x, lit)
+    try:
+        if t == "date" and isinstance(lit, str) and len(lit) == 10:
+            lit = dt.date.fromisoformat(lit)
+        if t == "timestamp_ntz" and isinstance(lit, str):
+            lit = dt.datetime.fromisoformat(lit.replace(" ", "T"))
+    except ValueError:
+        return None
+    if t == "date" and type(lit) is dt.date:
+        return cmp(x, lit)
+    if t == "timestamp_ntz" and isinstance(lit, dt.datetime):
+        return cmp(x, lit)
+    return None
+
+
+def test_skip_rule_never_drops_a_matching_file(tmp_path):
+    """Seeded random files over int, double, string, date and
+    timestamp_ntz columns with random conjuncts: the skip rule keeps every
+    file that holds a row matching all of them (checked by brute force
+    over the file's values), and the vectorized checkpoint prune keeps a
+    superset of what the per-entry rule keeps."""
+    import json
+    import random
+
+    from music_recommendation_service_spark.sources import snapshots as S
+
+    rng = random.Random(20241)
+    cols = {f"c_{t}": t for t in _SKIP_TYPES}
+    m = {"version": 1, "schema": json.dumps({"type": "struct", "fields": [
+        {"name": c, "type": t, "nullable": True, "metadata": {}}
+        for c, t in cols.items()
+    ]})}
+    files, rows_of = [], {}
+    for i in range(60):
+        rows = [
+            {c: _skip_value(rng, t) for c, t in cols.items()}
+            for _ in range(rng.randint(1, 6))
+        ]
+        stats = {}
+        for c in cols:
+            vals = [r[c] for r in rows if r[c] is not None]
+            lo, hi = (min(vals), max(vals)) if vals else (None, None)
+            stats[c] = [S._stats_repr(lo), S._stats_repr(hi)]
+        path = f"v=1-x/f{i}.parquet"
+        files.append({"path": path, "rows": len(rows), "stats": stats})
+        rows_of[path] = rows
+    S._fs().mkdirs(S._manifest_dir(str(tmp_path)))
+    m["files_ckpt"] = S._write_parquet_checkpoint(str(tmp_path), files, 1)
+    assert m["files_ckpt"] is not None
+    may = S._file_skip(m, str(tmp_path))
+
+    for _ in range(400):
+        conjuncts = []
+        for c in rng.sample(sorted(cols), rng.randint(1, 3)):
+            op = rng.choice(["=", "=", "<", "<=", ">", ">="])
+            n = rng.randint(1, 3) if op == "=" else 1
+            conjuncts.append(
+                (c, op, [_skip_literal(rng, cols[c]) for _ in range(n)])
+            )
+
+        def row_may_match(r):
+            for c, op, vals in conjuncts:
+                held = [_spark_holds(cols[c], r[c], op, v) for v in vals]
+                if not any(h is None or h for h in held):
+                    return False
+            return True
+
+        kept = {e["path"] for e in files if may(e, conjuncts)}
+        for e in files:
+            if any(row_may_match(r) for r in rows_of[e["path"]]):
+                assert e["path"] in kept, (conjuncts, e["stats"])
+        pruned = S._manifest_files_pruned(str(tmp_path), m, conjuncts)
+        if pruned is not None:
+            assert kept <= {e["path"] for e in pruned}, conjuncts

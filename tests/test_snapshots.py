@@ -585,8 +585,14 @@ def test_predicate_conjunct_parser():
     """The rebase-time predicate parser must be SOUND: every conjunct it
     returns is a necessary condition of the predicate; anything with
     disjunctive structure at the top level parses to nothing."""
+    import datetime as dt
+
+    from pyspark.sql.types import (
+        LongType, StringType, StructField, StructType, TimestampType,
+    )
+
     from music_recommendation_service_spark.sources.snapshots import (
-        _pred_may_match_entry,
+        _file_skip,
         _predicate_conjuncts,
     )
 
@@ -611,31 +617,134 @@ def test_predicate_conjunct_parser():
         ("s", "=", ["a AND b"]), ("k", "=", [1]),
     ]
 
+    # the skip rule is typed by the manifest's schema (logical names)
+    schema = StructType([
+        StructField("k", LongType()), StructField("ts", TimestampType()),
+        StructField("s", StringType()),
+    ]).json()
+    may = _file_skip({"schema": schema}, "/no/such/table")
     e_num = {"stats": {"k": [10, 20]}}
-    assert not _pred_may_match_entry(e_num, [("k", "=", [1])], {})
-    assert _pred_may_match_entry(e_num, [("k", "=", [15])], {})
-    assert not _pred_may_match_entry(e_num, [("k", "<", [10])], {})
-    assert _pred_may_match_entry(e_num, [("k", "<=", [10])], {})
-    assert not _pred_may_match_entry(e_num, [("k", ">", [20])], {})
-    assert _pred_may_match_entry(e_num, [("k", ">=", [20])], {})
-    assert not _pred_may_match_entry(e_num, [("k", "=", [1, 2, 3])], {})
-    assert _pred_may_match_entry(e_num, [("k", "=", [1, 15])], {})
+    assert not may(e_num, [("k", "=", [1])])
+    assert may(e_num, [("k", "=", [15])])
+    assert not may(e_num, [("k", "<", [10])])
+    assert may(e_num, [("k", "<=", [10])])
+    assert not may(e_num, [("k", ">", [20])])
+    assert may(e_num, [("k", ">=", [20])])
+    assert not may(e_num, [("k", "=", [1, 2, 3])])
+    assert may(e_num, [("k", "=", [1, 15])])
     # no stats for the column: can't disprove
-    assert _pred_may_match_entry({"stats": {}}, [("k", "=", [1])], {})
-    # temporal stats (isoformat 'T') vs SQL literals (space): compared
-    # chronologically, never textually
-    e_ts = {"stats": {"ts": ["2024-01-01T06:00:00", "2024-01-01T12:00:00"]}}
-    assert _pred_may_match_entry(e_ts, [("ts", "=", ["2024-01-01 12:00:00"])], {})
-    assert not _pred_may_match_entry(e_ts, [("ts", ">", ["2024-01-01 12:00:00"])], {})
-    assert not _pred_may_match_entry(e_ts, [("ts", "=", ["2024-01-02 00:00:00"])], {})
-    # string column that LOOKS temporal on one side only: incomparable -> may match
-    assert _pred_may_match_entry(
-        {"stats": {"s": ["aaa", "zzz"]}}, [("s", "=", ["2024-01-01 00:00:00"])], {}
+    assert may({"stats": {}}, [("k", "=", [1])])
+    # TIMESTAMP stats (isoformat 'T', the writer's local wall clock) vs SQL
+    # literals (space, read in the UTC session zone): compared as
+    # instants, never textually
+    def local(utc_text: str) -> str:
+        at = dt.datetime.fromisoformat(utc_text + "+00:00").astimezone()
+        return at.replace(tzinfo=None).isoformat()
+
+    e_ts = {"stats": {"ts": [local("2024-01-01T06:00:00"),
+                             local("2024-01-01T12:00:00")]}}
+    assert may(e_ts, [("ts", "=", ["2024-01-01 12:00:00"])])
+    assert not may(e_ts, [("ts", ">", ["2024-01-01 12:00:00"])])
+    assert not may(e_ts, [("ts", "=", ["2024-01-02 00:00:00"])])
+    # a literal the column's type cannot place: incomparable -> may match
+    assert may({"stats": {"s": ["aaa", "zzz"]}}, [("s", "=", [5])])
+    # a STRING column compares in text order, however temporal its values
+    # look: '2024-...' sorts before 'aaa'
+    assert not may(
+        {"stats": {"s": ["aaa", "zzz"]}}, [("s", "=", ["2024-01-01 00:00:00"])]
     )
     # column-mapping: conjunct names are LOGICAL, stats keys PHYSICAL
-    assert not _pred_may_match_entry(
-        {"stats": {"col_7": [10, 20]}}, [("k", "=", [1])], {"k": "col_7"}
+    assert not _file_skip(
+        {"schema": schema, "column_mapping": {"k": "col_7"}}, "/no/such/table"
+    )({"stats": {"col_7": [10, 20]}}, [("k", "=", [1])])
+
+
+def test_skip_rule_types_literals_by_column(spark, tmp_path):
+    """The skip rule places a literal by the column's type: a STRING column
+    compares in text order even when its values look like timestamps with
+    either separator, and a literal the type cannot place (a string on a
+    LONG column) reads every file instead of raising."""
+    from music_recommendation_service_spark.sources import snapshots as S
+
+    p = str(tmp_path / "mixed_sep")
+    vals = ["2024-01-01 23:00:00", "2024-01-01T01:00:00", "2024-01-02 00:00:00"]
+    df = spark.createDataFrame(list(enumerate(vals)), ["k", "s"]).coalesce(1)
+    S.snapshot_write(df, p, stats_cols=["s"])
+    # one file: its text-order stats are ['2024-01-01 23:00:00',
+    # '2024-01-02 00:00:00'], which hold the 'T' value as text
+    assert S.snapshot_delete_where(spark, p, "s = '2024-01-01T01:00:00'")
+    assert sorted(r["k"] for r in S.snapshot_read(spark, p).collect()) == [0, 2]
+
+    p = str(tmp_path / "long_str")
+    S.snapshot_write(
+        spark.range(10).selectExpr("id AS k").repartition(3, "k"), p,
+        stats_cols=["k"],
     )
+    got = S.snapshot_scan(spark, p, {"k": ("5", "5")}).collect()
+    want = S.snapshot_read(spark, p).filter(
+        (F.col("k") >= F.lit("5")) & (F.col("k") <= F.lit("5"))
+    ).collect()
+    assert sorted(got) == sorted(want) and len(want) == 1
+
+
+def test_timestamp_skips_off_utc(tmp_path):
+    """A process whose local zone is not the session's (UTC): TIMESTAMP
+    stats hold its local wall clock, so a SQL literal (read in the session
+    zone) must be converted before it is compared. The filtered
+    format("snapshot") read, DELETE WHERE and UPDATE WHERE each match
+    read + filter, and so does snapshot_scan with a collected datetime.
+    A subprocess, because format("snapshot") plans in Python workers,
+    which take the JVM's zone."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    script = """
+import json, sys
+from music_recommendation_service_spark.session import get_spark
+from music_recommendation_service_spark.sources import snapshots as S
+from music_recommendation_service_spark.sources.datasource import (
+    register_snapshot_datasource,
+)
+spark = get_spark("tz_skip")
+register_snapshot_datasource(spark)
+root, pred = sys.argv[1], "ts = '1970-01-01 02:00:00'"
+def table(name):
+    p = f"{root}/{name}"
+    for i, s in enumerate(["1970-01-01 02:00:00", "1970-01-02 00:00:00"]):
+        df = spark.createDataFrame([(i, s)], ["k", "s"]).selectExpr(
+            "k", "CAST(s AS TIMESTAMP) AS ts")
+        (S.snapshot_write if i == 0 else S.snapshot_append)(
+            df, p, stats_cols=["ts"])
+    return p
+p = table("read")
+at = S.snapshot_read(spark, p).filter(pred).collect()[0]["ts"]
+out = {
+    "want": S.snapshot_read(spark, p).filter(pred).count(),
+    "format": spark.read.format("snapshot").load(p).filter(pred).count(),
+    "scan": S.snapshot_scan(spark, p, {"ts": (at, at)}).count(),
+}
+p = table("delete")
+S.snapshot_delete_where(spark, p, pred)
+out["deleted"] = 2 - S.snapshot_read(spark, p).count()
+p = table("update")
+S.snapshot_update_where(spark, p, pred, {"k": "k + 100"})
+out["updated"] = S.snapshot_read(spark, p).filter("k >= 100").count()
+print("RESULT", json.dumps(out))
+"""
+    env = dict(os.environ, TZ="Asia/Kolkata", SPARK_GRAFT_DRIVER_MEM="1g")
+    r = subprocess.run(
+        [sys.executable, "-c", script, str(tmp_path)],
+        cwd=Path(__file__).resolve().parents[1],
+        env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    line = next(ln for ln in r.stdout.splitlines() if ln.startswith("RESULT"))
+    got = json.loads(line.split(" ", 1)[1])
+    assert got == {"want": 1, "format": 1, "scan": 1, "deleted": 1,
+                   "updated": 1}, got
 
 
 def test_delete_where_rebases_over_nonmatching_append(spark, tmp_path, monkeypatch):
@@ -3251,7 +3360,7 @@ def test_merge_per_key_candidate_pruning(spark, tmp_path):
     # two scattered keys: batch bounds [5, 3777] bracket ALL files, but the
     # point tests keep exactly the two files that hold them
     kept = _prune_candidates_by_keys(
-        m, path, files, ["k"], [R(k=5), R(k=3777)], None
+        m, path, files, ["k"], [R(k=5), R(k=3777)]
     )
     assert len(kept) == 2, [e["stats"] for e in kept]
 
@@ -3271,11 +3380,11 @@ def test_merge_per_key_candidate_pruning(spark, tmp_path):
     m2 = _read_manifest(path2, snapshot_versions(path2)[-1])
     files2 = _manifest_files(path2, m2)
     present = _prune_candidates_by_keys(
-        m2, path2, files2, ["k"], [R(k=1000)], None
+        m2, path2, files2, ["k"], [R(k=1000)]
     )
     assert len(present) >= 1  # the true holder always survives
     absent = _prune_candidates_by_keys(
-        m2, path2, files2, ["k"], [R(k=1001)], None  # odd: in-range, absent
+        m2, path2, files2, ["k"], [R(k=1001)]  # odd: in-range, absent
     )
     assert len(absent) < len(files2), "bloom pruned nothing"
 
