@@ -43,6 +43,7 @@ rewritten; everything else is carried into the new version by reference.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
 import functools
 import json
@@ -1359,6 +1360,11 @@ _BLOOM_LIT_TYPES = {
     "date": _dt.date, "timestamp_ntz": _dt.datetime,
 }
 _INTEGRAL_TYPES = ("byte", "short", "integer", "long")
+# the column types ``_skip_key`` places a value of
+_PLACED_TYPES = (
+    *_INTEGRAL_TYPES, "float", "double", "boolean", "string", "date",
+    "timestamp", "timestamp_ntz",
+)
 # op -> the tests that DISPROVE ``col op literal`` for a file: (file bound,
 # comparison, literal bound), with 0/1 picking the file's min/max and the
 # literal key's lo/hi. Disproofs, so an incomparable NaN bound (every
@@ -1396,17 +1402,35 @@ def _session_zone():
         return None
 
 
+def _session_wall_clocks(v) -> list:
+    """A TIMESTAMP value as the session zone's naive wall clock(s): a
+    zone-aware datetime is one instant, a naive one this process's local
+    wall clock (both instants of a DST fold); anything else passes as is.
+    Empty when the value cannot be placed."""
+    if not isinstance(v, _dt.datetime):
+        return [v]
+    zone = _session_zone()
+    if zone is None:
+        return []
+    at = (v,) if v.tzinfo else (v.replace(fold=0), v.replace(fold=1))
+    try:
+        return sorted({a.astimezone(zone).replace(tzinfo=None) for a in at})
+    except (OverflowError, OSError, ValueError):
+        return []
+
+
 def _skip_key(t, v, literal: bool):
     """``(lo, hi)``: where ``v`` — a min/max stat, or with ``literal`` a
     predicate literal — lies in one ordered domain for a column of Spark
     type ``t``; None when it cannot be placed (the file may match).
     Numbers compare as numbers, STRING in text order, DATE and
     TIMESTAMP_NTZ chronologically. TIMESTAMP compares as instants: its
-    stats are the writing process's local wall clock (what ``collect()``
-    returns in ``_scan_file_entries``) or carry an offset (the data
-    source's writer); a naive datetime literal is local time too, and a
-    string literal is read in the session zone. A local wall clock that a
-    DST fold makes ambiguous spans both of its instants."""
+    stats carry an offset (``_scan_file_entries`` and the data source's
+    writer), or, written by an older engine, are the writing process's
+    local wall clock, read as this process's; a naive datetime literal is
+    local time too, and a string literal is read in the session zone. A
+    local wall clock that a DST fold makes ambiguous spans both of its
+    instants."""
     if v is None or isinstance(v, bool) != (t == "boolean"):
         return None
     if t == "boolean" or (t == "string" and isinstance(v, str)):
@@ -1564,43 +1588,67 @@ def _prune_candidates_by_keys(
 
 def _scan_file_entries(
     spark: SparkSession,
-    full_dir: str,
+    root: str,
     rel_dir: str,
     stats_cols: Sequence[str],
     bloom_cols: Sequence[str] = (),
     partition_cols: Sequence[str] = (),
     read_schema=None,
 ) -> tuple[list[dict], int]:
-    """List the parquet files of a freshly-written data dir and (in ONE
-    column-pruned scan) compute per-file row counts, min/max stats for
-    ``stats_cols``, and Bloom bitsets for ``bloom_cols`` — the metadata the
-    one skip rule, ``_file_skip``, prunes by. Min/max skips range
-    predicates on clustered columns; the bloom skips POINT lookups on
-    high-cardinality unsorted columns, where every file's [min, max]
-    brackets everything and range stats are useless. TIMESTAMP stats are
-    what ``collect()`` returns: this process's local wall clock.
+    """List the parquet files under ``root`` and (in ONE column-pruned
+    scan) compute per-file row counts, min/max stats for ``stats_cols``,
+    and Bloom bitsets for ``bloom_cols`` — the metadata the one skip rule,
+    ``_file_skip``, prunes by. Min/max skips range predicates on clustered
+    columns; the bloom skips POINT lookups on high-cardinality unsorted
+    columns, where every file's [min, max] brackets everything and range
+    stats are useless. TIMESTAMP (local time zone) stats are stored as
+    instants carrying their offset, so a reader in another zone places
+    them right; DATE and TIMESTAMP_NTZ stats are their plain ISO form.
 
-    With ``partition_cols`` the dir holds a HIVE layout (``key=value``
-    subdirectories from a ``partitionBy`` write or an in-place CONVERT):
-    entries carry their partition values (string form, per ``partition``)
-    AND those values folded into ``stats`` as degenerate ``[v, v]``
-    ranges — so every path that skips through ``_file_skip`` (snapshot_scan
-    and snapshot_scan_in, MERGE bound and per-key prunes, predicate DML
-    discovery and DROP-PARTITION, OCC disjointness proofs, OPTIMIZE and
-    ZORDER WHERE scoping, format("snapshot") reads) prunes on partition
-    predicates with zero new machinery.
-    ``read_schema`` types the partition values (Spark's path inference
-    alone would re-type "03" as 3)."""
-    if partition_cols:
-        return _scan_file_entries_hive(
-            spark, full_dir, rel_dir, stats_cols, partition_cols,
-            read_schema, bloom_cols,
-        )
-    names = sorted(f for f in _fs().list_dir(full_dir) if f.endswith(".parquet"))
-    if not names:
+    ``root`` is a Hive tree with ``len(partition_cols)`` levels of
+    ``key=value`` directories (a ``partitionBy`` write or an in-place
+    CONVERT); a flat data dir is the tree with none, and a single file
+    (CONVERT of one parquet file) is read alone. Hive entries carry their
+    partition values (string form, per ``partition``) AND those values
+    folded into ``stats`` as degenerate ``[v, v]`` ranges — so every path
+    that skips through ``_file_skip`` prunes on partition predicates with
+    zero new machinery. ``read_schema`` types the data (Spark's path
+    inference alone would re-type a partition value "03" as 3). A scanned
+    file matching no walked path fails closed: its rows would otherwise
+    vanish from the manifest like an empty part file's."""
+    fs = _fs()
+    subpaths: list[str] = []
+
+    def walk(rel: str, depth: int) -> None:
+        d = os.path.join(root, rel) if rel else root
+        for n in sorted(fs.list_dir(d)):
+            sub = f"{rel}/{n}" if rel else n
+            if depth < len(partition_cols):
+                if "=" in n and not n.startswith(("_", ".")) and fs.is_dir(
+                    os.path.join(d, n)
+                ):
+                    walk(sub, depth + 1)
+            elif n.endswith(".parquet"):
+                subpaths.append(sub)
+
+    if fs.is_file(root):
+        subpaths.append(os.path.basename(root))
+    else:
+        walk("", 0)
+    if not subpaths:
         return [], 0
+    rdr = spark.read
+    if partition_cols:
+        rdr = rdr.option("basePath", root)
+    if read_schema is not None:
+        rdr = rdr.schema(read_schema)
+    df = rdr.parquet(root)
+    instants = {
+        f.name for f in df.schema.fields if f.dataType.typeName() == "timestamp"
+    }
+    stat_all = list(dict.fromkeys([*stats_cols, *partition_cols]))
     aggs = [F.count(F.lit(1)).alias("_rows")]
-    for c in stats_cols:
+    for c in stat_all:
         aggs.append(F.min(c).alias(f"_min_{c}"))
         aggs.append(F.max(c).alias(f"_max_{c}"))
     for c in bloom_cols:
@@ -1608,16 +1656,27 @@ def _scan_file_entries(
             aggs.append(
                 F.collect_set(_bloom_pos_expr(c, i)).alias(f"_bl{i}_{c}")
             )
-    per_file = (
-        spark.read.parquet(full_dir)
-        .groupBy(F.element_at(F.split(F.input_file_name(), "/"), -1).alias("_f"))
-        .agg(*aggs)
-        .collect()
-    )
-    by_name = {r["_f"]: r for r in per_file}
+    fparts = F.split(F.input_file_name(), "/")
+    suffix = F.concat_ws("/", *[
+        F.element_at(fparts, i) for i in range(-1 - len(partition_cols), 0)
+    ])
+    # decoded per file, not per row
+    per_file = df.groupBy(suffix.alias("_f")).agg(*aggs)
+    by_sub = {
+        r["_f"]: r
+        for r in per_file.withColumn("_f", _fs_form(F.col("_f"))).collect()
+    }
+    orphans = set(by_sub) - set(subpaths)
+    if orphans:
+        raise RuntimeError(
+            f"file scan identity mismatch under {root}: "
+            f"{len(orphans)} scanned file(s) match no walked path — "
+            f"e.g. {sorted(orphans)[:2]} vs walked {subpaths[:2]}; "
+            f"refusing a manifest that would drop their rows"
+        )
     entries, total, sidecar = [], 0, {}
-    for name in names:
-        r = by_name.get(name)
+    for sub in subpaths:
+        r = by_sub.get(sub)
         rows = int(r["_rows"]) if r is not None else 0
         if rows == 0:
             # Spark emits an empty part file per input partition with no
@@ -1626,120 +1685,28 @@ def _scan_file_entries(
             # disjointness proof (an empty file "may hold" every key), and
             # every read schedules a task for it.
             continue
-        stats = None
-        if r is not None and stats_cols:
-            stats = {
-                c: [_stats_repr(r[f"_min_{c}"]), _stats_repr(r[f"_max_{c}"])]
-                for c in stats_cols
-            }
-        entry = {"path": f"{rel_dir}/{name}", "rows": rows, "stats": stats}
-        if r is not None and bloom_cols:
-            built = {
-                c: _bloom_build([r[f"_bl{i}_{c}"] for i in range(_BLOOM_K)])
-                for c in bloom_cols
-            }
-            built = {c: b for c, b in built.items() if b is not None}
-            if built:
-                sidecar[name] = built
-                entry["bloom_ref"] = f"{rel_dir}/{_BLOOM_SIDECAR}"
+        stats = {
+            c: [
+                _stats_repr(r[f"_{side}_{c}"], instant=c in instants)
+                for side in ("min", "max")
+            ]
+            for c in stat_all
+        }
+        entry = {"path": f"{rel_dir}/{sub}", "rows": rows, "stats": stats or None}
+        if partition_cols:
+            entry["partition"] = _hive_partition_values(sub, partition_cols)
+        built = {
+            c: _bloom_build([r[f"_bl{i}_{c}"] for i in range(_BLOOM_K)])
+            for c in bloom_cols
+        }
+        built = {c: b for c, b in built.items() if b is not None}
+        if built:
+            sidecar[sub] = built
+            entry["bloom_ref"] = f"{rel_dir}/{_BLOOM_SIDECAR}"
         entries.append(entry)
         total += rows
     if sidecar:
-        _fs().write_atomic(
-            os.path.join(full_dir, _BLOOM_SIDECAR), json.dumps(sidecar)
-        )
-    return entries, total
-
-
-def _scan_file_entries_hive(
-    spark: SparkSession,
-    full_dir: str,
-    rel_dir: str,
-    stats_cols: Sequence[str],
-    partition_cols: Sequence[str],
-    read_schema,
-    bloom_cols: Sequence[str] = (),
-) -> tuple[list[dict], int]:
-    """Hive-layout twin of ``_scan_file_entries``: walk the ``key=value``
-    tree, then ONE partition-discovering scan computes per-file row counts
-    and min/max stats for both data columns and partition columns (a
-    partition column is constant per file, so its [min, max] degenerates
-    to the exact value — typed by ``read_schema``, not path inference)."""
-    if bloom_cols:
-        # the bloom sidecar keys per-dir by FILENAME; partition subdirs can
-        # repeat filenames within one write, so blooms stay rewrite-path
-        # (compact/zorder produce flat files) until keyed by subpath
-        raise ValueError(
-            "bloom_cols are not supported on partitioned writes; blooms "
-            "attach when compaction rewrites files flat"
-        )
-    fs = _fs()
-    subpaths: list[str] = []
-
-    def walk(rel: str) -> None:
-        d = os.path.join(full_dir, rel) if rel else full_dir
-        for n in sorted(fs.list_dir(d)):
-            sub = f"{rel}/{n}" if rel else n
-            p = os.path.join(d, n)
-            if fs.is_dir(p):
-                if "=" in n and not n.startswith(("_", ".")):
-                    walk(sub)
-            elif n.endswith(".parquet"):
-                subpaths.append(sub)
-
-    walk("")
-    if not subpaths:
-        return [], 0
-    k = 1 + len(partition_cols)
-    rdr = spark.read.option("basePath", full_dir)
-    if read_schema is not None:
-        rdr = rdr.schema(read_schema)
-    df = rdr.parquet(full_dir)
-    aggs = [F.count(F.lit(1)).alias("_rows")]
-    stat_all = list(dict.fromkeys([*stats_cols, *partition_cols]))
-    for c in stat_all:
-        aggs.append(F.min(c).alias(f"_min_{c}"))
-        aggs.append(F.max(c).alias(f"_max_{c}"))
-    fparts = F.split(F.input_file_name(), "/")
-    suffix = _fs_form(
-        F.concat_ws("/", *[F.element_at(fparts, i) for i in range(-k, 0)])
-    )
-    per_file = df.groupBy(suffix.alias("_f")).agg(*aggs).collect()
-    by_sub = {r["_f"]: r for r in per_file}
-    orphans = set(by_sub) - set(subpaths)
-    if orphans:
-        # fail CLOSED on ANY scanned suffix that matches no walked file —
-        # a partial mismatch (one oddly-named file in a hand-laid tree
-        # whose canonicalized suffix fails to match) would otherwise be
-        # indistinguishable from the empty-file skip and its rows would
-        # silently vanish from the manifest. A TOTAL mismatch (identity
-        # canonicalization broke) is the same condition with every
-        # suffix orphaned.
-        raise RuntimeError(
-            f"hive scan identity mismatch under {full_dir}: "
-            f"{len(orphans)} scanned file(s) match no walked path — "
-            f"e.g. {sorted(orphans)[:2]} vs walked {subpaths[:2]}; "
-            f"refusing a manifest that would drop their rows"
-        )
-    entries, total = [], 0
-    for sub in subpaths:
-        r = by_sub.get(sub)
-        rows = int(r["_rows"]) if r is not None else 0
-        if rows == 0:
-            continue  # same empty-part-file skip as the flat scan
-        stats = {
-            c: [_stats_repr(r[f"_min_{c}"]), _stats_repr(r[f"_max_{c}"])]
-            for c in stat_all
-        } or None
-        entries.append(
-            {
-                "path": f"{rel_dir}/{sub}",
-                "rows": rows,
-                "stats": stats,
-                "partition": _hive_partition_values(sub, partition_cols),
-            }
-        )
-        total += rows
+        _fs().write_atomic(os.path.join(root, _BLOOM_SIDECAR), json.dumps(sidecar))
     return entries, total
 
 
@@ -1945,13 +1912,14 @@ def _read_entries(
     point every protocol reader (read / scan / merge / DML / CDF / compact)
     goes through, so no path can resurrect a deleted row.
 
-    Partitioned tables mix two physical layouts: HIVE entries (from
-    ``partitionBy`` writes / CONVERT of a Hive directory — partition
-    values live in ``key=value`` path segments, carried per entry) read
-    grouped by their Hive root through Spark's native partition discovery
-    (one relation per data dir, values typed by the declared schema), and
-    FLAT entries (DML rewrites / compaction store partition columns as
-    ordinary data columns) read through the plain declared-schema path.
+    Partitioned tables may mix two physical layouts: HIVE entries (every
+    commit's ``_land`` / CONVERT of a Hive directory — partition values
+    live in ``key=value`` path segments, carried per entry) read grouped
+    by their Hive root through Spark's native partition discovery (one
+    relation per data dir, values typed by the declared schema), and FLAT
+    entries (an older engine's DML rewrites, or a data-source append onto
+    exotic partition types, store partition columns as ordinary data
+    columns) read through the plain declared-schema path.
     Group count is O(data dirs touched), which compaction keeps folded —
     never O(partitions)."""
     dvd = [e for e in entries if e.get("dv")]
@@ -2193,6 +2161,72 @@ def _new_data_dir(path: str) -> tuple[str, str]:
     return rel, os.path.join(path, rel)
 
 
+def _land(
+    spark: SparkSession,
+    path: str,
+    df: DataFrame,
+    cur: dict,
+    stats_cols: Sequence[str] = (),
+    bloom_cols: Sequence[str] = (),
+) -> tuple[list[dict], int]:
+    """THE landing path: write ``df`` (logical columns) as a new data dir
+    of the table at ``path`` whose manifest is ``cur``, and return its
+    ``(entries, n_rows)``. Every snapshot operation that writes table data
+    lands it here, in the table's own layout:
+
+    - files store the PHYSICAL names of ``cur``'s column mapping;
+    - the layout is Hive (``partitionBy`` on the physical partition
+      columns) exactly when ``cur`` declares ``partition_cols``, so every
+      file of a partitioned table holds one partition tuple with exact
+      ``[v, v]`` stats on it;
+    - min/max stats go on the table's stats columns in use plus the
+      ``stats_cols`` the caller names (logical);
+    - Bloom filters go on the table's Bloom columns in use plus
+      ``bloom_cols``, on flat layouts only; a partitioned table refuses
+      ``bloom_cols``.
+
+    A failed landing removes its data dir."""
+    mapping = _mapping(cur)
+    pcols = [_phys(mapping, c) for c in cur.get("partition_cols") or []]
+    phys_df = _to_physical_df(df, mapping)
+    if pcols and bloom_cols:
+        # one partitionBy job reuses part-file names across partition
+        # dirs, and the bloom sidecar is keyed by file name
+        raise ValueError(
+            "bloom_cols are not supported on partitioned writes: part-file "
+            "names repeat across partition directories and the bloom "
+            "sidecar is keyed by file name"
+        )
+
+    def cols(in_use: list, named: Sequence[str]) -> list:
+        # the table's discipline (less a column a later schema change
+        # dropped) plus the caller's; partition stats are exact already
+        return [
+            c
+            for c in dict.fromkeys([
+                *[c for c in in_use if c in phys_df.columns],
+                *[_phys(mapping, c) for c in named],
+            ])
+            if c not in pcols
+        ]
+
+    stats = cols(_stats_cols_in_use(cur, path), stats_cols)
+    blooms = [] if pcols else cols(_bloom_cols_in_use(path, cur), bloom_cols)
+    rel, full = _new_data_dir(path)
+    try:
+        w = phys_df.write.mode("error")
+        (w.partitionBy(*pcols) if pcols else w).parquet(full)
+        return _scan_file_entries(
+            spark, full, rel, stats, blooms,
+            partition_cols=pcols, read_schema=phys_df.schema,
+        )
+    except Exception:
+        # nothing references the dir yet: a failed landing leaves none
+        with contextlib.suppress(OSError):
+            _fs().delete_tree(full)
+        raise
+
+
 def snapshot_write(
     df: DataFrame,
     path: str,
@@ -2232,18 +2266,13 @@ def snapshot_write(
     df = _apply_generated(df, path, "overwrite")
     _enforce_constraints(df, path, "overwrite")
     df, _ident_unpin = _assign_identity(df, path, "overwrite")
-    rel, full = _new_data_dir(path)
-    if partition_by:
-        df.write.partitionBy(*partition_by).mode("error").parquet(full)
-    else:
-        df.write.mode("error").parquet(full)
+    # the layout comes from the arguments: an overwrite may re-partition
+    files, n = _land(
+        df.sparkSession, path, df, {"partition_cols": partition_by},
+        stats_cols, bloom_cols,
+    )
     if _ident_unpin:
         _ident_unpin()
-    spark = df.sparkSession
-    files, n = _scan_file_entries(
-        spark, full, rel, stats_cols, bloom_cols,
-        partition_cols=partition_by, read_schema=df.schema,
-    )
     schema_json = df.schema.json()
 
     def build(latest: dict | None, version: int) -> dict:
@@ -2315,29 +2344,13 @@ def snapshot_append(
         # must fail here, loudly, not as a parquet duplicate-column error);
         # the build re-merges against the fresh manifest on a race
         _merged_schema_json(path, latest0["schema"], df.schema.json(), mapping)
-    pcols = list(latest0.get("partition_cols") or [])
-    if pcols:
-        _validate_partition_decl(df, pcols)
-    rel, full = _new_data_dir(path)
-    phys_df = _to_physical_df(df, mapping)
-    if pcols:
-        # appends to a partitioned table land the same Hive layout the
-        # table was created with, so partition pruning covers every commit
-        phys_df.write.partitionBy(
-            *[_phys(mapping, c) for c in pcols]
-        ).mode("error").parquet(full)
-    else:
-        phys_df.write.mode("error").parquet(full)
+    _validate_partition_decl(df, latest0.get("partition_cols") or [])
+    # appends land the table's own layout and keep its stats discipline
+    new_files, n = _land(
+        df.sparkSession, path, df, latest0, stats_cols, bloom_cols
+    )
     if _ident_unpin:
         _ident_unpin()
-    spark = df.sparkSession
-    new_files, n = _scan_file_entries(
-        spark, full, rel,
-        [_phys(mapping, c) for c in stats_cols],
-        [_phys(mapping, c) for c in bloom_cols],
-        partition_cols=[_phys(mapping, c) for c in pcols],
-        read_schema=phys_df.schema,
-    )
     schema_json = df.schema.json()
 
     def build(latest: dict | None, version: int) -> dict:
@@ -2478,13 +2491,20 @@ def _widens(narrow, wide) -> bool:
     return wide.typeName() in _WIDEN_UP.get(narrow.typeName(), set())
 
 
-def _stats_repr(v):
+def _stats_repr(v, instant: bool = False):
     """JSON-safe representation of a min/max stat value: datetime/date ->
     ISO-8601 strings (``_skip_key`` parses them back by the column's
     type); int/float/str/bool pass through. Anything else (Decimal,
     bytes, ...) -> None, which the skip rule treats as "must assume the
     file matches" — pruning stays conservative rather than risking a
-    wrongly skipped file."""
+    wrongly skipped file. With ``instant`` (a TIMESTAMP column, which
+    ``collect()`` returns as this process's local wall clock, DST fold
+    kept) a naive datetime is stored as the instant, with its offset."""
+    if isinstance(v, _dt.datetime) and instant and v.tzinfo is None:
+        try:
+            v = v.astimezone()
+        except (OverflowError, OSError, ValueError):
+            return None
     if isinstance(v, (_dt.datetime, _dt.date)):
         return v.isoformat()
     if v is None or isinstance(v, (int, float, str)):
@@ -3198,9 +3218,17 @@ def _derive_generated_conjuncts(m: dict, conjuncts: list) -> list:
     ``year_col >= year(lo)`` for a monotone rule (``_monotone_expr``) —
     sound to add, and it makes partition [v, v] stats prune scans, DML
     discovery and OCC adds checks even when the predicate never names the
-    partition column. The one derivation every skipping caller uses."""
+    partition column. The one derivation every skipping caller uses.
+
+    The rule reads a datetime as the session zone's wall clock, which a
+    datetime on a TIMESTAMP base column is not: a naive one is this
+    process's local wall clock (what ``collect()`` returns), a zone-aware
+    one an instant (a pushed data-source filter). Each is converted first;
+    a local wall clock a DST fold makes ambiguous derives from the earlier
+    instant for a lower bound and the later for an upper bound."""
     out = []
     gen = _generated(m)
+    types = _schema_types(m)
     for g in m.get("partition_cols") or []:
         parsed = _monotone_expr(gen[g]) if gen.get(g) else None
         if not parsed:
@@ -3209,6 +3237,16 @@ def _derive_generated_conjuncts(m: dict, conjuncts: list) -> list:
         for col, op, vals in conjuncts:
             if col != base:
                 continue
+            if types.get(base) == "timestamp":
+                walls = [_session_wall_clocks(v) for v in vals]
+                if not all(walls):
+                    continue
+                pick = {"<": max, "<=": max, ">": min, ">=": min}.get(op)
+                vals = (
+                    [w for ws in walls for w in ws]
+                    if pick is None
+                    else [pick(ws) for ws in walls]
+                )
             dvals = [_stats_repr(fn(v)) for v in vals]
             if not dvals or any(d is None for d in dvals):
                 continue
@@ -3578,7 +3616,6 @@ def _merge_dv(
     the matched keys live in."""
     from pyspark.sql import Window
 
-    mapping = _mapping(cur)
     files = _manifest_files(path, cur)
     in_keys = incoming.select(*key_cols, F.col(seq_col).alias("_in_seq"))
     ref, new_dead, out_files = None, {}, files
@@ -3610,13 +3647,7 @@ def _merge_dv(
         winners = winners.filter(
             ~F.coalesce(F.col(delete_col), F.lit(False))
         ).drop(delete_col)
-    rel, full_dir = _new_data_dir(path)
-    _to_physical_df(winners, mapping).write.mode("error").parquet(full_dir)
-    new_files, n_new = _scan_file_entries(
-        spark, full_dir, rel,
-        [_phys(mapping, c) for c in key_cols],
-        _bloom_cols_in_use(path, cur),
-    )
+    new_files, n_new = _land(spark, path, winners, cur, key_cols)
     return _commit_swap(
         spark, path, cur, base_version, "merge_dv",
         replaced=[e for e in files if _entry_rid(e) in new_dead],
@@ -3704,7 +3735,6 @@ def snapshot_merge(
 
     base_version = snapshot_versions(path)[-1]
     cur = _read_manifest(path, base_version)
-    mapping = _mapping(cur)
     # generated columns: auto-fill absent, validate provided (tombstone
     # payloads exempt — they never land)
     df = _apply_generated(
@@ -3795,13 +3825,7 @@ def snapshot_merge(
         merged = merged.filter(
             ~F.coalesce(F.col(delete_col), F.lit(False))
         ).drop(delete_col)
-    rel, full = _new_data_dir(path)
-    _to_physical_df(merged, mapping).write.mode("error").parquet(full)
-    new_files, n_new = _scan_file_entries(
-        spark, full, rel,
-        [_phys(mapping, c) for c in key_cols],
-        _bloom_cols_in_use(path, cur),
-    )
+    new_files, n_new = _land(spark, path, merged, cur, key_cols)
     return _commit_swap(
         spark, path, cur, base_version, "merge",
         replaced=touched, produced=new_files, files=untouched + new_files,
@@ -4000,7 +4024,6 @@ def snapshot_merge_when(
             f"snapshot_merge_when: column name(s) {sorted(reserved)} are "
             "reserved by the merge machinery"
         )
-    mapping = _mapping(cur)
     files = _manifest_files(path, cur)
 
     bounds, candidates = _key_bounds_prune(cur, path, files, source, key_cols)
@@ -4170,12 +4193,7 @@ def snapshot_merge_when(
     if not touched and out.isEmpty():
         return None  # insert clauses matched no rows: no-op
 
-    rel, full_dir = _new_data_dir(path)
-    _to_physical_df(out, mapping).write.mode("error").parquet(full_dir)
-    new_files, n_new = _scan_file_entries(
-        spark, full_dir, rel, _stats_cols_in_use(cur, path),
-        _bloom_cols_in_use(path, cur),
-    )
+    new_files, n_new = _land(spark, path, out, cur, key_cols)
     return _commit_swap(
         spark, path, cur, base_version, "merge",
         replaced=touched, produced=new_files, files=untouched + new_files,
@@ -4248,13 +4266,8 @@ def _rewrite_touched(
     rewritten files are untouched in the fresh manifest and concurrently
     added files provably cannot match ``predicate``). Stats columns in
     use are recomputed for the new files."""
-    mapping = _mapping(cur)
-    existing = _read_entries(spark, path, cur, touched)
-    out_df = rewrite(existing)
-    rel, full_dir = _new_data_dir(path)
-    _to_physical_df(out_df, mapping).write.mode("error").parquet(full_dir)
-    new_files, n_new = _scan_file_entries(
-        spark, full_dir, rel, _stats_cols_in_use(cur, path), _bloom_cols_in_use(path, cur)
+    new_files, n_new = _land(
+        spark, path, rewrite(_read_entries(spark, path, cur, touched)), cur
     )
     return _commit_swap(
         spark, path, cur, base_version, op,
@@ -4419,7 +4432,6 @@ def snapshot_replace_where(
         raise FileNotFoundError(f"no snapshots at {path}")
     base_version = versions[-1]
     cur = _read_manifest(path, base_version)
-    mapping = _mapping(cur)
     df = _apply_generated(df, path, "replace_where")
     _enforce_constraints(df, path, "replace_where")
     if "schema" in cur and not _schema_equiv(df.schema.json(), cur["schema"]):
@@ -4431,8 +4443,8 @@ def snapshot_replace_where(
     # evaluates assert_true(predicate) inside the write tasks, so a 100 TB
     # backfill makes ONE pass over its source instead of a validation scan
     # plus the write (the round-10 double evaluation). A violating row
-    # aborts the job mid-write — before any commit — and the partial data
-    # dirs are swept below, so fail-closed still means "nothing landed".
+    # aborts the job mid-write — before any commit — and ``_land`` sweeps
+    # the partial data dir, so fail-closed still means "nothing landed".
     scope_ok = F.coalesce(F.expr(predicate), F.lit(False))
     # the failure detail reports only the PREDICATE's columns: pulling the
     # whole row into the guard would force every source column into the
@@ -4461,71 +4473,9 @@ def snapshot_replace_where(
         ).isNull()
     )
     df, _ident_unpin = _assign_identity(df, path, "replace_where")
-    pcols = list(cur.get("partition_cols") or [])
-    files = _manifest_files(path, cur)
-    split = (
-        _partition_drop_split(
-            files, predicate, set(pcols), _file_skip(cur, path)
-        )
-        if pcols
-        else None
-    )
-    rewritten: list[dict] = []
-    landed_dirs: list[str] = []
     try:
-        if split is not None:
-            touched, untouched = split
-        else:
-            touched, untouched = _predicate_file_split(
-                spark, path, cur, predicate
-            )
-            if touched:
-                # survivors: the touched files' NON-matching rows
-                keep_df = _read_entries(spark, path, cur, touched).filter(
-                    ~F.coalesce(F.expr(predicate), F.lit(False))
-                )
-                rel_k, full_k = _new_data_dir(path)
-                landed_dirs.append(full_k)
-                _to_physical_df(keep_df, mapping).write.mode("error").parquet(
-                    full_k
-                )
-                rewritten, _n_kept = _scan_file_entries(
-                    spark, full_k, rel_k,
-                    _stats_cols_in_use(cur, path),
-                    _bloom_cols_in_use(path, cur),
-                )
-        # land the incoming rows (Hive layout on partitioned tables)
-        rel, full = _new_data_dir(path)
-        landed_dirs.append(full)
-        phys_df = _to_physical_df(df, mapping)
-        if pcols:
-            phys_pcols = [_phys(mapping, c) for c in pcols]
-            phys_df.write.partitionBy(*phys_pcols).mode("error").parquet(full)
-            incoming, n_in = _scan_file_entries(
-                spark, full, rel,
-                [
-                    c
-                    for c in _stats_cols_in_use(cur, path)
-                    if c not in phys_pcols
-                ],
-                partition_cols=phys_pcols, read_schema=phys_df.schema,
-            )
-        else:
-            phys_df.write.mode("error").parquet(full)
-            incoming, n_in = _scan_file_entries(
-                spark, full, rel,
-                _stats_cols_in_use(cur, path), _bloom_cols_in_use(path, cur),
-            )
+        incoming, _n_in = _land(spark, path, df, cur)
     except Exception as exc:
-        # nothing committed: sweep the partial data dirs so a failed
-        # backfill leaves the table byte-identical
-        for d in landed_dirs:
-            try:
-                _fs().delete_tree(d)
-            except Exception:
-                pass
-        if _ident_unpin:
-            _ident_unpin()
         msg = str(exc)
         if _REPLACE_SCOPE_MARK in msg:
             start = msg.index(_REPLACE_SCOPE_MARK)
@@ -4534,8 +4484,29 @@ def snapshot_replace_where(
                 .split("\n", 1)[0].strip()
             ) from exc
         raise
-    if _ident_unpin:
-        _ident_unpin()
+    finally:
+        if _ident_unpin:
+            _ident_unpin()
+    pcols = list(cur.get("partition_cols") or [])
+    split = (
+        _partition_drop_split(
+            _manifest_files(path, cur), predicate, set(pcols),
+            _file_skip(cur, path),
+        )
+        if pcols
+        else None
+    )
+    rewritten: list[dict] = []
+    if split is not None:
+        touched, untouched = split
+    else:
+        touched, untouched = _predicate_file_split(spark, path, cur, predicate)
+        if touched:
+            # survivors: the touched files' NON-matching rows
+            keep_df = _read_entries(spark, path, cur, touched).filter(
+                ~F.coalesce(F.expr(predicate), F.lit(False))
+            )
+            rewritten, _n_kept = _land(spark, path, keep_df, cur)
     produced = rewritten + incoming
     return _commit_swap(
         spark, path, cur, base_version, "replace_where",
@@ -4558,9 +4529,12 @@ def snapshot_dynamic_partition_overwrite(
     day's job replaces that day, never the table.
 
     Requires a partitioned table whose live entries all carry partition
-    values (fresh writes/appends/compactions do by construction); tables
-    holding pre-partitioning flat rewrites should OPTIMIZE first or use
-    ``snapshot_replace_where``. Conservative on races: a concurrent commit
+    values: every commit lands its files in the table's layout
+    (``_land``), so only flat files an older engine's rewrites or a data-
+    source append onto exotic partition types left lack them; such tables
+    should OPTIMIZE first or use ``snapshot_replace_where``. Incoming
+    partition tuples match entries' exact ``[v, v]`` stats through the
+    skip rule's typed keys. Conservative on races: a concurrent commit
     ADDING rows conflicts (its rows might land in an overwritten
     partition); commits on untouched files rebase."""
     spark = df.sparkSession
@@ -4586,38 +4560,50 @@ def snapshot_dynamic_partition_overwrite(
     files = _manifest_files(path, cur)
     if any(not e.get("partition") for e in files):
         raise ValueError(
-            f"dynamic partition overwrite at {path}: live flat files "
-            "(pre-partitioning rewrites) — OPTIMIZE first or use "
-            "snapshot_replace_where"
+            f"dynamic partition overwrite at {path}: live files without "
+            "partition values (flat files from an older engine's rewrites "
+            "or a data-source append onto exotic partition types) — "
+            "OPTIMIZE first or use snapshot_replace_where"
         )
-    # incoming partition tuples, canonicalized the way entry stats are
+    types = _schema_types(cur)
+    unplaced = [c for c in pcols if types.get(c) not in _PLACED_TYPES]
+    if unplaced:
+        # their stats are [None, None] (``_stats_repr``): every file would
+        # match every incoming tuple and the overwrite drop them all
+        raise ValueError(
+            f"dynamic partition overwrite at {path}: partition column(s) "
+            f"{unplaced} have a type whose values the manifest stats cannot "
+            "compare; use snapshot_replace_where"
+        )
+
+    def key(c: str, v):
+        # a partition value placed as the skip rule places stats: a
+        # TIMESTAMP is an instant, whatever zone its stat was written in
+        k = _skip_key(types.get(c), v, False)
+        return v if k is None else k
+
     tuples = {
-        tuple(_stats_repr(r[c]) for c in pcols)
+        tuple(
+            key(c, _stats_repr(r[c], instant=types.get(c) == "timestamp"))
+            for c in pcols
+        )
         for r in df.select(*pcols).distinct().collect()
     }
-    phys = [_phys(mapping, c) for c in pcols]
 
     def entry_tuple(e: dict):
         st = e.get("stats") or {}
         vals = []
-        for c in phys:
-            s = st.get(c)
+        for c in pcols:
+            s = st.get(_phys(mapping, c))
             if not s or s[0] != s[1]:
                 return None
-            vals.append(s[0])
+            vals.append(key(c, s[0]))
         return tuple(vals)
 
     dropped = [e for e in files if entry_tuple(e) in tuples]
     kept = [e for e in files if entry_tuple(e) not in tuples]
     df2, _ident_unpin = _assign_identity(df, path, "dynamic_overwrite")
-    rel, full = _new_data_dir(path)
-    phys_df = _to_physical_df(df2, mapping)
-    phys_df.write.partitionBy(*phys).mode("error").parquet(full)
-    new_files, n_in = _scan_file_entries(
-        spark, full, rel,
-        [c for c in _stats_cols_in_use(cur, path) if c not in phys],
-        partition_cols=phys, read_schema=phys_df.schema,
-    )
+    new_files, n_in = _land(spark, path, df2, cur)
     if _ident_unpin:
         _ident_unpin()
     return _commit_swap(
@@ -4674,7 +4660,6 @@ def _update_where_dv(
     files = _manifest_files(path, cur)
     if not files:
         return None
-    mapping = _mapping(cur)
     live = _read_entries(spark, path, cur, files, lineage=True)
     matched = live.filter(F.coalesce(F.expr(predicate), F.lit(False)))
     hits = matched.select(
@@ -4700,11 +4685,7 @@ def _update_where_dv(
     for gc, ge in _generated(cur).items():
         image = image.withColumn(gc, F.expr(ge).cast(types[gc]))
     _enforce_constraints(image, path, "update_dv")
-    img_rel, img_dir = _new_data_dir(path)
-    _to_physical_df(image, mapping).write.mode("error").parquet(img_dir)
-    new_files, n_new = _scan_file_entries(
-        spark, img_dir, img_rel, _stats_cols_in_use(cur, path), _bloom_cols_in_use(path, cur)
-    )
+    new_files, n_new = _land(spark, path, image, cur)
     if n_new != sum(new_dead.values()):
         raise RuntimeError(
             f"dv-update image drift at {path}: marked {sum(new_dead.values())} "
@@ -4959,39 +4940,17 @@ def snapshot_compact(
         return None
     small_rows = sum(_live_rows(e) for e in small)
     n_out = target_files or max(1, small_rows // max(small_file_max_rows, 1))
-    # Stats columns carried by the manifest are preserved on the rewrite.
-    stats_cols = sorted(
-        {c for e in small if e.get("stats") for c in e["stats"]}
-    )
-    mapping = _mapping(cur)
-    pcols = [_phys(mapping, c) for c in (cur.get("partition_cols") or [])]
-    rel, full = _new_data_dir(path)
-    if pcols:
+    folded = _read_entries(spark, path, cur, small)
+    if cur.get("partition_cols"):
         # Partitioned tables compact WITHIN partitions (Delta OPTIMIZE
-        # bin-packs per partition): the folded output lands back in Hive
-        # layout, so partition purity — and with it the metadata-only
-        # DROP-PARTITION path and exact [v, v] pruning — survives routine
-        # maintenance. repartition on the partition columns keeps each
-        # tuple in one task (≈ one output file per partition tuple).
-        folded = _read_entries(spark, path, cur, small).repartition(
-            max(n_out, 1), *[F.col(c) for c in (cur.get("partition_cols") or [])]
-        )
-        phys_folded = _to_physical_df(folded, mapping)
-        phys_folded.write.partitionBy(*pcols).mode("error").parquet(full)
-        new_files, n_new = _scan_file_entries(
-            spark, full, rel,
-            [c for c in stats_cols if c not in pcols],
-            partition_cols=pcols,
-            # declared (physical) types, not path re-inference: a string
-            # partition value like '0095' must not re-type to int 95
-            read_schema=phys_folded.schema,
+        # bin-packs per partition): repartition on the partition columns
+        # keeps each tuple in one task (≈ one output file per tuple).
+        folded = folded.repartition(
+            max(n_out, 1), *[F.col(c) for c in cur["partition_cols"]]
         )
     else:
-        folded = _read_entries(spark, path, cur, small).coalesce(n_out)
-        _to_physical_df(folded, mapping).write.mode("error").parquet(full)
-        new_files, n_new = _scan_file_entries(
-            spark, full, rel, stats_cols, _bloom_cols_in_use(path, cur)
-        )
+        folded = folded.coalesce(n_out)
+    new_files, n_new = _land(spark, path, folded, cur)
     if n_new != small_rows:
         # Not an assert: integrity checks must survive ``python -O``.
         raise RuntimeError(
@@ -5116,7 +5075,6 @@ def snapshot_zorder(
     base_version = versions[-1]
     cur = _read_manifest(path, base_version)
     files = _manifest_files(path, cur)
-    mapping = _mapping(cur)
     if where is not None:
         conjuncts = _predicate_conjuncts(where)
         if not conjuncts:
@@ -5141,46 +5099,18 @@ def snapshot_zorder(
     data = _read_entries(spark, path, cur, folded)
 
     zdf, helper_cols = _zvalue(data, cols, bits)
-    pcols_log = list(cur.get("partition_cols") or [])
-    pcols = [_phys(mapping, c) for c in pcols_log]
-    if pcols_log:
-        # Partitioned tables z-order WITHIN partitions (Delta semantics):
-        # range-partitioning on (partition cols, zval) aligns task splits
-        # to partition boundaries first and the curve within each, and the
-        # partitionBy write keeps the Hive layout — purity, [v, v] stats,
-        # and metadata drop-partition all survive the re-cluster.
-        clustered = (
-            zdf.repartitionByRange(
-                target_files, *[F.col(c) for c in pcols_log], F.col("_zval")
-            )
-            .sortWithinPartitions(*pcols_log, "_zval")
-            .drop("_zval", *helper_cols)
+    pcols = list(cur.get("partition_cols") or [])
+    # Partitioned tables z-order WITHIN partitions (Delta semantics):
+    # range-partitioning on (partition cols, zval) aligns task splits to
+    # partition boundaries first and the curve within each.
+    clustered = (
+        zdf.repartitionByRange(
+            target_files, *[F.col(c) for c in pcols], F.col("_zval")
         )
-    else:
-        clustered = (
-            zdf.repartitionByRange(target_files, F.col("_zval"))
-            .sortWithinPartitions("_zval")
-            .drop("_zval", *helper_cols)
-        )
-    stats_cols = sorted(
-        {_phys(mapping, c) for c in cols}
-        | {c for e in folded if e.get("stats") for c in e["stats"]}
+        .sortWithinPartitions(*pcols, "_zval")
+        .drop("_zval", *helper_cols)
     )
-    rel, full = _new_data_dir(path)
-    phys_clustered = _to_physical_df(clustered, mapping)
-    if pcols:
-        phys_clustered.write.partitionBy(*pcols).mode("error").parquet(full)
-        new_files, n_new = _scan_file_entries(
-            spark, full, rel,
-            [c for c in stats_cols if c not in pcols],
-            partition_cols=pcols,
-            read_schema=phys_clustered.schema,
-        )
-    else:
-        phys_clustered.write.mode("error").parquet(full)
-        new_files, n_new = _scan_file_entries(
-            spark, full, rel, stats_cols, _bloom_cols_in_use(path, cur),
-        )
+    new_files, n_new = _land(spark, path, clustered, cur, cols)
     if folded_rows is not None and n_new != folded_rows:
         raise RuntimeError(
             f"zorder row-count drift at {path}: {folded_rows} in, {n_new} out"
@@ -6910,50 +6840,33 @@ def snapshot_convert(
     src = os.path.abspath(parquet_dir)
     fs = _fs()
     pcols: list[str] = []
-    if fs.is_dir(src):
-        subdirs = [
-            n
-            for n in fs.list_dir(src)
-            if fs.is_dir(os.path.join(src, n)) and not n.startswith(("_", "."))
-        ]
-        if subdirs:
+    if fs.is_file(src):
+        rel = os.path.dirname(src)  # the file's entry path: ``src`` itself
+    elif fs.is_dir(src):
+        rel, names = src, fs.list_dir(src)
+        if any(
+            fs.is_dir(os.path.join(src, n)) and not n.startswith(("_", "."))
+            for n in names
+        ):
             pcols = _infer_hive_partition_cols(src)
-            entries, n = _scan_file_entries(
-                spark, src, src, list(stats_cols), partition_cols=pcols
-            )
-            rids = [_entry_rid(e) for e in entries]
-            dupes = {r for r in rids if rids.count(r) > 1}
-            if dupes:
-                # the lineage identity is a path SUFFIX; a hand-laid layout
-                # repeating filenames across partitions at the same depth
-                # would cross-contaminate deletion vectors
-                raise ValueError(
-                    "snapshot_convert: duplicate file identities across "
-                    f"partitions ({sorted(dupes)[:3]}); re-layout with "
-                    "unique file names or rewrite through snapshot_write"
-                )
-        else:
-            names = sorted(
-                f for f in fs.list_dir(src) if f.endswith(".parquet")
-            )
-            if not names:
-                raise FileNotFoundError(f"no .parquet files in {src}")
-            entries, n = _scan_file_entries(spark, src, src, list(stats_cols))
-    elif fs.is_file(src):
-        df = spark.read.parquet(src)
-        aggs = [F.count(F.lit(1)).alias("_rows")]
-        for c in stats_cols:
-            aggs.append(F.min(c).alias(f"_min_{c}"))
-            aggs.append(F.max(c).alias(f"_max_{c}"))
-        r = df.agg(*aggs).collect()[0]
-        n = int(r["_rows"])
-        stats = {
-            c: [_stats_repr(r[f"_min_{c}"]), _stats_repr(r[f"_max_{c}"])]
-            for c in stats_cols
-        } or None
-        entries = [{"path": src, "rows": n, "stats": stats}]
+        elif not any(n.endswith(".parquet") for n in names):
+            raise FileNotFoundError(f"no .parquet files in {src}")
     else:
         raise FileNotFoundError(src)
+    entries, n = _scan_file_entries(
+        spark, src, rel, list(stats_cols), partition_cols=pcols
+    )
+    rids = [_entry_rid(e) for e in entries]
+    dupes = {r for r in rids if rids.count(r) > 1}
+    if dupes:
+        # the lineage identity is a path SUFFIX; a hand-laid layout
+        # repeating filenames across partitions at the same depth would
+        # cross-contaminate deletion vectors
+        raise ValueError(
+            "snapshot_convert: duplicate file identities across "
+            f"partitions ({sorted(dupes)[:3]}); re-layout with unique "
+            "file names or rewrite through snapshot_write"
+        )
     schema_json = spark.read.parquet(src).schema.json()
 
     def build(latest: dict | None, _version: int) -> dict:

@@ -28,6 +28,7 @@ from __future__ import annotations
 
 import multiprocessing as mp
 import os
+import time
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -92,10 +93,31 @@ def _create_empty(table: str, identity: dict | None = None) -> None:
     sn._commit(table, build, op="create")
 
 
+def _rendezvous(rdv: str, wid: int) -> None:
+    """Block until all N_WRITERS workers have arrived (one file each under
+    ``rdv``); fails loudly after two minutes. A worker that arrived
+    before passes straight through."""
+    mine = os.path.join(rdv, str(wid))
+    if os.path.exists(mine):
+        return
+    open(mine, "w").close()
+    deadline = time.monotonic() + 120
+    while len(os.listdir(rdv)) < N_WRITERS:
+        if time.monotonic() > deadline:
+            raise TimeoutError(
+                f"rendezvous: {len(os.listdir(rdv))} of {N_WRITERS} "
+                "writers arrived"
+            )
+        time.sleep(0.01)
+
+
 def _append_worker(args) -> int:
     """One writer process: N_COMMITS real appends (parquet file + rebase
-    commit, the same build discipline as ``snapshot_append``)."""
-    table, wid, n_commits, rows_per = args
+    commit, the same build discipline as ``snapshot_append``). The first
+    commit's first build waits at a rendezvous after reading the base
+    version: no writer commits before all have read it, so all N_WRITERS
+    first claims race for the same version and N_WRITERS - 1 lose."""
+    table, wid, n_commits, rows_per, rdv = args
     _apply_stress_fs()
     from music_recommendation_service_spark.sources import snapshots as s
 
@@ -114,6 +136,7 @@ def _append_worker(args) -> int:
 
         def build(latest, version):
             files = s._manifest_files(table, latest) + entries
+            _rendezvous(rdv, wid)
             return {
                 "data_dirs": s._dirs_of(files),
                 "files": files,
@@ -237,11 +260,16 @@ def _pool():
 
 def test_cross_process_appends_linearize(spark, tmp_path, stress_fs):
     table = str(tmp_path / "t")
+    rdv = tmp_path / "rendezvous"
+    rdv.mkdir()
     _create_empty(table)
     with _pool() as pool:
         done = pool.map(
             _append_worker,
-            [(table, w, N_COMMITS, ROWS_PER) for w in range(N_WRITERS)],
+            [
+                (table, w, N_COMMITS, ROWS_PER, str(rdv))
+                for w in range(N_WRITERS)
+            ],
         )
     assert sorted(done) == list(range(N_WRITERS))
     total_commits = N_WRITERS * N_COMMITS
@@ -258,14 +286,16 @@ def test_cross_process_appends_linearize(spark, tmp_path, stress_fs):
     assert {(r["writer"], r["seq"]) for r in got} == {
         (w, i) for w in range(N_WRITERS) for i in range(N_COMMITS)
     }
-    # contention telemetry rode the manifests into DESCRIBE HISTORY:
-    # under 8-way contention SOME commit needed a retry, and the attempt
+    # contention telemetry rode the manifests into DESCRIBE HISTORY: the
+    # rendezvous made every writer's first claim race for one version, so
+    # the N_WRITERS - 1 losers each needed a retry, and the attempt
     # distribution stays bounded (p99 under the writer count x a small
     # constant — runaway spinning would blow far past this)
     attempts = sorted(
         h["commit_attempts"] for h in sn.snapshot_history(table)
     )
     assert attempts[-1] >= 2
+    assert sum(a >= 2 for a in attempts) >= N_WRITERS - 1
     p99 = attempts[int(0.99 * (len(attempts) - 1))]
     assert p99 <= N_WRITERS * 4
 

@@ -699,6 +699,28 @@ def test_dynamic_partition_overwrite(spark, tmp_path):
         S.snapshot_dynamic_partition_overwrite(day, q)
 
 
+def test_dynamic_overwrite_refuses_partition_types_stats_cannot_compare(
+    spark, tmp_path
+):
+    """A DECIMAL partition column's stats are [None, None]: matching its
+    tuples would drop every partition, so the overwrite refuses and the
+    table is untouched."""
+    p = str(tmp_path / "dec")
+    S.snapshot_write(
+        spark.createDataFrame(
+            [(i, f"{i % 3}.50") for i in range(9)], ["k", "s"]
+        ).selectExpr("k", "CAST(s AS DECIMAL(5,2)) AS d"),
+        p, stats_cols=["k"], partition_by=["d"],
+    )
+    day = spark.createDataFrame([(100, "1.50")], ["k", "s"]).selectExpr(
+        "k", "CAST(s AS DECIMAL(5,2)) AS d"
+    )
+    with pytest.raises(ValueError, match="cannot compare"):
+        S.snapshot_dynamic_partition_overwrite(day, p)
+    assert S.snapshot_versions(p) == [1]
+    assert S.snapshot_read(spark, p).count() == 9
+
+
 def test_replace_where_conflicts_with_in_scope_append(spark, tmp_path, monkeypatch):
     """A concurrent append INTO the replaced scope conflicts (its rows
     would silently vanish); an out-of-scope append rebases. A dynamic
@@ -776,6 +798,10 @@ _FILE_SWAP_OPS = {
     "replace_where": ("replace_where", lambda spark, p: S.snapshot_replace_where(
         _shape_src(spark, [(200, 1991, 0, "r")]), p, "year = 1991",
         manifest_extra={"tag": 7})),
+    "replace_where_rows": (
+        "replace_where", lambda spark, p: S.snapshot_replace_where(
+            _shape_src(spark, [(2, 1992, 0, "r")]), p, "k < 4",
+            manifest_extra={"tag": 7})),
     "dynamic_overwrite": (
         "dynamic_overwrite",
         lambda spark, p: S.snapshot_dynamic_partition_overwrite(
@@ -787,6 +813,19 @@ _FILE_SWAP_OPS = {
 }
 
 
+def _mk_shape(spark, tmp_path, name, stats_cols=("k",)):
+    p = str(tmp_path / name)
+    S.snapshot_write(
+        spark.createDataFrame(
+            [(i, 1990 + i % 3, 0, f"p{i}") for i in range(30)],
+            ["k", "year", "seq", "payload"],
+        ),
+        p, stats_cols=list(stats_cols), partition_by=["year"],
+    )
+    S.snapshot_rename_columns(p, {"payload": "body"})
+    return p
+
+
 @pytest.mark.parametrize("name", sorted(_FILE_SWAP_OPS))
 def test_file_swap_manifest_shape(spark, tmp_path, name):
     """Every operation that swaps data files commits the same manifest
@@ -795,15 +834,7 @@ def test_file_swap_manifest_shape(spark, tmp_path, name):
     takes it, and data_change=false (plus clustering keys) on the
     content-preserving rewrites."""
     op, run = _FILE_SWAP_OPS[name]
-    p = str(tmp_path / name)
-    S.snapshot_write(
-        spark.createDataFrame(
-            [(i, 1990 + i % 3, 0, f"p{i}") for i in range(30)],
-            ["k", "year", "seq", "payload"],
-        ),
-        p, stats_cols=["k"], partition_by=["year"],
-    )
-    S.snapshot_rename_columns(p, {"payload": "body"})
+    p = _mk_shape(spark, tmp_path, name)
     v = run(spark, p)
     assert v == 3
     m = S._read_manifest(p, v)
@@ -811,7 +842,8 @@ def test_file_swap_manifest_shape(spark, tmp_path, name):
     assert m["column_mapping"] == {"body": "payload"}
     assert m["n_rows"] == S.snapshot_read(spark, p).count()
     assert ("tag" in m) == (name in (
-        "merge", "merge_dv", "merge_when", "replace_where", "dynamic_overwrite"
+        "merge", "merge_dv", "merge_when", "replace_where",
+        "replace_where_rows", "dynamic_overwrite",
     ))
     if "tag" in m:
         assert m["tag"] == 7
@@ -821,6 +853,55 @@ def test_file_swap_manifest_shape(spark, tmp_path, name):
         assert m["clustered_where"] == "year = 1991"
     else:
         assert "clustered_by" not in m and "clustered_where" not in m
+
+
+@pytest.mark.parametrize("name", [
+    "merge", "merge_dv", "merge_when", "update_where", "update_dv",
+    "delete_where", "replace_where_rows",
+])
+def test_dml_lands_the_tables_layout(spark, tmp_path, name):
+    """Every DML landing on a partitioned table writes the table's Hive
+    layout: each live entry carries its partition value with exact
+    [v, v] stats and keeps the table's stats column; a partition DELETE
+    afterwards is a metadata-only drop that adds no file, and a dynamic
+    partition overwrite accepts the table."""
+    p = _mk_shape(spark, tmp_path, name)
+    _FILE_SWAP_OPS[name][1](spark, p)
+    files = S._manifest_files(p, S._latest_manifest(p))
+    for e in files:
+        assert e.get("partition"), e
+        y = int(e["partition"]["year"])
+        assert e["stats"]["year"] == [y, y] and "k" in e["stats"], e
+    want = sorted(S.snapshot_read(spark, p).filter("year <> 1991").collect())
+    v = S.snapshot_delete_where(spark, p, "year = 1991")
+    after = S._manifest_files(p, S._read_manifest(p, v))
+    assert {e["path"] for e in after} <= {e["path"] for e in files}
+    assert sorted(S.snapshot_read(spark, p).collect()) == want
+    S.snapshot_dynamic_partition_overwrite(
+        _shape_src(spark, [(300, 1992, 0, "d")]), p
+    )
+    got = S.snapshot_read(spark, p)
+    assert [r["k"] for r in got.filter("year = 1992").collect()] == [300]
+    assert got.filter("year = 1990").count() == sum(
+        r["year"] == 1990 for r in want
+    )
+
+
+def test_merge_and_append_keep_the_tables_stats_columns(spark, tmp_path):
+    """A MERGE lands stats on every stats column of the table, not only
+    its keys, and an append that names no stats_cols keeps the table's."""
+    p = _mk_shape(spark, tmp_path, "stats", stats_cols=("k", "seq"))
+    S.snapshot_merge(
+        _shape_src(spark, [(1, 1991, 5, "m"), (100, 1990, 1, "new")]),
+        p, ["k"], "seq",
+    )
+    S.snapshot_append(_shape_src(spark, [(200, 1992, 0, "a")]), p)
+    files = S._manifest_files(p, S._latest_manifest(p))
+    assert len(files) > 3
+    for e in files:
+        assert set(e["stats"]) == {"k", "seq", "year"}, e
+    got = S.snapshot_scan(spark, p, {"seq": (5, 5)}).collect()
+    assert [r["k"] for r in got] == [1]
 
 
 def _race_once_local(monkeypatch, path, action):

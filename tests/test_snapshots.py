@@ -162,6 +162,26 @@ def test_snapshot_merge_seq_and_replay(spark, tmp_path):
     assert again == got
 
 
+def _commit_statless_append(S, path, data_dir, df):
+    """Append ``df`` as files whose entries carry no stats (an older
+    writer's, which every landing now gives the table's stats), committed
+    with ``snapshot_append``'s build discipline."""
+    rel, full = data_dir
+    df.write.parquet(full)
+    entries, n = S._scan_file_entries(df.sparkSession, full, rel, [])
+
+    def build(latest, version):
+        files = S._manifest_files(path, latest) + entries
+        return {
+            "data_dirs": S._dirs_of(files),
+            "files": files,
+            "n_rows": latest["n_rows"] + n,
+            "schema": latest["schema"],
+        }
+
+    S._commit(path, build, op="append")
+
+
 def test_snapshot_merge_concurrent_commit_aborts(spark, tmp_path, monkeypatch, snapshot_fs):
     """A commit landing between merge's state read and its manifest write
     whose key-disjointness CANNOT be proven (this append carries no key
@@ -182,7 +202,9 @@ def test_snapshot_merge_concurrent_commit_aborts(spark, tmp_path, monkeypatch, s
         # sneak a concurrent append in after merge read its base state
         if p == path and not fired["done"]:
             fired["done"] = True
-            S.snapshot_append(_snap_df(spark, [(99, 1, "raced")]), path)
+            _commit_statless_append(
+                S, path, real(path), _snap_df(spark, [(99, 1, "raced")])
+            )
         return real(p)
 
     monkeypatch.setattr(S, "_new_data_dir", racing)
@@ -634,9 +656,9 @@ def test_predicate_conjunct_parser():
     assert may(e_num, [("k", "=", [1, 15])])
     # no stats for the column: can't disprove
     assert may({"stats": {}}, [("k", "=", [1])])
-    # TIMESTAMP stats (isoformat 'T', the writer's local wall clock) vs SQL
-    # literals (space, read in the UTC session zone): compared as
-    # instants, never textually
+    # TIMESTAMP stats (isoformat 'T', the writer's local wall clock, as an
+    # older engine wrote them) vs SQL literals (space, read in the UTC
+    # session zone): compared as instants, never textually
     def local(utc_text: str) -> str:
         at = dt.datetime.fromisoformat(utc_text + "+00:00").astimezone()
         return at.replace(tzinfo=None).isoformat()
@@ -689,7 +711,7 @@ def test_skip_rule_types_literals_by_column(spark, tmp_path):
 
 def test_timestamp_skips_off_utc(tmp_path):
     """A process whose local zone is not the session's (UTC): TIMESTAMP
-    stats hold its local wall clock, so a SQL literal (read in the session
+    stats carry its local offset, so a SQL literal (read in the session
     zone) must be converted before it is compared. The filtered
     format("snapshot") read, DELETE WHERE and UPDATE WHERE each match
     read + filter, and so does snapshot_scan with a collected datetime.
@@ -745,6 +767,113 @@ print("RESULT", json.dumps(out))
     got = json.loads(line.split(" ", 1)[1])
     assert got == {"want": 1, "format": 1, "scan": 1, "deleted": 1,
                    "updated": 1}, got
+
+
+_ZONE_WRITE = """
+import sys
+from music_recommendation_service_spark.session import get_spark
+from music_recommendation_service_spark.sources import snapshots as S
+spark = get_spark("tz_write")
+root = sys.argv[1]
+for i, s in enumerate(["1970-01-01 02:00:00", "1970-01-02 00:00:00"]):
+    df = spark.createDataFrame([(i, s)], ["k", "s"]).selectExpr(
+        "k", "CAST(s AS TIMESTAMP) AS ts")
+    (S.snapshot_write if i == 0 else S.snapshot_append)(
+        df, f"{root}/stats", stats_cols=["ts"])
+hours = spark.createDataFrame(
+    [(i, f"2024-03-01 0{i % 3}:15:00") for i in range(6)], ["k", "s"]
+).selectExpr("k", "CAST(s AS TIMESTAMP) AS ts",
+             "date_trunc('hour', CAST(s AS TIMESTAMP)) AS hr")
+S.snapshot_write(hours, f"{root}/hours", stats_cols=["k"], partition_by=["hr"])
+"""
+
+_ZONE_READ = """
+import json, sys
+from pyspark.sql import functions as F
+from music_recommendation_service_spark.session import get_spark
+from music_recommendation_service_spark.sources import snapshots as S
+from music_recommendation_service_spark.sources.datasource import (
+    register_snapshot_datasource,
+)
+spark = get_spark("tz_read")
+register_snapshot_datasource(spark)
+root = sys.argv[1]
+p, pred = f"{root}/stats", "ts = '1970-01-01 02:00:00'"
+out = {
+    "want": S.snapshot_read(spark, p).filter(pred).count(),
+    "format": spark.read.format("snapshot").load(p).filter(pred).count(),
+    "scan": S.snapshot_scan(
+        spark, p, {"ts": ("1970-01-01 02:00:00",) * 2}).count(),
+}
+h = f"{root}/hours"
+S.snapshot_dynamic_partition_overwrite(spark.createDataFrame(
+    [(100, "2024-03-01 01:45:00")], ["k", "s"]
+).selectExpr("k", "CAST(s AS TIMESTAMP) AS ts",
+             "date_trunc('hour', CAST(s AS TIMESTAMP)) AS hr"), h)
+out["hours"] = sorted(r["k"] for r in S.snapshot_read(spark, h).collect())
+g = f"{root}/gen"
+S.snapshot_write(spark.createDataFrame(
+    [(1, "2023-12-31 20:00:00"), (2, "2023-06-01 00:00:00")], ["k", "s"]
+).selectExpr("k", "CAST(s AS TIMESTAMP) AS ts",
+             "year(CAST(s AS TIMESTAMP)) AS yr"),
+    g, stats_cols=["k"], partition_by=["yr"])
+S.snapshot_set_generated(spark, g, "yr", "year(ts)")
+at = S.snapshot_read(spark, g).filter("k = 1").collect()[0]["ts"]
+out["gen_want"] = S.snapshot_read(spark, g).filter(F.col("ts") == at).count()
+out["gen_scan"] = S.snapshot_scan(spark, g, {"ts": (at, at)}).count()
+print("RESULT", json.dumps(out))
+"""
+
+
+@pytest.fixture(scope="module")
+def cross_zone(tmp_path_factory):
+    """Tables written by a ``TZ=UTC`` process, then read, scanned and
+    overwritten by a ``TZ=Asia/Kolkata`` one, whose results this returns.
+    Subprocesses, because the process zone is what ``collect()`` renders
+    TIMESTAMPs in and what format("snapshot")'s Python workers take."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    root = str(tmp_path_factory.mktemp("cross_zone"))
+    out = None
+    for tz, script in (("UTC", _ZONE_WRITE), ("Asia/Kolkata", _ZONE_READ)):
+        r = subprocess.run(
+            [sys.executable, "-c", script, root],
+            cwd=Path(__file__).resolve().parents[1],
+            env=dict(os.environ, TZ=tz, SPARK_GRAFT_DRIVER_MEM="1g"),
+            capture_output=True, text=True, timeout=600,
+        )
+        assert r.returncode == 0, r.stderr[-2000:]
+        out = r.stdout
+    line = next(ln for ln in out.splitlines() if ln.startswith("RESULT"))
+    return json.loads(line.split(" ", 1)[1])
+
+
+def test_timestamp_stats_skip_right_in_another_zone(cross_zone):
+    """TIMESTAMP min/max stats are stored as instants with their offset,
+    so a table written in UTC skips right when read in Kolkata: the
+    filtered format("snapshot") read and snapshot_scan equal read +
+    filter."""
+    got = {k: cross_zone[k] for k in ("want", "format", "scan")}
+    assert got == {"want": 1, "format": 1, "scan": 1}, got
+
+
+def test_hour_partition_dynamic_overwrite_in_another_zone(cross_zone):
+    """An hour-partitioned TIMESTAMP table written in UTC: a dynamic
+    partition overwrite from Kolkata replaces exactly the incoming hour
+    (its rows k=1, k=4) and keeps the other two."""
+    assert cross_zone["hours"] == [0, 2, 3, 5, 100]
+
+
+def test_generated_partition_derives_from_collected_datetime(cross_zone):
+    """A year(ts)-generated partition derives from a collected datetime
+    (Kolkata local 2024-01-01 01:30 is 2023-12-31 20:00 UTC, partition
+    2023): snapshot_scan returns the row read + filter returns."""
+    assert cross_zone["gen_want"] == 1
+    assert cross_zone["gen_scan"] == 1
 
 
 def test_delete_where_rebases_over_nonmatching_append(spark, tmp_path, monkeypatch):
@@ -1287,8 +1416,8 @@ def test_compaction_row_drift_raises(spark, tmp_path, monkeypatch):
     )
     real = S._scan_file_entries
 
-    def lying(spark_, full, rel, cols, bloom_cols=()):
-        entries, total = real(spark_, full, rel, cols, bloom_cols)
+    def lying(*args, **kwargs):
+        entries, total = real(*args, **kwargs)
         return entries, total - 1
 
     monkeypatch.setattr(S, "_scan_file_entries", lying)

@@ -160,6 +160,20 @@ def test_sql_insert_select_and_values(spark, eng):
     assert st[21] == (1.5, "i1") and st[23] == (3.5, "i3")
 
 
+def test_sql_insert_keeps_the_tables_stats_columns(spark, eng):
+    """INSERT INTO lands its file with the table's min/max stats columns,
+    so later scans and MERGE prunes can skip it."""
+    from music_recommendation_service_spark.sources import snapshots as S
+
+    e, p = eng
+    e.sql("INSERT INTO t1 (k, amount, tag) VALUES (31, 1.0, 'x')")
+    files = S._manifest_files(p, S._latest_manifest(p))
+    assert len(files) > 1
+    assert all((f["stats"] or {}).get("k") for f in files), files
+    new = [f for f in files if f["stats"]["k"] == [31, 31]]
+    assert len(new) == 1 and new[0]["rows"] == 1
+
+
 def test_sql_time_travel_version_and_timestamp(spark, eng):
     e, p = eng
     e.sql("DELETE FROM t1 WHERE k = 1")
